@@ -1,27 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.Bridge
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // testdata tables are single parquet files; without this the scan side
-      // of every query runs in 1-2 tasks regardless of core count.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      // r19: the r18 `coalescePartitions.minPartitionSize=16k` session floor
-      // is GONE — it helped the CPU-dense LSH verify stages but taxed every
-      // iterative loop (graph/stream families regressed 1.3-1.7× in the r18
-      // driver bench) and perturbed AQE layouts under GroupedRank. The
-      // verify-stage parallelism now lives in the operator itself
-      // (Dedup.lshVerifiedPairs pins the candidate-pair exchange's partition
-      // count), so the bench session runs stock AQE.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     // fixed (sorted) order so per-query numbers are comparable across rounds;
     // SPARK_GRAFT_ONLY (comma-separated names) narrows the run for local dev
     // loops — the driver never sets it, so round benches stay full-surface
@@ -34,22 +16,11 @@ object Bench {
     val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
     // JMH-style steady-state measurement (methodology disclosed in
-    // BENCH_NOTES.md): one UNTIMED warm-up pass at the smallest scale factor
-    // compiles/JITs every operator's codegen before anything is measured
-    // (first-heavy-query-in-the-alphabet otherwise absorbs all JVM warm-up:
-    // dedup_apply measured 38 s cold vs 11 s steady on identical plans), then
+    // BENCH_NOTES.md): an untimed warm-up pass (see Harness.warmUp), then
     // `iters` timed passes per query with the per-query MEDIAN reported —
     // robust to transient host-load spikes without the best-case flattery of
     // a minimum (lower-middle element: an actual measurement, not an average).
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP_DIR", "/root/testdata/sf0.001")
-    if (warmDir.nonEmpty)
-      queries.foreach { case (_, fn) =>
-        try fn(spark, warmDir).count() catch { case _: Throwable => () }
-        try {
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        } catch { case _: Throwable => () }
-      }
+    Harness.warmUp(spark, queries)
     // a stale BENCH_LAST.json from a previous run must never masquerade as
     // this run's result if the final write fails — drop it before measuring.
     // Narrowed (SPARK_GRAFT_ONLY) dev runs leave the tracked full-surface
@@ -59,23 +30,6 @@ object Bench {
       try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get("BENCH_LAST.json"))
       catch { case e: Throwable => System.err.println(s"BENCH_LAST.json stale-delete failed: $e") }
     val iters = sys.env.getOrElse("SPARK_GRAFT_ITERS", "3").toInt
-    // Swept AFTER each timed region: iterative operators (CC loops, k-means)
-    // localCheckpoint per round and superseded block sets have no owner to
-    // unpersist them, so over 96 queries × (warm-up + iters) passes the
-    // block manager accumulates thousands of orphaned block sets — storage
-    // eviction + GC pressure that taxes exactly the many-job iterative
-    // queries. The r8 driver suite showed the dedup/CC family 7-11× over
-    // its isolated times while one-shot queries held steady; this sweep
-    // bounds leaked storage to one query's worth.
-    def sweepLeakedState(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      // streaming state-store providers accumulate between 60 s maintenance
-      // ticks over a 171-query suite of short-lived queries — the r11
-      // driver bench showed the whole streaming family drifting 1.4-2.3×
-      // together with no code change; unload them like any other leak
-      org.apache.spark.sql.graftshim.Bridge.unloadStateStores()
-    }
     // A throwing query must NOT masquerade as a fast one: its time-to-throw
     // still enters the median (so the line stays shape-stable), but the
     // error is surfaced in an "errors" field on both metric lines and the
@@ -94,9 +48,7 @@ object Bench {
     // pollute the counts. Spill means executor memory pressure — any
     // nonzero value at bench scale is a red flag the watch rule reads.
     val ioListener = new QueryIoListener
-    val planCounts = ioListener.planCounts
     spark.sparkContext.addSparkListener(ioListener)
-    def ioForGroup(g: String): (Long, Long, Long) = ioListener.ioForGroup(g)
     val timings = (1 to iters).map { it =>
       queries.map { case (name, fn) =>
         val t0 = System.nanoTime()
@@ -106,24 +58,16 @@ object Bench {
           errors.getOrElseUpdate(name, (e.getClass.getSimpleName + ": " + msg).take(160))
         } finally spark.sparkContext.clearJobGroup()
         val dt = (System.nanoTime() - t0) / 1e9
-        try sweepLeakedState() catch { case _: Throwable => () }
+        Harness.sweep(spark)
         name -> dt
       }.toMap
     }
-    // listener events are async — wait for the counter map to go quiet
-    // before reading it (bounded: the bus drains in well under a second)
-    locally {
-      var prev = -1
-      var spins = 0
-      while (spins < 20) {
-        val now = planCounts.values.stream.mapToInt(v => v._1).sum
-        if (now == prev) spins = 20 else { prev = now; spins += 1; Thread.sleep(250) }
-      }
-    }
+    // listener events are async — drain the bus before reading counts
+    Bridge.drainListeners(spark.sparkContext)
     // deterministic-by-design: report the LAST iteration's counts (steady
     // state; iteration 1 can differ only through error paths)
     val plans = queries.map { case (name, _) =>
-      name -> planCounts.getOrDefault(s"graftbench:$name#$iters", (0, 0))
+      name -> ioListener.planCounts(s"graftbench:$name#$iters")
     }
     val results = queries.map { case (name, _) =>
       val sorted = timings.map(_(name)).sorted
@@ -155,7 +99,7 @@ object Bench {
     // (same steady-state convention as plan_jobs_stages). Full line /
     // BENCH_LAST.json only.
     val ioJson = queries.map { case (name, _) =>
-      val (r, w, sp) = ioForGroup(s"graftbench:$name#$iters")
+      val (r, w, sp) = ioListener.ioForGroup(s"graftbench:$name#$iters")
       "\"" + name + "\":[" + r + "," + w + "," + sp + "]"
     }.mkString("{", ",", "}")
     val total = results.map(_._2).sum

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Differential fuzz harness (r15, VERDICT task 1): the fixed fixture has
   * no NULLs, no ties-by-construction, no unicode extremes — so every NULL
   * convention documented on the query surface (RollupMaintain's null-safe
@@ -25,17 +23,8 @@ object FuzzCheck {
     val seeds = args(1).split(",").map(_.trim.toLong).toSeq
     val only = args.drop(2).toSet
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
 
     val oracleJson = SparkEntry.oracleSql
       .map { case (k, v) => s"${Verify.q(k)}: ${Verify.q(v)}" }

@@ -2,10 +2,14 @@ package graft
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import scala.jdk.CollectionConverters._
 
-/** Per-query Spark accounting for [[Bench]] — plan fingerprints and IO
-  * bytes, keyed by the `graftbench:<query>#<iter>` job group.
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+
+/** Per-query Spark accounting for [[Bench]] and `QueryProfile` — plan
+  * fingerprints, IO bytes and per-job records, keyed by the
+  * `graftbench:<query>#<iter>` job group. Jobs outside such a group
+  * (warm-up, sweeps) are not recorded.
   *
   * Jobs/stages (VERDICT r13 task 3) fingerprint plan SHAPE: wall time on
   * the driver host is noisy (documented 3-4× family drift with zero code
@@ -25,10 +29,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * tasks, so reused shuffles still count once — same property as before.
   */
 final class QueryIoListener extends SparkListener {
+  import QueryIoListener.JobRecord
 
-  /** job group → (jobs, stages) — the plan fingerprint. */
-  val planCounts = new ConcurrentHashMap[String, (Int, Int)]()
-
+  private val jobs = new ConcurrentHashMap[Integer, JobRecord]()
   private val stageGroup = new ConcurrentHashMap[Integer, String]()
   private val groupIo = new ConcurrentHashMap[String, (Long, Long, Long)]()
 
@@ -41,11 +44,17 @@ final class QueryIoListener extends SparkListener {
   override def onJobStart(js: SparkListenerJobStart): Unit = {
     val g = Option(js.properties).map(_.getProperty("spark.jobGroup.id")).orNull
     if (g != null && g.startsWith("graftbench:")) {
-      planCounts.merge(g, (1, js.stageInfos.size),
-        (a, b) => (a._1 + b._1, a._2 + b._2))
+      // Spark names a job's result stage (its highest id) after the job's
+      // call site; the parent stages are named after the RDDs they build
+      val names = js.stageInfos.sortBy(_.stageId).map(_.name.takeWhile(_ != '\n'))
+      jobs.put(js.jobId, JobRecord(js.jobId, g, js.time, 0L, js.stageInfos.size,
+        names.lastOption.getOrElse(""), names.dropRight(1).mkString(" | ").take(140)))
       js.stageInfos.foreach(si => stageGroup.put(si.stageId, g))
     }
   }
+
+  override def onJobEnd(je: SparkListenerJobEnd): Unit =
+    jobs.computeIfPresent(je.jobId, (_, j) => j.copy(end = je.time))
 
   override def onTaskEnd(te: SparkListenerTaskEnd): Unit = {
     val g = stageGroup.get(te.stageId)
@@ -58,7 +67,25 @@ final class QueryIoListener extends SparkListener {
         (a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
   }
 
+  /** The jobs one job group ran, in job-id order. */
+  def jobsForGroup(g: String): Seq[JobRecord] =
+    jobs.values.asScala.filter(_.group == g).toSeq.sortBy(_.id)
+
+  /** (jobs, stages) for one job group — the plan fingerprint. */
+  def planCounts(g: String): (Int, Int) = {
+    val js = jobsForGroup(g)
+    (js.size, js.map(_.stages).sum)
+  }
+
   /** (shuffle_read, shuffle_write, spill) bytes for one job group. */
   def ioForGroup(g: String): (Long, Long, Long) =
     groupIo.getOrDefault(g, (0L, 0L, 0L))
+}
+
+object QueryIoListener {
+  /** One job of a bench query: listener-bus start/end times in epoch ms
+    * (`end` is 0 until the job ends), stage count, the call site that
+    * launched it, and its parent stages' names. */
+  final case class JobRecord(id: Int, group: String, start: Long, end: Long,
+      stages: Int, callSite: String, stageNames: String)
 }

@@ -1186,9 +1186,9 @@ object Dedup {
       // count, i.e. the verified-join input that verification cost is
       // linear in — NOT the raw pre-distinct enumeration (a pair generated
       // by several shared prefix tokens counts once here). Observed for
-      // free as a CollectMetrics on the existing execution —
-      // ScaleProbeJaccard (and any ops listener) reads it via
-      // QueryExecutionListener.observedMetrics. Name is sequence-unique:
+      // free as a CollectMetrics on the existing execution — an ops
+      // listener reads it via QueryExecutionListener.observedMetrics.
+      // Name is sequence-unique:
       // two exact joins may share one query plan.
       .observe(s"graft_exact_jaccard_${candSeq.incrementAndGet()}",
         count(lit(1)).as("n_candidates"))

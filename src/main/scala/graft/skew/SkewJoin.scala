@@ -1,7 +1,7 @@
 package graft.skew
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.CountMinSketch
 
@@ -165,9 +165,8 @@ object SkewJoin {
     * fan-out catastrophe at scale (the reference formula has this
     * pathology). Subtracting the eps·N bound keeps est' ≤ true freq, so only
     * genuinely hot keys fragment and under-replication can never affect
-    * correctness (any rep ≥ 1 is valid). Shared with the streaming
-    * stream-static skew join. */
-  private[graft] def replicationUdf(
+    * correctness (any rep ≥ 1 is valid). */
+  private def replicationUdf(
       bc: Broadcast[CountMinSketch], eps: Double, rf: Double, cap: Int) = {
     val bias = math.ceil(eps * bc.value.totalCount()).toLong
     udf { (k: String) =>
@@ -177,6 +176,23 @@ object SkewJoin {
         math.max(math.min((est * rf).toInt, cap), 1)
       }
     }
+  }
+
+  /** THE replication policy, shared by the batch joins, the stream-static
+    * join and the refreshable hotness model: each row's fragment count from
+    * the broadcast sketch ([[replicationUdf]]), 1 when any key column is
+    * null, fan-out capped at `conf.maxReplication` (default: the session's
+    * shuffle partition count). */
+  private[graft] def replicationCol(
+      spark: SparkSession,
+      bc: Broadcast[CountMinSketch],
+      usingColumns: Seq[String],
+      conf: SkewJoinConf): Column = {
+    val cap = conf.maxReplication
+      .getOrElse(spark.sessionState.conf.numShufflePartitions)
+    val keyIsNull = usingColumns.map(col(_).isNull).reduce(_ || _)
+    when(keyIsNull, lit(1)).otherwise(
+      replicationUdf(bc, conf.CMSeps, conf.replicationFactor, cap)(cmsKey(usingColumns)))
   }
 
   private def normalize(joinType: String): String =
@@ -218,17 +234,12 @@ object SkewJoin {
       conf: SkewJoinConf,
       joinType: String): DataFrame = {
     val spark = left.sparkSession
-    val cap = conf.maxReplication
-      .getOrElse(spark.sessionState.conf.numShufflePartitions)
     def keyOf(df: DataFrame): Column = cmsKey(df, usingColumns)
-    val key = cmsKey(usingColumns)
-    val keyIsNull = usingColumns.map(col(_).isNull).reduce(_ || _)
     // fragmentation is driven by the LEFT side's key frequencies — the side
     // whose rows pile onto one reducer without it
     val cms = spark.sparkContext.broadcast(
       CmsOps.cmsOf(left, keyOf(left), conf.CMSeps, conf.CMSdelta, conf.CMSseed))
-    val rep = when(keyIsNull, lit(1))
-      .otherwise(replicationUdf(cms, conf.CMSeps, conf.replicationFactor, cap)(key))
+    val rep = replicationCol(spark, cms, usingColumns, conf)
     val ls = left
       .withColumn(RepL, rep)
       .withColumn(SaltL, floor(rand(conf.CMSseed.toLong) * col(RepL)).cast("int"))
@@ -271,12 +282,7 @@ object SkewJoin {
       conf: SkewJoinConf,
       joinType: String): DataFrame = {
     val spark = left.sparkSession
-    val cap = conf.maxReplication
-      .getOrElse(spark.sessionState.conf.numShufflePartitions)
-
     def keyOf(df: DataFrame): Column = cmsKey(df, usingColumns)
-    val key = cmsKey(usingColumns)
-    val keyIsNull = usingColumns.map(col(_).isNull).reduce(_ || _)
 
     // Sketches for the gated side(s), broadcast (KB-to-MB scale). When both
     // sides are gated (CrossSkew) the two sketches come from ONE job — a
@@ -304,15 +310,13 @@ object SkewJoin {
         if (conf.skewType.left) Some(sketch(left)) else None,
         if (conf.skewType.right) Some(sketch(right)) else None)
 
-    val rf = conf.replicationFactor
-    def repUdf(bc: Broadcast[CountMinSketch]) = replicationUdf(bc, conf.CMSeps, rf, cap)
     // repL = fragment count of the left side for this key; repR mirror. Both
     // sides must compute identical values per key (same sketch, same formula)
     // so fragment ids and replica ids range over the same domain.
-    val repL = cmsL.map(bc => when(keyIsNull, lit(1)).otherwise(repUdf(bc)(key)))
-      .getOrElse(lit(1))
-    val repR = cmsR.map(bc => when(keyIsNull, lit(1)).otherwise(repUdf(bc)(key)))
-      .getOrElse(lit(1))
+    def rep(cms: Option[Broadcast[CountMinSketch]]): Column =
+      cms.map(replicationCol(spark, _, usingColumns, conf)).getOrElse(lit(1))
+    val repL = rep(cmsL)
+    val repR = rep(cmsR)
 
     val seed = conf.CMSseed.toLong
     val outer = joinType != "inner"

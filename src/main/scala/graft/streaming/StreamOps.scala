@@ -158,16 +158,9 @@ object StreamOps {
       spark: SparkSession,
       cms: org.apache.spark.util.sketch.CountMinSketch,
       usingColumns: Seq[String],
-      conf: graft.skew.SkewJoinConf): Column = {
-    import graft.skew.SkewJoin
-    val cap = conf.maxReplication
-      .getOrElse(spark.sessionState.conf.numShufflePartitions)
-    val bc = spark.sparkContext.broadcast(cms)
-    val rep = SkewJoin.replicationUdf(bc, conf.CMSeps, conf.replicationFactor, cap)
-    val key = SkewJoin.cmsKey(usingColumns)
-    val keyIsNull = usingColumns.map(col(_).isNull).reduce(_ || _)
-    when(keyIsNull, lit(1)).otherwise(rep(key))
-  }
+      conf: graft.skew.SkewJoinConf): Column =
+    graft.skew.SkewJoin.replicationCol(
+      spark, spark.sparkContext.broadcast(cms), usingColumns, conf)
 
   /** Watermarked stream-STREAM interval equi-join: each left row pairs with
     * the right rows sharing its `usingCols` whose event time falls in

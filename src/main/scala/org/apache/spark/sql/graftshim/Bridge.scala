@@ -50,6 +50,13 @@ object Bridge {
   def unloadStateStores(): Unit =
     org.apache.spark.sql.execution.streaming.state.StateStore.stop()
 
+  /** Block until every event posted so far has reached every listener
+    * (`listenerBus` is `private[spark]`). Listener events are delivered
+    * asynchronously; a fixed sleep can under-wait on a loaded host and read
+    * short counts, this cannot. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** TEST-ONLY: synthesize a task-end event carrying shuffle read/write
     * and spill bytes, so a spec can replay multi-attempt retry event
     * sequences through the bench IO accounting (`graft.QueryIoListener`)

@@ -1,8 +1,12 @@
 package graft
 
+import java.util.Properties
+
+import org.apache.spark.scheduler.{JobSucceeded, SparkListenerJobEnd, SparkListenerJobStart, StageInfo}
+import org.apache.spark.sql.graftshim.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
-import org.apache.spark.sql.graftshim.Bridge
+import graft.QueryIoListener.JobRecord
 
 /** Bench's per-query byte attribution must be EXACT under stage retries
   * (r17, VERDICT task 4). The r16 accounting aggregated per stage with
@@ -49,5 +53,31 @@ class BenchIoSpec extends AnyFunSuite {
     assert(lis.ioForGroup(G) == ((35L, 15L, 0L)))
     assert(lis.ioForGroup("graftbench:other#1") == ((1000L, 1000L, 1000L)))
     assert(lis.ioForGroup("graftbench:absent#1") == ((0L, 0L, 0L)))
+  }
+
+  test("per-job records: a job in a graftbench group keeps times, stages, call site; others leave no trace") {
+    val lis = new QueryIoListener
+    def stage(id: Int, name: String) =
+      new StageInfo(id, 0, name, 1, Seq.empty, Seq.empty, "", resourceProfileId = 0)
+    def props(group: Option[String]) = {
+      val p = new Properties
+      group.foreach(p.setProperty("spark.jobGroup.id", _))
+      p
+    }
+    // the result stage (highest id) carries the job's call site
+    lis.onJobStart(SparkListenerJobStart(5, 1000L,
+      Seq(stage(11, "count at Bench.scala:60"), stage(10, "parquet at SparkEntry.scala:19\nplan detail")),
+      props(Some(G))))
+    lis.onJobStart(SparkListenerJobStart(6, 1100L, Seq(stage(12, "sweep")), props(None)))
+    lis.onJobStart(SparkListenerJobStart(7, 1200L, Seq(stage(13, "other")), props(Some("cc-job-budget"))))
+    Seq(5 -> 1750L, 6 -> 1150L, 7 -> 1300L).foreach { case (id, t) =>
+      lis.onJobEnd(SparkListenerJobEnd(id, t, JobSucceeded)) }
+    lis.onTaskEnd(Bridge.taskEndEvent(12, 0, 9, 9, 9))
+    assert(lis.jobsForGroup(G) == Seq(JobRecord(5, G, 1000L, 1750L, 2,
+      "count at Bench.scala:60", "parquet at SparkEntry.scala:19")))
+    assert(lis.planCounts(G) == ((1, 2)))
+    assert(lis.jobsForGroup(null).isEmpty && lis.jobsForGroup("cc-job-budget").isEmpty)
+    assert(lis.planCounts("cc-job-budget") == ((0, 0)))
+    assert(lis.ioForGroup(G) == ((0L, 0L, 0L)))
   }
 }

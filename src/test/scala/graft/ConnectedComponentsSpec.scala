@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.graftshim.Bridge
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -84,13 +85,9 @@ class ConnectedComponentsSpec extends AnyFunSuite {
     sc.setJobGroup(tag, tag)
     try connectedComponents((1L until 40L).map(i => (i, i + 1)).toDF("id_a", "id_b"))
     finally sc.clearJobGroup()
-    // statusTracker is fed by the async listener bus — poll until stable
-    var n = -1
-    var tries = 0
-    while (tries < 50) {
-      val m = sc.statusTracker.getJobIdsForGroup(tag).length
-      if (m == n) tries = 50 else { n = m; tries += 1; Thread.sleep(100) }
-    }
+    // statusTracker is fed by the async listener bus
+    Bridge.drainListeners(sc)
+    val n = sc.statusTracker.getJobIdsForGroup(tag).length
     assert(n <= 16, s"connectedComponents ran $n jobs for the 40-chain " +
       "(9 expected, 75 pre-r14) — a per-round action or AQE-in-rounds crept back in")
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.llm.{Quantize, Sampling, Similarity}
@@ -57,21 +58,21 @@ class KnnKmvProjectSpec extends AnyFunSuite {
     val vecs = emb
     vecs.schema
     // settle any in-flight listener traffic from earlier tests
-    Thread.sleep(300)
+    Bridge.drainListeners(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       Similarity.mutualKnnGraph(vecs, "vec_id", "embedding", 3,
         mode = Similarity.KnnMode.Exact)
       Similarity.mutualKnnGraph(vecs, "vec_id", "embedding", 3,
         mode = Similarity.KnnMode.Lsh)
-      // listener events post asynchronously — give the bus time to drain
-      Thread.sleep(500)
+      // listener events post asynchronously
+      Bridge.drainListeners(spark.sparkContext)
       assert(jobs.get == 0,
         s"constructing the graph DataFrame launched ${jobs.get} Spark jobs")
       // Auto IS the documented eager mode: a finite limit probes the corpus
       Similarity.mutualKnnGraph(vecs, "vec_id", "embedding", 3,
         mode = Similarity.KnnMode.Auto(100L))
-      Thread.sleep(500)
+      Bridge.drainListeners(spark.sparkContext)
       assert(jobs.get > 0, "Auto mode should run its documented count probe")
     } finally spark.sparkContext.removeSparkListener(listener)
   }

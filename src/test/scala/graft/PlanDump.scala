@@ -1,11 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round diagnostic: write `explain("formatted")` for named
-  * queries to `plans/<tag>/<query>_<suffix>.txt`, under a Bench-identical
-  * session (same master/core count, shuffle partitions, split size), so the
-  * committed plan files describe exactly what the bench measures.
+  * queries to `plans/<tag>/<query>_<suffix>.txt`, under Bench's session
+  * ([[Harness.session]]), so the committed plan files describe exactly what
+  * the bench measures.
   *
   * Usage: `sbt "Test/runMain graft.PlanDump <tag> <suffix> <query1,query2,...|ALL>"`
   * e.g.   `sbt "Test/runMain graft.PlanDump r18 before dedup_minhash,knn_graph"`
@@ -18,16 +16,7 @@ object PlanDump {
       if (args(2) == "ALL") SparkEntry.queries.keys.toSeq.sorted
       else args(2).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val outDir = java.nio.file.Paths.get(s"plans/$tag")
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { name =>
@@ -44,10 +33,7 @@ object PlanDump {
           System.err.println(s"[plandump] $name FAILED: ${e.getMessage}")
       }
       // queries that localCheckpoint during construction leave blocks behind
-      try {
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      } catch { case _: Throwable => () }
+      Harness.sweep(spark)
     }
     spark.stop()
   }

@@ -1,70 +1,40 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{ReusedSubqueryExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.graftshim.Bridge
 
-/** Optimization-round diagnostic: run one query under the Bench session
-  * shape (warm-up at sf0.001, then N timed passes) and attribute wall time
-  * to individual Spark jobs — job id, duration, stage count, call site and
-  * first stage name — so a 10-second query's seconds map to pipeline phases.
+/** Optimization-round diagnostic: run queries in Bench's session
+  * ([[Harness.session]], same warm-up, job groups, listener and sweep, so
+  * a profile explains the bench it sits next to) and attribute each pass's
+  * wall time to its Spark jobs — job id, duration, stage count, call site
+  * and parent stages' names — so a 10-second query's seconds map to pipeline
+  * phases. `GRAFT_PROFILE_METRICS=1` also prints the last pass's final
+  * adaptive executed plan and its heavy SQL metrics (the tool that
+  * separates "AQE exchange-reuse race" from "join strategy flip" when a
+  * fingerprint moves).
   *
-  * Usage: `sbt "Test/runMain graft.QueryProfile <query> [iters]"`
-  * (env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as for Bench)
+  * Usage: `sbt "Test/runMain graft.QueryProfile <query>[,<query>...] [iters]"`
+  * (env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as for Bench;
+  * GRAFT_PROFILE_CONF=k=v;k=v adds session confs for A/B runs)
   */
 object QueryProfile {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty).toSeq
     val iters = args.lift(1).map(_.toInt).getOrElse(2)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-    // optional conf overrides for A/B runs: GRAFT_PROFILE_CONF=k=v;k=v
-    sys.env.get("GRAFT_PROFILE_CONF").foreach(_.split(";").filter(_.contains("="))
-      .foreach { kv => val Array(k, v) = kv.split("=", 2); b.config(k, v) })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def sweep(): Unit = try {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-      org.apache.spark.sql.graftshim.Bridge.unloadStateStores()
-    } catch { case _: Throwable => () }
-    sweep()
+    val extra = sys.env.get("GRAFT_PROFILE_CONF").toSeq
+      .flatMap(_.split(";").filter(_.contains("=")))
+      .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }
+    val spark = Harness.session(extra: _*)
+    val queries = names.map(n => n -> SparkEntry.queries(n))
+    Harness.warmUp(spark, queries)
+    val listener = new QueryIoListener
+    spark.sparkContext.addSparkListener(listener)
 
-    case class J(id: Int, var t0: Long = 0L, var t1: Long = 0L,
-      var stages: Int = 0, var site: String = "", var head: String = "")
-    case class St(id: Int, job: Int, var dur: Double = 0.0, var tasks: Int = 0,
-      var name: String = "", var details: String = "")
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, J]()
-    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    val stages = new java.util.concurrent.ConcurrentHashMap[Int, St]()
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val j = J(js.jobId, js.time, 0L, js.stageInfos.size,
-          Option(js.properties).map(_.getProperty("callSite.short")).map(s => Option(s).getOrElse("")).getOrElse(""),
-          js.stageInfos.map(_.name.takeWhile(_ != '\n')).mkString(" | ").take(140))
-        jobs.put(js.jobId, j)
-        js.stageIds.foreach(sid => stageJob.put(sid, js.jobId))
-      }
-      override def onJobEnd(je: org.apache.spark.scheduler.SparkListenerJobEnd): Unit = {
-        val j = jobs.get(je.jobId); if (j != null) j.t1 = je.time
-      }
-      override def onStageCompleted(sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val dur = (for (a <- si.submissionTime; b <- si.completionTime) yield (b - a) / 1e3).getOrElse(0.0)
-        val st = St(si.stageId, stageJob.getOrDefault(si.stageId, -1), dur, si.numTasks,
-          si.name.takeWhile(_ != '\n'),
-          si.details.linesIterator.take(24).filter(_.contains("graft")).take(3).mkString(" <- ").take(200))
-        stages.put(si.stageId, st)
-      }
-    })
-    def dumpPlanMetrics(p: org.apache.spark.sql.execution.SparkPlan, depth: Int): Unit = {
+    def dumpPlanMetrics(p: SparkPlan, depth: Int): Unit = {
       val finals = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+        case a: AdaptiveSparkPlanExec => a.executedPlan
         case other => other
       }
       val interesting = finals.metrics.toSeq.filter { case (_, m) =>
@@ -80,39 +50,42 @@ object QueryProfile {
         println("    " + ("  " * depth) + finals.nodeName + "  " + interesting.mkString(" "))
       finals.children.foreach(dumpPlanMetrics(_, depth + 1))
       finals match {
-        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => dumpPlanMetrics(q.plan, depth + 1)
-        case r: org.apache.spark.sql.execution.ReusedSubqueryExec => ()
+        case q: QueryStageExec => dumpPlanMetrics(q.plan, depth + 1)
+        case _: ReusedSubqueryExec => ()
         case _ => finals.subqueries.foreach(dumpPlanMetrics(_, depth + 1))
       }
     }
-    names.foreach { name =>
-    val fn = SparkEntry.queries(name)
-    // warm-up (JIT/codegen) at the smallest SF, like Bench
-    try fn(spark, "/root/testdata/sf0.001").count() catch { case _: Throwable => () }
-    sweep()
-    (1 to iters).foreach { it =>
-      jobs.clear(); stages.clear()
-      val t0 = System.nanoTime()
-      val out = fn(spark, dir)
-      val cdf = out.agg(org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)))
-      cdf.collect()
-      val dt = (System.nanoTime() - t0) / 1e9
-      if (it == iters && sys.env.get("GRAFT_PROFILE_METRICS").contains("1"))
-        dumpPlanMetrics(cdf.queryExecution.executedPlan, 0)
-      Thread.sleep(1000)
-      val js = jobs.values.toArray(Array.empty[J]).sortBy(_.id)
-      val sum = js.map(j => (j.t1 - j.t0).max(0L)).sum / 1e3
-      println(f"== $name pass $it: wall $dt%.2f s, ${js.length} jobs (job time sum $sum%.2f s, gap ${dt - sum}%.2f s)")
-      js.foreach { j =>
-        val d = (j.t1 - j.t0).max(0L) / 1e3
-        println(f"  job ${j.id}%3d ${d}%6.2f s stages=${j.stages}%2d")
-        stages.values.toArray(Array.empty[St]).filter(_.job == j.id).sortBy(_.id).foreach { s =>
-          println(f"    stage ${s.id}%4d ${s.dur}%6.2f s tasks=${s.tasks}%3d  ${s.details}")
+
+    queries.foreach { case (name, fn) =>
+      (1 to iters).foreach { it =>
+        val group = s"graftbench:$name#$it"
+        val t0 = System.nanoTime()
+        spark.sparkContext.setJobGroup(group, name)
+        // the plan Dataset.count() runs, kept so its executed plan can be read
+        val counted = try {
+          val c = fn(spark, dir).groupBy().count()
+          c.collect()
+          c
+        } finally spark.sparkContext.clearJobGroup()
+        val dt = (System.nanoTime() - t0) / 1e9
+        Bridge.drainListeners(spark.sparkContext)
+        val js = listener.jobsForGroup(group)
+        val sum = js.map(j => (j.end - j.start).max(0L)).sum / 1e3
+        val (r, w, sp) = listener.ioForGroup(group)
+        println(f"== $name pass $it: wall $dt%.2f s, ${js.length} jobs, " +
+          f"${js.map(_.stages).sum} stages (job time sum $sum%.2f s, gap ${dt - sum}%.2f s), " +
+          s"shuffle read/write/spill $r/$w/$sp bytes")
+        js.foreach { j =>
+          val d = (j.end - j.start).max(0L) / 1e3
+          val parents = if (j.stageNames.isEmpty) "" else s"  <- ${j.stageNames}"
+          println(f"  job ${j.id}%4d $d%6.2f s stages=${j.stages}%2d  ${j.callSite}$parents")
         }
+        if (it == iters && sys.env.get("GRAFT_PROFILE_METRICS").contains("1")) {
+          println(counted.queryExecution.executedPlan.toString.take(8000))
+          dumpPlanMetrics(counted.queryExecution.executedPlan, 0)
+        }
+        Harness.sweep(spark)
       }
-      sweep()
-    }
     }
     spark.stop()
   }
