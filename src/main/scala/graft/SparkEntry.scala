@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.skew.SkewJoin._
 import graft.skew.{LeftSkew, RightSkew, SkewJoinConf}
+import graft.streaming.{RefreshableHotness, StreamOps}
 
 /** Driver contract — one `queries` entry (+ oracle SQL where expressible) per
   * implemented operator from SURVEY.md §2.
@@ -560,21 +561,14 @@ object SparkEntry {
       // itself, re-smoothed per update — exact batch equality under ANY
       // arrival order; converged (max update_seq) row per type must equal
       // the batch series' final row bit-for-bit
-      import graft.streaming.StreamOps
       val out = StreamOps.runToMemory(s,
         StreamOps.ewmaUpdates(
           StreamOps.eventsStream(s, s"$dir/events.parquet"),
           "event_type",
           x = expr("ts_ns div 86400000000000"),
           y = expr("cast(floor(value * 1000000.0) as long)")),
-        "graft_stream_ewma", outputMode = "update",
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
-      out.groupBy("event_type")
-        .agg(max(struct(col("update_seq"), col("x"), col("y"), col("ewma")))
-          .as("__f"))
-        .select(col("event_type"), col("__f.x").as("x"),
-          col("__f.y").as("y"), col("__f.ewma").as("ewma"))
+        "graft_stream_ewma", outputMode = "update")
+      StreamOps.converged(out, "event_type")
     }),
 
     "theilsen_even_median" -> ((s, dir) => {
@@ -2141,12 +2135,9 @@ object SparkEntry {
     "stream_hourly" -> ((s, dir) => {
       // real Structured Streaming run (file source → windowed agg → memory
       // sink, complete mode), then projected for the batch oracle.
-      import graft.streaming.StreamOps
       val out = StreamOps.runToMemory(s,
         StreamOps.windowedCounts(StreamOps.eventsStream(s, s"$dir/events.parquet")),
-        "graft_stream_hourly",
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
+        "graft_stream_hourly")
       out.select(
         date_format(col("window.start"), "yyyy-MM-dd HH").as("hour"),
         col("event_type"), col("n"), col("min_v"), col("max_v"))
@@ -2156,16 +2147,13 @@ object SparkEntry {
       // the live ops-profile heatmap: streaming groupBy (dow, hod) with
       // count + micro-quantized value sums in complete mode — the sink
       // holds one 7×24 frame of state; converges to the batch heatmap
-      import graft.streaming.StreamOps
       val agg = StreamOps.eventsStream(s, s"$dir/events.parquet")
         .withColumn("hod", expr("(ts_ns DIV 3600000000000) % 24"))
         .withColumn("dow", expr("((ts_ns DIV 86400000000000) + 3) % 7"))
         .groupBy("dow", "hod")
         .agg(count(lit(1)).as("n"),
           sum(expr("cast(floor(value * 1000000.0) as long)")).as("value_micro"))
-      StreamOps.runToMemory(s, agg, "graft_stream_heatmap",
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
+      StreamOps.runToMemory(s, agg, "graft_stream_heatmap")
         .select("dow", "hod", "n", "value_micro")
     }),
 
@@ -2174,12 +2162,9 @@ object SparkEntry {
       // stream (complete mode — the sink holds the live aggregate); the
       // serving-side rank over the materialized sink picks each hour's
       // top-3 event types, the lambda-free "trending now" shape
-      import graft.streaming.StreamOps
       val out = StreamOps.runToMemory(s,
         StreamOps.windowedCounts(StreamOps.eventsStream(s, s"$dir/events.parquet")),
-        "graft_stream_topk",
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
+        "graft_stream_topk")
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("window").orderBy(col("n").desc, col("event_type"))
       out.withColumn("rank", row_number().over(w))
@@ -2193,66 +2178,39 @@ object SparkEntry {
       // group — never the distinct set): the converged state equals the
       // batch KmvOps sketch exactly, so the same integer-estimator replay
       // gates it; serve side takes each group's last update (max seq)
-      import graft.streaming.StreamOps
       val out = StreamOps.runToMemory(s,
         StreamOps.kmvDistinctUpdates(
           StreamOps.eventsStream(s, s"$dir/events.parquet"),
           "event_type", "user_id", k = 16),
-        "graft_stream_kmv", outputMode = "update",
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
-      out.groupBy("event_type")
-        .agg(max(struct(col("update_seq"), col("n_sample"),
-          col("kth_hash"), col("est_distinct"))).as("__f"))
-        .select(col("event_type"), col("__f.n_sample").as("n_sample"),
-          col("__f.kth_hash").as("kth_hash"),
-          col("__f.est_distinct").as("est_distinct"))
+        "graft_stream_kmv", outputMode = "update")
+      StreamOps.converged(out, "event_type")
     }),
 
     "stream_lateness" -> ((s, dir) => {
       // streaming disorder audit (update mode, a handful of counters of
       // state per type): converged counters equal the batch
       // watermark_audit exactly — the live watermark-picker
-      import graft.streaming.StreamOps
       val out = StreamOps.runToMemory(s,
         StreamOps.latenessUpdates(
           StreamOps.eventsStream(s, eventsPathK(s, dir)),
           "event_type", "event_id", "ts_ns"),
-        "graft_stream_late", outputMode = "update",
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
-      out.groupBy("event_type")
-        .agg(max(struct(col("update_seq"), col("n"), col("n_ooo"),
-          col("n_late_1m"), col("n_late_5m"), col("n_late_1h"),
-          col("max_late_ns"))).as("__f"))
-        .select(col("event_type"), col("__f.n").as("n"),
-          col("__f.n_ooo").as("n_ooo"),
-          col("__f.n_late_1m").as("n_late_1m"),
-          col("__f.n_late_5m").as("n_late_5m"),
-          col("__f.n_late_1h").as("n_late_1h"),
-          col("__f.max_late_ns").as("max_late_ns"))
+        "graft_stream_late", outputMode = "update")
+      StreamOps.converged(out, "event_type")
     }),
 
     "stream_distinct_hll" -> ((s, dir) => {
       // streaming HLL registers (update mode, 64 bytes of state per
       // group): the converged registers equal the batch HllOps sketch
       // exactly, so the same integer-estimator replay gates it
-      import graft.streaming.StreamOps
       val out = StreamOps.runToMemory(s,
         StreamOps.hllDistinctUpdates(
           StreamOps.eventsStream(s, s"$dir/events.parquet"),
           "event_type", "user_id", p = 6),
-        "graft_stream_hll", outputMode = "update",
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
-      out.groupBy("event_type")
-        .agg(max(struct(col("update_seq"), col("used_buckets"),
-          col("denom_q"), col("est_distinct"))).as("__f"))
-        .select(col("event_type"), lit(64L).as("m"),
-          col("__f.used_buckets").as("used_buckets"),
-          (lit(64L) - col("__f.used_buckets")).as("zero_buckets"),
-          col("__f.denom_q").as("denom_q"),
-          col("__f.est_distinct").as("est_distinct"))
+        "graft_stream_hll", outputMode = "update")
+      StreamOps.converged(out, "event_type")
+        .select(col("event_type"), lit(64L).as("m"), col("used_buckets"),
+          (lit(64L) - col("used_buckets")).as("zero_buckets"),
+          col("denom_q"), col("est_distinct"))
     }),
 
     "stream_trend" -> ((s, dir) => {
@@ -2260,29 +2218,20 @@ object SparkEntry {
       // state per group — never the points): the converged slope equals
       // batch events_trend bit-for-bit, so the same exact-rational replay
       // gates it; serve side takes each group's last update (max seq)
-      import graft.streaming.StreamOps
       val out = StreamOps.runToMemory(s,
         StreamOps.trendUpdates(
           StreamOps.eventsStream(s, s"$dir/events.parquet"),
           "event_type",
           x = expr("ts_ns div 1000000000 - 1704067200"),
           y = expr("cast(floor(value * 1000000.0) as long)")),
-        "graft_stream_trend", outputMode = "update",
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
-      out.groupBy("event_type")
-        .agg(max(struct(col("update_seq"), col("n"), col("slope_ppm"))).as("__f"))
-        .select(col("event_type"), col("__f.n").as("n"),
-          col("__f.slope_ppm").as("slope_ppm"))
+        "graft_stream_trend", outputMode = "update")
+      StreamOps.converged(out, "event_type")
     }),
 
     "stream_sessions" -> ((s, dir) => {
-      import graft.streaming.StreamOps
       val out = StreamOps.runToMemory(s,
         StreamOps.sessionCounts(StreamOps.eventsStream(s, s"$dir/events.parquet")),
-        "graft_stream_sessions",
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
+        "graft_stream_sessions")
       out.groupBy("user_id").agg(
         count(lit(1)).as("n_sessions"),
         sum("n_events").as("n_events"))
@@ -2291,14 +2240,11 @@ object SparkEntry {
     "stream_dedup" -> ((s, dir) => {
       // streaming dedup on (user_id, event_type), aggregated to a stable
       // shape: distinct users per event type
-      import graft.streaming.StreamOps
       val out = StreamOps.runToMemory(s,
         StreamOps.dedupKeys(
           StreamOps.eventsStream(s, s"$dir/events.parquet"),
           Seq("user_id", "event_type")),
-        "graft_stream_dedup", outputMode = "append",
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
+        "graft_stream_dedup", outputMode = "append")
       out.groupBy("event_type").agg(count(lit(1)).as("n_users"))
     }),
 
@@ -2407,13 +2353,10 @@ object SparkEntry {
     "stream_running_count" -> ((s, dir) => {
       // flatMapGroupsWithState custom state machine (update mode); the
       // running count is monotone, so max() over the update stream = final
-      import graft.streaming.StreamOps
       val out = StreamOps.runToMemory(s,
         StreamOps.runningUserCounts(
           StreamOps.eventsStream(s, s"$dir/events.parquet")),
-        "graft_stream_running", outputMode = "update",
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
+        "graft_stream_running", outputMode = "update")
       out.groupBy("user_id").agg(max("n_events").as("n_events"))
     }),
 
@@ -2421,7 +2364,6 @@ object SparkEntry {
       // stream-STREAM interval join (self-join of the event stream): each
       // purchase paired with the user's clicks in the following hour; both
       // sides buffer in the state store, evicted by the watermark
-      import graft.streaming.StreamOps
       val ev = StreamOps.eventsStream(s, s"$dir/events.parquet")
       val purch = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id").as("p_event_id"), col("ts"))
@@ -2431,13 +2373,7 @@ object SparkEntry {
         purch, clicks, Seq("user_id"), "0 SECOND", "1 HOUR")
       StreamOps.runToMemory(s,
         joined.select("p_event_id", "user_id", "c_event_id"),
-        "graft_stream_ivj", outputMode = "append",
-        // inner stream-stream join: the eviction-only no-data batch emits
-        // nothing — skip it, and size the state partitions from the source
-        // bytes (see StreamOps.runToMemory/boundedReplayPartitions)
-        noDataBatches = false,
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
+        "graft_stream_ivj", outputMode = "append")
         .groupBy("p_event_id", "user_id")
         .agg(count(lit(1)).as("n_clicks"))
     }),
@@ -2447,7 +2383,6 @@ object SparkEntry {
       // static historical sample (here: the same day's events read as batch)
       // gates per-key replication; emitted multiset must equal the unsalted
       // join — the oracle is the identical batch SQL
-      import graft.streaming.StreamOps
       val ev = StreamOps.eventsStream(s, s"$dir/events.parquet")
       val purch = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id").as("p_event_id"), col("ts"))
@@ -2460,13 +2395,7 @@ object SparkEntry {
         conf = graft.skew.SkewJoinConf(CMSeps = 1e-4, replicationFactor = 0.05))
       StreamOps.runToMemory(s,
         joined.select("p_event_id", "user_id", "v_event_id"),
-        "graft_stream_skivj", outputMode = "append",
-        // inner stream-stream join: the eviction-only no-data batch emits
-        // nothing — skip it, and size the state partitions from the source
-        // bytes (see StreamOps.runToMemory/boundedReplayPartitions)
-        noDataBatches = false,
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
+        "graft_stream_skivj", outputMode = "append")
         .groupBy("p_event_id", "user_id")
         .agg(count(lit(1)).as("n_views"))
     }),
@@ -2479,7 +2408,6 @@ object SparkEntry {
       // before the join starts — the restart-with-fresher-model shape
       // production uses. Salting stays transparent: oracle = plain batch
       // interval join, same as stream_skew_interval
-      import graft.streaming.{RefreshableHotness, StreamOps}
       val hist = events(s, dir)
         .filter(col("event_id") % 2 === 0).select("user_id")
       val hot = new RefreshableHotness(
@@ -2499,27 +2427,18 @@ object SparkEntry {
         purch, views, Seq("user_id"), "0 SECOND", "30 MINUTE", hot)
       StreamOps.runToMemory(s,
         joined.select("p_event_id", "user_id", "v_event_id"),
-        "graft_stream_adskivj", outputMode = "append",
-        // inner stream-stream join: the eviction-only no-data batch emits
-        // nothing — skip it, and size the state partitions from the source
-        // bytes (see StreamOps.runToMemory/boundedReplayPartitions)
-        noDataBatches = false,
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
+        "graft_stream_adskivj", outputMode = "append")
         .groupBy("p_event_id", "user_id")
         .agg(count(lit(1)).as("n_views"))
     }),
 
     "stream_skewjoin" -> ((s, dir) => {
-      import graft.streaming.StreamOps
       val cust = t(s, dir, "customer").withColumnRenamed("c_custkey", "user_id")
       val joined = StreamOps.streamStaticSkewJoin(
         StreamOps.eventsStream(s, s"$dir/events.parquet"), cust, Seq("user_id"))
       val agg = joined.groupBy("c_mktsegment")
         .agg(count(lit(1)).as("n"), min("value").as("min_v"), max("value").as("max_v"))
-      StreamOps.runToMemory(s, agg, "graft_stream_skewjoin",
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
+      StreamOps.runToMemory(s, agg, "graft_stream_skewjoin")
     }),
 
     "events_transitions" -> ((s, dir) => {
@@ -2953,7 +2872,6 @@ object SparkEntry {
       // (seq,op,attr) of state per key), serve-side max-seq pick, then the
       // same one-join apply against the batch base — converges to the
       // batch cdc_apply result exactly, so it shares that oracle's shape
-      import graft.streaming.StreamOps
       val docsB = t(s, dir, "documents").select("doc_id", "text")
       val base = docsB.filter(col("doc_id") % 17 =!= 0)
       val ds = StreamOps.parquetStream(s, s"$dir/documents.parquet")
@@ -2968,9 +2886,7 @@ object SparkEntry {
         .unionAll(slice(7, "", "D", 3))
       val mem = StreamOps.runToMemory(s,
         StreamOps.cdcLastWriterUpdates(changelog, "doc_id", "text"),
-        "graft_stream_cdc", outputMode = "update",
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/documents.parquet")))
+        "graft_stream_cdc", outputMode = "update")
       val last = graft.operators.GroupedTopK.topKPerGroup(
         mem, Seq("doc_id"), Seq(col("seq")), 1, "__r", ascending = false)
         .drop("__r")
@@ -3372,22 +3288,14 @@ object SparkEntry {
       // grid itself, the split re-located per update with the identical
       // BigInt convention — converged (max update_seq) row per type must
       // equal the batch operator bit-for-bit under any arrival order
-      import graft.streaming.StreamOps
       val out = StreamOps.runToMemory(s,
         StreamOps.changePointUpdates(
           StreamOps.eventsStream(s, s"$dir/events.parquet"),
           "event_type",
           x = expr("ts_ns div 86400000000000"),
           y = expr("cast(floor(value * 1000000.0) as long)")),
-        "graft_stream_changepoint", outputMode = "update",
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
-      out.groupBy("event_type")
-        .agg(max(struct(col("update_seq"), col("n_grid"), col("split_x"),
-          col("shift_ppm"))).as("__f"))
-        .select(col("event_type"), col("__f.n_grid").as("n_grid"),
-          col("__f.split_x").as("split_x"),
-          col("__f.shift_ppm").as("shift_ppm"))
+        "graft_stream_changepoint", outputMode = "update")
+      StreamOps.converged(out, "event_type")
     }),
 
     "zorder_pruning" -> ((s, dir) => {
@@ -3583,22 +3491,14 @@ object SparkEntry {
       // event set itself — the kept-anchored recurrence is sequential, so
       // the set IS the minimal order-proof state; converged counts equal
       // the batch throttle under any arrival order
-      import graft.streaming.StreamOps
       val out = StreamOps.runToMemory(s,
         StreamOps.throttleUpdates(
           StreamOps.eventsStream(s, eventsPathK(s, dir)),
           keyCol = concat_ws(":", col("user_id"), col("event_type")),
           ts = expr("ts_ns div 1000"), tie = col("event_id"),
           cooldown = 10L * 60 * 1000 * 1000),
-        "graft_stream_throttle", outputMode = "update",
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
-      out.groupBy("key")
-        .agg(max(struct(col("update_seq"), col("n_events"), col("n_kept"),
-          col("last_kept_ts"))).as("__f"))
-        .select(col("key"), col("__f.n_events").as("n_events"),
-          col("__f.n_kept").as("n_kept"),
-          col("__f.last_kept_ts").as("last_kept_ts"))
+        "graft_stream_throttle", outputMode = "update")
+      StreamOps.converged(out, "key")
     }),
 
     "q6_forecast" -> ((s, dir) => {
@@ -4106,7 +4006,6 @@ object SparkEntry {
       // commutative, so the converged per-group (n, sum) equals the batch
       // delta-apply (and shares its oracle); serve side = max-seq pick,
       // n=0 deletion rows filtered
-      import graft.streaming.StreamOps
       val es = StreamOps.eventsStream(s, s"$dir/events.parquet")
         .withColumn("day", expr("ts_ns div 86400000000000"))
         .withColumn("v_micros",
@@ -4133,9 +4032,7 @@ object SparkEntry {
         StreamOps.rollupMaintainUpdates(checked,
           concat(col("event_type"), lit("|"), col("day")),
           col("v_micros"), col("op")),
-        "graft_stream_rollup", outputMode = "update",
-        statePartitions = Some(
-          StreamOps.boundedReplayPartitions(s, s"$dir/events.parquet")))
+        "graft_stream_rollup", outputMode = "update")
       val last = graft.operators.GroupedTopK.topKPerGroup(
         mem, Seq("key"), Seq(col("update_seq")), 1, "__r", ascending = false)
         .drop("__r")

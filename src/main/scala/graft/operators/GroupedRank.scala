@@ -60,7 +60,14 @@ object GroupedRank {
     * GLOBAL rank — the offsets frame is then one row per physical
     * partition, and no task ever sorts more than its own partition (the
     * `row_number().over(Window.orderBy(...))` alternative funnels the
-    * entire dataset through one task). */
+    * entire dataset through one task).
+    *
+    * '''Eager, and an optimizer barrier.''' The call runs the range
+    * exchange's sampling (and, under AQE, its shuffle map stages) before it
+    * returns, and the result reads that one materialized exchange, so no
+    * filter or projection applied to the result pushes down past it: the
+    * whole of `df` is always shuffled. Filter and project `df` before
+    * calling this, not after. */
   def withGroupRank(
       df: DataFrame,
       groupCols: Seq[String],

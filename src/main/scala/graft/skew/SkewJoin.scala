@@ -178,19 +178,31 @@ object SkewJoin {
     }
   }
 
+  /** THE sketch every skew path builds and probes: a CMS over
+    * [[cmsKey]]`(df, usingColumns)` with `conf`'s (eps, delta, seed). One
+    * aggregate job. */
+  private[graft] def sketch(
+      df: DataFrame, usingColumns: Seq[String], conf: SkewJoinConf): CountMinSketch =
+    CmsOps.cmsOf(df, cmsKey(df, usingColumns), conf.CMSeps, conf.CMSdelta, conf.CMSseed)
+
+  /** The empty sketch [[sketch]] would build over no rows (mergeable with it). */
+  private[graft] def emptySketch(conf: SkewJoinConf): CountMinSketch =
+    CountMinSketch.create(conf.CMSeps, 1.0 - conf.CMSdelta, conf.CMSseed)
+
   /** THE replication policy, shared by the batch joins, the stream-static
     * join and the refreshable hotness model: each row's fragment count from
-    * the broadcast sketch ([[replicationUdf]]), 1 when any key column is
-    * null, fan-out capped at `conf.maxReplication` (default: the session's
-    * shuffle partition count). */
+    * `cms` (broadcast here, probed by [[replicationUdf]]), 1 when any key
+    * column is null, fan-out capped at `conf.maxReplication` (default: the
+    * session's shuffle partition count). */
   private[graft] def replicationCol(
       spark: SparkSession,
-      bc: Broadcast[CountMinSketch],
+      cms: CountMinSketch,
       usingColumns: Seq[String],
       conf: SkewJoinConf): Column = {
     val cap = conf.maxReplication
       .getOrElse(spark.sessionState.conf.numShufflePartitions)
     val keyIsNull = usingColumns.map(col(_).isNull).reduce(_ || _)
+    val bc = spark.sparkContext.broadcast(cms)
     when(keyIsNull, lit(1)).otherwise(
       replicationUdf(bc, conf.CMSeps, conf.replicationFactor, cap)(cmsKey(usingColumns)))
   }
@@ -233,13 +245,10 @@ object SkewJoin {
       usingColumns: Seq[String],
       conf: SkewJoinConf,
       joinType: String): DataFrame = {
-    val spark = left.sparkSession
-    def keyOf(df: DataFrame): Column = cmsKey(df, usingColumns)
     // fragmentation is driven by the LEFT side's key frequencies — the side
     // whose rows pile onto one reducer without it
-    val cms = spark.sparkContext.broadcast(
-      CmsOps.cmsOf(left, keyOf(left), conf.CMSeps, conf.CMSdelta, conf.CMSseed))
-    val rep = replicationCol(spark, cms, usingColumns, conf)
+    val rep = replicationCol(
+      left.sparkSession, sketch(left, usingColumns, conf), usingColumns, conf)
     val ls = left
       .withColumn(RepL, rep)
       .withColumn(SaltL, floor(rand(conf.CMSseed.toLong) * col(RepL)).cast("int"))
@@ -288,9 +297,6 @@ object SkewJoin {
     // sides are gated (CrossSkew) the two sketches come from ONE job — a
     // tagged union aggregated per side — so the scans run concurrently
     // instead of as two sequential jobs (the reference ran one job per side).
-    def sketch(df: DataFrame): Broadcast[CountMinSketch] =
-      spark.sparkContext.broadcast(
-        CmsOps.cmsOf(df, keyOf(df), conf.CMSeps, conf.CMSdelta, conf.CMSseed))
     val (cmsL, cmsR) =
       if (conf.skewType.left && conf.skewType.right) {
         val tagged = left.select(keyOf(left).as("__graft_k"), lit("l").as("__graft_side"))
@@ -302,18 +308,16 @@ object SkewJoin {
         val bySide = rows.map(r =>
           r.getString(0) -> CmsOps.fromBytes(r.getAs[Array[Byte]](1))).toMap
         // a side absent from the union (empty input) gets an empty sketch
-        def get(side: String) = spark.sparkContext.broadcast(
-          bySide.getOrElse(side,
-            CountMinSketch.create(conf.CMSeps, 1.0 - conf.CMSdelta, conf.CMSseed)))
+        def get(side: String) = bySide.getOrElse(side, emptySketch(conf))
         (Some(get("l")), Some(get("r")))
       } else (
-        if (conf.skewType.left) Some(sketch(left)) else None,
-        if (conf.skewType.right) Some(sketch(right)) else None)
+        if (conf.skewType.left) Some(sketch(left, usingColumns, conf)) else None,
+        if (conf.skewType.right) Some(sketch(right, usingColumns, conf)) else None)
 
     // repL = fragment count of the left side for this key; repR mirror. Both
     // sides must compute identical values per key (same sketch, same formula)
     // so fragment ids and replica ids range over the same domain.
-    def rep(cms: Option[Broadcast[CountMinSketch]]): Column =
+    def rep(cms: Option[CountMinSketch]): Column =
       cms.map(replicationCol(spark, _, usingColumns, conf)).getOrElse(lit(1))
     val repL = rep(cmsL)
     val repR = rep(cmsR)

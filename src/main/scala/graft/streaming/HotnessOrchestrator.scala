@@ -60,7 +60,7 @@ final class HotnessOrchestrator(
     hotness.observe(batch)
     val spark = batch.sparkSession
     val cols = hotness.usingColumns
-    val oldRep = StreamOps.replicationColFromSketch(
+    val oldRep = graft.skew.SkewJoin.replicationCol(
       spark, pinned, cols, hotness.conf)
     val newRep = hotness.replication(spark)
     val drifted = batch.select(cols.map(col): _*).distinct()

@@ -6,7 +6,6 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.util.sketch.CountMinSketch
 
 import graft.skew.{SkewJoin, SkewJoinConf}
-import graft.sketch.CmsOps
 
 /** Refreshable hotness model for streaming skew mitigation.
   *
@@ -44,16 +43,8 @@ final class RefreshableHotness(
     val conf: SkewJoinConf = SkewJoinConf(),
     initialSample: Option[DataFrame] = None) {
 
-  private val sketch: CountMinSketch = initialSample match {
-    case Some(df) => sketchOf(df)
-    case None =>
-      CountMinSketch.create(conf.CMSeps, 1.0 - conf.CMSdelta, conf.CMSseed)
-  }
-
-  private def keyOf(df: DataFrame): Column = SkewJoin.cmsKey(df, usingColumns)
-
-  private def sketchOf(df: DataFrame): CountMinSketch =
-    CmsOps.cmsOf(df, keyOf(df), conf.CMSeps, conf.CMSdelta, conf.CMSseed)
+  private val sketch: CountMinSketch = initialSample
+    .fold(SkewJoin.emptySketch(conf))(SkewJoin.sketch(_, usingColumns, conf))
 
   /** Fold one micro-batch (or any sample frame) into the model: one
     * aggregate job over the batch, one sketch merge on the driver. The
@@ -63,7 +54,7 @@ final class RefreshableHotness(
     * (the sketch is width×depth longs: KBs at the default eps, ~4 MB at
     * eps = 1e-4 — copying it per batch would dominate the monitor). */
   def observe(batch: DataFrame): Unit = {
-    val b = sketchOf(batch)
+    val b = SkewJoin.sketch(batch, usingColumns, conf)
     synchronized { sketch.mergeInPlace(b) }
   }
 
@@ -80,7 +71,7 @@ final class RefreshableHotness(
     * once the plan is dropped — superseded snapshots are NOT destroyed
     * eagerly here, because an older still-running query may hold one. */
   def replication(spark: SparkSession): Column =
-    StreamOps.replicationColFromSketch(spark, snapshot, usingColumns, conf)
+    SkewJoin.replicationCol(spark, snapshot, usingColumns, conf)
 
   /** Start the monitor: a lightweight side query that folds every
     * micro-batch of `stream` into the model. Projects to the key columns

@@ -1,6 +1,11 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.logical.{EventTimeWatermark, Filter,
+  Generate, Join, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -144,23 +149,9 @@ object StreamOps {
       conf: graft.skew.SkewJoinConf,
       hotKeySource: Option[DataFrame]): Column = {
     import graft.skew.SkewJoin
-    val src = hotKeySource.getOrElse(static)
-    val srcKey = SkewJoin.cmsKey(src, usingColumns)
-    val cms = graft.sketch.CmsOps.cmsOf(
-      src, srcKey, conf.CMSeps, conf.CMSdelta, conf.CMSseed)
-    replicationColFromSketch(static.sparkSession, cms, usingColumns, conf)
+    val cms = SkewJoin.sketch(hotKeySource.getOrElse(static), usingColumns, conf)
+    SkewJoin.replicationCol(static.sparkSession, cms, usingColumns, conf)
   }
-
-  /** Replication column from an already-built sketch (the refresh path:
-    * [[RefreshableHotness]] hands in its current snapshot). Evaluates to 1
-    * for cold and null keys. */
-  private[graft] def replicationColFromSketch(
-      spark: SparkSession,
-      cms: org.apache.spark.util.sketch.CountMinSketch,
-      usingColumns: Seq[String],
-      conf: graft.skew.SkewJoinConf): Column =
-    graft.skew.SkewJoin.replicationCol(
-      spark, spark.sparkContext.broadcast(cms), usingColumns, conf)
 
   /** Watermarked stream-STREAM interval equi-join: each left row pairs with
     * the right rows sharing its `usingCols` whose event time falls in
@@ -839,37 +830,43 @@ object StreamOps {
       .toDF("key", "update_seq", "n", "sum_v")
   }
 
+  /** The converged row per `key` of an update-mode sink written by one of
+    * the `*Updates` folds above: each key's max-`update_seq` row, with the
+    * other columns in frame order (`update_seq` itself dropped). */
+  def converged(updates: DataFrame, key: String): DataFrame = {
+    val rest = updates.columns.toSeq.filterNot(Set(key, "update_seq"))
+    updates.groupBy(key)
+      .agg(max(struct((col("update_seq") +: rest.map(col)): _*)).as("__f"))
+      .select(col(key) +: rest.map(c => col(s"__f.$c").as(c)): _*)
+  }
+
   /** Run a (bounded) streaming DataFrame to completion through a memory sink
     * and return the materialized result — the test/verify harness for the
-    * operators above.
+    * operators above. The replay sizes itself from its own plan:
     *
-    * `noDataBatches = false` skips the trailing NO-DATA micro-batch (the
-    * watermark-advance pass that exists only to EVICT buffered state).
-    * Valid ONLY for queries whose operators emit nothing on eviction —
-    * stream-stream INNER joins emit every matched row during the data
-    * batches, so for a bounded replay that stops right after, the eviction
-    * pass produces zero rows and costs a full sweep of both sides' state
-    * stores (measured r19: 2.7 s of an 8.5 s query, 32 tasks re-walking
-    * 40 k buffered rows to emit nothing). It would be WRONG for
-    * watermark-emitting operators (append-mode aggregations, outer joins,
-    * dropDuplicatesWithinWatermark) — those emit their final results in
-    * exactly that pass; the default keeps it on. The conf is set on the
-    * session only until `start()` (streaming queries snapshot the session
-    * conf into their own cloned session at start), then restored. */
+    *  - '''State partitions''' ([[replayPartitions]]): one per 256 KB of the
+    *    plan's file-source bytes, within `[1, spark.sql.shuffle.partitions]`.
+    *  - '''The no-data micro-batch''' (the watermark-advance pass that exists
+    *    only to EVICT buffered state) is skipped in append mode when it
+    *    provably emits nothing ([[evictionEmitsNothing]]).
+    *
+    * Both confs are snapshotted into the query's own cloned session at
+    * `start()`, so they are set on `spark` only for the set/start/restore
+    * window. That window runs under `spark.synchronized`, so two replays on
+    * one session cannot snapshot each other's values; other work on the
+    * session during the window (a batch query, a stream started some other
+    * way) can still see them. */
   def runToMemory(spark: SparkSession, df: DataFrame, name: String,
-      outputMode: String = "complete",
-      noDataBatches: Boolean = true,
-      statePartitions: Option[Int] = None): DataFrame = {
-    // both confs are snapshotted into the query's own cloned session at
-    // start(), so setting them here scopes them to THIS query; restored
-    // immediately after start
+      outputMode: String = "complete"): DataFrame = {
+    val plan = df.queryExecution.analyzed
     val overrides =
-      (if (noDataBatches) Nil
-       else Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")) ++
-        statePartitions.map(n => "spark.sql.shuffle.partitions" -> n.toString)
-    val saved = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
-    overrides.foreach { case (k, v) => spark.conf.set(k, v) }
-    val q =
+      Seq("spark.sql.shuffle.partitions" -> replayPartitions(spark, plan).toString) ++
+        (if (outputMode.equalsIgnoreCase("append") && evictionEmitsNothing(plan))
+           Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
+         else Nil)
+    val q = spark.synchronized {
+      val saved = overrides.map { case (k, _) => k -> spark.conf.getOption(k) }
+      overrides.foreach { case (k, v) => spark.conf.set(k, v) }
       try {
         df.writeStream
           .outputMode(outputMode)
@@ -880,30 +877,64 @@ object StreamOps {
         case (k, Some(v)) => spark.conf.set(k, v)
         case (k, None)    => spark.conf.unset(k)
       }
+    }
     try q.processAllAvailable()
     finally q.stop()
     spark.table(name)
   }
 
-  /** Data-derived state-partition count for a BOUNDED replay of `path`
-    * (optimization guide §2: derive partitioning from input size, never a
-    * constant tuned for one cluster). Stateful-operator tasks carry a fixed
-    * per-partition price — open + commit of each operator's state store
-    * instances — that swamps the row work when partitions hold a few
-    * thousand rows (measured r19: the stream-stream interval join's
-    * stateful stage ran 3.3 s at 32 near-empty state partitions vs 0.7 s
-    * at 8 on identical data). One partition per 256 KB of source bytes
-    * rides that fixed cost at small inputs and saturates to the session's
-    * `spark.sql.shuffle.partitions` long before production scale, where
-    * this returns the session setting unchanged. */
-  def boundedReplayPartitions(spark: SparkSession, path: String): Int = {
-    val f = new java.io.File(path)
-    val bytes =
-      if (f.isFile) f.length
-      else Option(f.listFiles).map(_.filter(_.isFile).map(_.length).sum)
-        .getOrElse(0L)
-    val perPartition = 256L << 10
-    val n = ((bytes + perPartition - 1) / perPartition).toInt
-    math.max(1, math.min(n, spark.sessionState.conf.numShufflePartitions))
+  /** State-partition count for a BOUNDED replay of `plan`, derived from the
+    * bytes under its file sources' paths (optimization guide §2: derive
+    * partitioning from input size, never a constant tuned for one cluster).
+    * Stateful-operator tasks carry a fixed per-partition price — open +
+    * commit of each operator's state store instances — that swamps the row
+    * work when partitions hold a few thousand rows (measured r19: the
+    * stream-stream interval join's stateful stage ran 3.3 s at 32
+    * near-empty state partitions vs 0.7 s at 8 on identical data). One
+    * partition per 256 KB of source bytes rides that fixed cost at small
+    * inputs and saturates to the session's `spark.sql.shuffle.partitions`
+    * long before production scale. Sizes come from Hadoop's
+    * `getContentSummary`, so nested (partitioned) directories, `file:` URIs
+    * and non-local filesystems all count; a plan with no file source (e.g.
+    * a MemoryStream) gets the session setting. */
+  private def replayPartitions(
+      spark: SparkSession, plan: LogicalPlan): Int = {
+    val session = spark.sessionState.conf.numShufflePartitions
+    val paths = plan.collect {
+      case r: StreamingRelation => r.dataSource.options.get("path")
+    }.flatten.distinct
+    if (paths.isEmpty) session
+    else {
+      val hadoopConf = spark.sessionState.newHadoopConf()
+      val bytes = paths.map { p =>
+        val path = new Path(p)
+        val fs = path.getFileSystem(hadoopConf)
+        // the file source globs its path, so size what the glob matches
+        Option(fs.globStatus(path)).toSeq.flatten
+          .map(st => fs.getContentSummary(st.getPath).getLength).sum
+      }.sum
+      val perPartition = 256L << 10
+      val n = (bytes + perPartition - 1) / perPartition
+      math.max(1L, math.min(n, session.toLong)).toInt
+    }
   }
+
+  /** Whether the eviction-only no-data micro-batch of an append-mode replay
+    * of `plan` is a provable no-op: every streaming node is stateless or an
+    * inner stream-stream join. Inner joins emit every matched row during the
+    * data batches, so for a bounded replay that stops right after, the
+    * eviction pass emits zero rows and costs a full sweep of both sides'
+    * state stores (measured r19: 2.7 s of an 8.5 s query). Aggregates,
+    * deduplication, `*GroupsWithState` and outer joins emit final results
+    * in exactly that pass, so any of them keeps it on. */
+  private def evictionEmitsNothing(plan: LogicalPlan): Boolean =
+    plan.find { n =>
+      n.isStreaming && !(n match {
+        case _: Project | _: Filter | _: Generate | _: SubqueryAlias |
+            _: EventTimeWatermark | _: StreamingRelation => true
+        case j: Join =>
+          j.joinType == Inner && j.left.isStreaming && j.right.isStreaming
+        case _ => false
+      })
+    }.isEmpty
 }
