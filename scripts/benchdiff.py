@@ -17,10 +17,21 @@ by hand each round:
      else ENVIRONMENT) — the per-job host-latency tax documented since r13
      makes unattributed wall-time the least trustworthy signal here.
 
+Moves of the queries named in known_flaky.txt (next to this script:
+fingerprints that flip between shapes from run to run on one commit) are
+listed under a heading of their own, after the other moves; none is
+dropped.
+
 Usage: benchdiff.py OLD_JSON NEW_JSON [--json OUT]
 Exit 0 always (a report, not a gate): gating stays with the human reading
 it, because an intentional plan change is routine."""
-import sys, json, re, statistics
+import json, os, re, statistics, sys
+
+def known_flaky():
+    """Query names in known_flaky.txt, one per line, '#' comments."""
+    path = os.path.join(os.path.dirname(os.path.abspath(__file__)), "known_flaky.txt")
+    with open(path) as f:
+        return {l.split("#")[0].strip() for l in f} - {""}
 
 def load(path):
     txt = open(path).read()
@@ -78,9 +89,11 @@ def main():
     total_ratio = total_new / total_old if total_old > 0 else float("nan")
     med = statistics.median(ratios.values()) if ratios else float("nan")
 
+    flaky = known_flaky()
+
     def attribution(q):
         if q in fp_moves:
-            return "PLAN (fingerprint moved)"
+            return "PLAN (fingerprint moved%s)" % ("; known-flaky" if q in flaky else "")
         if q in byte_moves and abs(byte_moves[q]["pct"]) > 10:
             return f"BYTES ({byte_moves[q]['pct']:+.1f}% shuffle rw)"
         # when one record predates the bytes field, byte_moves is empty BY
@@ -104,18 +117,33 @@ def main():
         print(f"  removed: {', '.join(removed)}")
     print(f"total (shared): {total_old:.1f}s -> {total_new:.1f}s  "
           f"ratio {total_ratio:.3f}   median per-query ratio {med:.3f}")
-    print(f"\nfingerprint moves (PLAN changes): {len(fp_moves)}")
-    for q, m in sorted(fp_moves.items()):
-        print(f"  {q}: {m['old']} -> {m['new']}  "
-              f"({oq[q]:.2f}s -> {nq[q]:.2f}s)")
+    def print_fp(moves):
+        for q, m in sorted(moves.items()):
+            print(f"  {q}: {m['old']} -> {m['new']}  "
+                  f"({oq[q]:.2f}s -> {nq[q]:.2f}s)")
+
+    def print_bytes(moves):
+        for q, m in sorted(moves.items(), key=lambda kv: -abs(kv[1]["pct"]))[:20]:
+            tag = "" if q in fp_moves else "  [jitter]" if abs(m["pct"]) <= 10 else "  [READ ME]"
+            print(f"  {q}: {m['old_rw']} -> {m['new_rw']} bytes ({m['pct']:+.1f}%){tag}")
+
+    steady_fp = {q: m for q, m in fp_moves.items() if q not in flaky}
+    steady_bytes = {q: m for q, m in byte_moves.items() if q not in flaky}
+    print(f"\nfingerprint moves (PLAN changes): {len(steady_fp)}")
+    print_fp(steady_fp)
     if not bytes_comparable:
         print("\nshuffle-bytes: not comparable (one record predates the "
               "shuffle_rw_spill_bytes field)")
     print(f"\nshuffle-bytes moves >1% (fingerprint-stable ones are AQE "
-          f"partition jitter): {len(byte_moves)}")
-    for q, m in sorted(byte_moves.items(), key=lambda kv: -abs(kv[1]["pct"]))[:20]:
-        tag = "" if q in fp_moves else "  [jitter]" if abs(m["pct"]) <= 10 else "  [READ ME]"
-        print(f"  {q}: {m['old_rw']} -> {m['new_rw']} bytes ({m['pct']:+.1f}%){tag}")
+          f"partition jitter): {len(steady_bytes)}")
+    print_bytes(steady_bytes)
+    flaky_fp = {q: m for q, m in fp_moves.items() if q in flaky}
+    flaky_bytes = {q: m for q, m in byte_moves.items() if q in flaky}
+    print(f"\nknown-flaky queries (known_flaky.txt; one pair cannot tell a "
+          f"plan change from a flip): {len(flaky_fp)} fingerprint moves, "
+          f"{len(flaky_bytes)} shuffle-bytes moves >1%")
+    print_fp(flaky_fp)
+    print_bytes(flaky_bytes)
     print(f"\nspill (red flag if nonzero): {len(spills)}")
     for q, s in sorted(spills.items()):
         print(f"  {q}: {s}")
@@ -133,6 +161,7 @@ def main():
                        "median_ratio": med,
                        "added": added, "removed": removed,
                        "fingerprint_moves": fp_moves,
+                       "known_flaky": sorted(flaky),
                        "byte_moves": byte_moves, "spills": spills},
                       f, indent=1, sort_keys=True)
         print(f"\nwrote {out_json}")

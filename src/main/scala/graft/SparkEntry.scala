@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.skew.SkewJoin._
-import graft.skew.{LeftSkew, RightSkew, SkewJoinConf}
+import graft.skew.SkewJoinConf
 import graft.streaming.{RefreshableHotness, StreamOps}
 
 /** Driver contract — one `queries` entry (+ oracle SQL where expressible) per
@@ -1055,17 +1055,15 @@ object SparkEntry {
       // maxBucketSize), so AQE's runtime skew-split has nothing left to
       // fix on this pipeline while segmenting each internal checkpoint
       // into ~2-4 stage-jobs (this query measured 35 jobs; the job-tax
-      // signature). Same save/restore discipline as the CC rounds.
-      val conf = s.conf
-      val savedAqe = conf.get("spark.sql.adaptive.enabled")
-      val allPairs =
-        try {
-          conf.set("spark.sql.adaptive.enabled", "false")
-          graft.llm.Dedup.minHashDedupPairs(docs, "doc_id", "text",
-              numHashes = 32, bands = 16, threshold = 0.5)
-            .select("id_a", "id_b")
-            .localCheckpoint()
-        } finally conf.set("spark.sql.adaptive.enabled", savedAqe)
+      // signature). It plans in a private clone of the session, like the
+      // CC rounds, so the caller's conf is never touched.
+      val allPairs = graft.sources.Isolated.withConf(Seq(docs),
+          "spark.sql.adaptive.enabled" -> "false") { case (_, Seq(docs)) =>
+        graft.llm.Dedup.minHashDedupPairs(docs, "doc_id", "text",
+            numHashes = 32, bands = 16, threshold = 0.5)
+          .select("id_a", "id_b")
+          .localCheckpoint()
+      }
       val histAssign = graft.operators.ConnectedComponents.connectedComponents(
         allPairs.filter(col("id_a") % 5 =!= 0 && col("id_b") % 5 =!= 0))
       val newPairs = allPairs
@@ -3184,33 +3182,23 @@ object SparkEntry {
       // grain): AQE has nothing left to adapt there, but it segments each
       // pass's eager materialization into ~10 stage-jobs apiece (measured
       // 40 jobs for this query; the CC-backbone job-tax signature). The
-      // passes run AQE-off — the ConnectedComponents rounds pattern —
-      // under the same save/restore discipline; the corpus-scale base
-      // build above keeps AQE.
-      val conf = s.conf
-      val savedAqe = conf.get("spark.sql.adaptive.enabled")
-      val savedParts = conf.get("spark.sql.shuffle.partitions")
-      val withM =
-        try {
-          conf.set("spark.sql.adaptive.enabled", "false")
-          // replicate AQE's partition coalescing explicitly (the CC-rounds
-          // discipline): the frames are per-purchase-user grain — a few
-          // thousand rows at any SF — so the session's full partition
-          // count is pure per-task overhead here
-          conf.set("spark.sql.shuffle.partitions", "4")
-          val r = graft.operators.GroupedRank.withGroupNtile(
-            u, Seq.empty, Seq(col("recency_days"), col("user_id")),
-            k = 5, ntileCol = "r_bucket").localCheckpoint()
-          val f = graft.operators.GroupedRank.withGroupNtile(
-            r, Seq.empty, Seq(col("freq"), col("user_id")),
-            k = 5, ntileCol = "f_bucket").localCheckpoint()
-          graft.operators.GroupedRank.withGroupNtile(
-            f, Seq.empty, Seq(col("monetary_micro"), col("user_id")),
-            k = 5, ntileCol = "m_bucket").localCheckpoint()
-        } finally {
-          conf.set("spark.sql.adaptive.enabled", savedAqe)
-          conf.set("spark.sql.shuffle.partitions", savedParts)
-        }
+      // passes run AQE-off — the ConnectedComponents rounds pattern — in a
+      // private clone of the session (the base build above keeps AQE), on
+      // 4 shuffle partitions in place of AQE's coalescing: the session's
+      // full count is pure per-task overhead at this grain
+      val withM = graft.sources.Isolated.withConf(Seq(u),
+          "spark.sql.adaptive.enabled" -> "false",
+          "spark.sql.shuffle.partitions" -> "4") { case (_, Seq(u)) =>
+        val r = graft.operators.GroupedRank.withGroupNtile(
+          u, Seq.empty, Seq(col("recency_days"), col("user_id")),
+          k = 5, ntileCol = "r_bucket").localCheckpoint()
+        val f = graft.operators.GroupedRank.withGroupNtile(
+          r, Seq.empty, Seq(col("freq"), col("user_id")),
+          k = 5, ntileCol = "f_bucket").localCheckpoint()
+        graft.operators.GroupedRank.withGroupNtile(
+          f, Seq.empty, Seq(col("monetary_micro"), col("user_id")),
+          k = 5, ntileCol = "m_bucket").localCheckpoint()
+      }
       withM
         .groupBy(col("r_bucket").cast("long").as("r_bucket"),
           col("f_bucket").cast("long").as("f_bucket"),

@@ -4,6 +4,8 @@ import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import javax.imageio.ImageIO
+import javax.imageio.stream.{ImageInputStream, ImageOutputStream,
+  MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
@@ -53,19 +55,28 @@ import org.apache.spark.sql.functions._
   */
 object Multimodal {
 
-  // ImageIO's stream factories default to DISK-backed caches
-  // (`getUseCache()==true`): every `ImageIO.read`/`write` over an in-memory
-  // byte array creates, fills and deletes a temp FILE. Per record that is
-  // two temp files (encode + decode); at corpus scale, with every core
-  // running a codec task, the tasks serialize on temp-directory churn
-  // instead of decoding (measured r19: the ImageIO-backed decode queries ran
-  // 2-4× slower than the hand-rolled-codec ones on identical volumes, and
-  // got WORSE with more cores — the file churn is the shared bottleneck).
-  // Payloads here are always complete in-memory arrays, so the memory-backed
-  // stream is strictly better. Static, JVM-global, and idempotent: it rides
-  // this object's initializer, which runs on every executor before any
-  // mapPartitions below uses ImageIO.
-  ImageIO.setUseCache(false)
+  /** The bytes `write` puts on a MEMORY-backed image output stream (closed,
+    * so flushed, before they are read). Every codec call here builds its
+    * streams in memory: ImageIO's own factories default to DISK-backed
+    * caches, a temp FILE per read/write, and with every core running a
+    * codec task the tasks serialize on temp-directory churn (measured r19:
+    * 2-4× slower than the hand-rolled codecs, WORSE with more cores). The
+    * JVM-wide `ImageIO.setUseCache` switch is left as it is. */
+  private def encoded(write: ImageOutputStream => Unit): Array[Byte] = {
+    val baos = new ByteArrayOutputStream()
+    val out = new MemoryCacheImageOutputStream(baos)
+    try write(out) finally out.close()
+    baos.toByteArray
+  }
+
+  /** `img` encoded as `format` by the JDK's ImageIO writer. */
+  private def encodedImage(img: BufferedImage, format: String): Array[Byte] =
+    encoded(out => require(ImageIO.write(img, format, out),
+      s"JDK $format ImageWriter unavailable"))
+
+  /** A memory-backed image input stream over `bytes`. */
+  private def decoding(bytes: Array[Byte]): ImageInputStream =
+    new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
 
   /** Typed metadata carried next to the opaque payload. */
   case class MediaMeta(kind: String, width: Int, height: Int, sampleRateHz: Int)
@@ -139,10 +150,7 @@ object Multimodal {
       }
       y += 1
     }
-    val baos = new ByteArrayOutputStream()
-    val ok = ImageIO.write(img, "png", baos)
-    require(ok, "JDK PNG ImageWriter unavailable")
-    baos.toByteArray
+    encodedImage(img, "png")
   }
 
   /** REAL pixel decode: each payload is parsed by `ImageIO` (PNG/JPEG/BMP/
@@ -160,7 +168,7 @@ object Multimodal {
     records.mapPartitions { it =>
       // a real model pipeline would open its session here, once per batch
       it.map { rec =>
-        val img = ImageIO.read(new ByteArrayInputStream(rec.content))
+        val img = ImageIO.read(decoding(rec.content))
         require(img != null,
           s"media_id=${rec.media_id}: payload is not a decodable image")
         val w = img.getWidth
@@ -228,10 +236,7 @@ object Multimodal {
       }
       y += 1
     }
-    val baos = new ByteArrayOutputStream()
-    val ok = ImageIO.write(img, "bmp", baos)
-    require(ok, "JDK BMP ImageWriter unavailable")
-    baos.toByteArray
+    encodedImage(img, "bmp")
   }
 
   /** End-to-end real-BMP pipeline over the documents table — the
@@ -345,10 +350,7 @@ object Multimodal {
       }
       y += 1
     }
-    val baos = new ByteArrayOutputStream()
-    val ok = ImageIO.write(img, "tiff", baos)
-    require(ok, "JDK TIFF ImageWriter unavailable")
-    baos.toByteArray
+    encodedImage(img, "tiff")
   }
 
   /** End-to-end real-TIFF pipeline over the documents table: synthesize a
@@ -380,7 +382,7 @@ object Multimodal {
     import records.sparkSession.implicits._
     records.mapPartitions { it =>
       it.map { rec =>
-        val img = ImageIO.read(new ByteArrayInputStream(rec.content))
+        val img = ImageIO.read(decoding(rec.content))
         require(img != null,
           s"media_id=${rec.media_id}: payload is not a decodable image")
         val w = img.getWidth
@@ -491,10 +493,7 @@ object Multimodal {
       }
       y += 1
     }
-    val baos = new ByteArrayOutputStream()
-    val ok = ImageIO.write(img, "jpg", baos)
-    require(ok, "JDK JPEG ImageWriter unavailable")
-    baos.toByteArray
+    encodedImage(img, "jpg")
   }
 
   /** REAL DCT decode of JPEG payloads (JDK `ImageIO` Huffman+IDCT), with
@@ -510,7 +509,7 @@ object Multimodal {
     import records.sparkSession.implicits._
     records.mapPartitions { it =>
       it.map { rec =>
-        val img = ImageIO.read(new ByteArrayInputStream(rec.content))
+        val img = ImageIO.read(decoding(rec.content))
         require(img != null,
           s"media_id=${rec.media_id}: payload is not a decodable image")
         val w = img.getWidth
@@ -690,33 +689,31 @@ object Multimodal {
     val nF = 2 + (id % 3).toInt
     val w = 8 + (id % 4).toInt
     val h = 8 + (id % 3).toInt
-    val baos = new ByteArrayOutputStream()
-    val ios = ImageIO.createImageOutputStream(baos)
     val writers = ImageIO.getImageWritersByFormatName("gif")
     require(writers.hasNext, "JDK GIF ImageWriter unavailable")
     val writer = writers.next()
-    writer.setOutput(ios)
-    writer.prepareWriteSequence(null)
-    var f = 0
-    while (f < nF) {
-      val img = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_INDEXED, grayPalette)
-      val raster = img.getRaster
-      var y = 0
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          raster.setSample(x, y, 0, ((id * 13 + f * 29 + x * 7 + y * 3) % 256).toInt)
-          x += 1
+    encoded { ios =>
+      writer.setOutput(ios)
+      writer.prepareWriteSequence(null)
+      var f = 0
+      while (f < nF) {
+        val img = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_INDEXED, grayPalette)
+        val raster = img.getRaster
+        var y = 0
+        while (y < h) {
+          var x = 0
+          while (x < w) {
+            raster.setSample(x, y, 0, ((id * 13 + f * 29 + x * 7 + y * 3) % 256).toInt)
+            x += 1
+          }
+          y += 1
         }
-        y += 1
+        writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
+        f += 1
       }
-      writer.writeToSequence(new javax.imageio.IIOImage(img, null, null), null)
-      f += 1
+      writer.endWriteSequence()
+      writer.dispose()
     }
-    writer.endWriteSequence()
-    writer.dispose()
-    ios.close()
-    baos.toByteArray
   }
 
   /** REAL multi-frame decode with frame sampling: each payload is parsed by
@@ -734,8 +731,7 @@ object Multimodal {
         val readers = ImageIO.getImageReadersByFormatName("gif")
         require(readers.hasNext, "JDK GIF ImageReader unavailable")
         val reader = readers.next()
-        reader.setInput(
-          ImageIO.createImageInputStream(new ByteArrayInputStream(rec.content)))
+        reader.setInput(decoding(rec.content))
         val n = reader.getNumImages(true)
         require(n > 0, s"media_id=${rec.media_id}: payload is not a decodable GIF")
         var graySum = 0L

@@ -77,32 +77,25 @@ object ConnectedComponents {
     //  - broadcast decisions: star rounds deliberately DON'T broadcast
     //    (the per-node min table is the same cardinality class as the
     //    edge set itself) — sort-merge on the shared exchange is the
-    //    stable 100-TB plan.
-    // Conf is session-scoped, so save/restore in finally; concurrent
-    // queries on the same session during a closure would plan non-adaptive
-    // (a perf nuance, never a correctness one).
-    val conf = pairs.sparkSession.conf
-    val savedAqe = conf.get("spark.sql.adaptive.enabled")
-    val savedParts = conf.get("spark.sql.shuffle.partitions")
-    val savedBcast = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      conf.set("spark.sql.adaptive.enabled", "false")
-      // each static BroadcastExchange would submit its own relation-build
-      // job (measured 4 per round) — the exact tax this path eliminates
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    //    stable 100-TB plan; each static BroadcastExchange would also
+    //    submit its own relation-build job (measured 4 per round).
+    // The rounds plan in a private clone of the session, never in the
+    // caller's conf.
+    val maxParts = pairs.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong
+    edges = graft.sources.Isolated.withConf(Seq(edges),
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") { case (clone, Seq(start)) =>
+      var round = start
       while (!converged && it < maxIter) {
-        conf.set("spark.sql.shuffle.partitions",
-          math.min(savedParts.toLong, sig._1 / 250000L + 1L).toString)
-        val (next, nextSig) = materialize(smallStar(largeStar(edges)), checkpointDir.isDefined)
+        clone.conf.set("spark.sql.shuffle.partitions",
+          math.min(maxParts, sig._1 / 250000L + 1L).toString)
+        val (next, nextSig) = materialize(smallStar(largeStar(round)), checkpointDir.isDefined)
         converged = nextSig == sig
         sig = nextSig
-        edges = next
+        round = next
         it += 1
       }
-    } finally {
-      conf.set("spark.sql.adaptive.enabled", savedAqe)
-      conf.set("spark.sql.shuffle.partitions", savedParts)
-      conf.set("spark.sql.autoBroadcastJoinThreshold", savedBcast)
+      round
     }
     if (!converged)
       throw new IllegalStateException(

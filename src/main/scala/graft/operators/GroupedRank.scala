@@ -136,17 +136,6 @@ object GroupedRank {
       k: Int,
       ntileCol: String = "ntile"): DataFrame = {
     require(k > 0, "ntile bucket count must be positive")
-    val ranked = withGroupRank(df, groupCols, orderCols, "__graft_grank")
-    val totals = df.groupBy(groupCols.map(col): _*)
-      .agg(count(lit(1)).as("__graft_n"))
-    // null-safe on the group columns for the same reason as the rank join
-    val totR = groupCols.foldLeft(totals) { (d, c) =>
-      d.withColumnRenamed(c, s"__graft_t_$c")
-    }
-    val withTotals =
-      if (groupCols.isEmpty) ranked.crossJoin(broadcast(totR))
-      else ranked.join(broadcast(totR),
-        groupCols.map(c => col(c) <=> col(s"__graft_t_$c")).reduce(_ && _))
     // Column./ is true (double) division — floor() it back to integral.
     // Exact while operands < 2^53, i.e. for any group a Long can count.
     def idiv(a: Column, b: Column): Column = floor(a / b).cast("long")
@@ -157,10 +146,7 @@ object GroupedRank {
     val r0 = col("__graft_grank") - 1
     val bucket = when(r0 < cut, idiv(r0, q + 1) + 1)
       .otherwise(rem + idiv(r0 - cut, greatest(q, lit(1L))) + 1)
-    withTotals
-      .withColumn(ntileCol, bucket.cast("int"))
-      .drop("__graft_grank" +: "__graft_n" +:
-        groupCols.map(c => s"__graft_t_$c"): _*)
+    rankedWithTotal(df, groupCols, orderCols, ntileCol, bucket.cast("int"))
   }
 
   /** Per-group PERCENTILE NORMALIZATION: each row tagged with its in-group
@@ -179,10 +165,23 @@ object GroupedRank {
       df: DataFrame,
       groupCols: Seq[String],
       orderCols: Seq[Column],
-      pctCol: String = "pct_ppm"): DataFrame = {
+      pctCol: String = "pct_ppm"): DataFrame =
+    rankedWithTotal(df, groupCols, orderCols, pctCol, expr(
+      "((__graft_grank - 1) * 1000000L) div greatest(__graft_n - 1, 1L)"))
+
+  /** `df` plus `outCol = value`, where `value` reads the row's in-group
+    * rank (`__graft_grank`, [[withGroupRank]]) and its group's row count
+    * (`__graft_n`, one per-group total-count aggregate, broadcast). */
+  private def rankedWithTotal(
+      df: DataFrame,
+      groupCols: Seq[String],
+      orderCols: Seq[Column],
+      outCol: String,
+      value: Column): DataFrame = {
     val ranked = withGroupRank(df, groupCols, orderCols, "__graft_grank")
     val totals = df.groupBy(groupCols.map(col): _*)
       .agg(count(lit(1)).as("__graft_n"))
+    // null-safe on the group columns for the same reason as the rank join
     val totR = groupCols.foldLeft(totals) { (d, c) =>
       d.withColumnRenamed(c, s"__graft_t_$c")
     }
@@ -191,8 +190,7 @@ object GroupedRank {
       else ranked.join(broadcast(totR),
         groupCols.map(c => col(c) <=> col(s"__graft_t_$c")).reduce(_ && _))
     withTotals
-      .withColumn(pctCol, expr(
-        "((__graft_grank - 1) * 1000000L) div greatest(__graft_n - 1, 1L)"))
+      .withColumn(outCol, value)
       .drop("__graft_grank" +: "__graft_n" +:
         groupCols.map(c => s"__graft_t_$c"): _*)
   }

@@ -104,15 +104,14 @@ object PageRank {
     // the materialized frame instead of recomputing the upstream plan.
     val (e, nEdges) = matCount(
       edges.select(col(srcCol).as("__graft_src"), col(dstCol).as("__graft_dst")))
-    val conf = edges.sparkSession.conf
-    val savedAqe = conf.get("spark.sql.adaptive.enabled")
-    val savedParts = conf.get("spark.sql.shuffle.partitions")
-    val savedBcast = conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      conf.set("spark.sql.adaptive.enabled", "false")
-      conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      conf.set("spark.sql.shuffle.partitions",
-        math.min(savedParts.toLong, nEdges / 250000L + 1L).toString)
+    // Iterations plan in a private clone of the session, never in the
+    // caller's conf; partitions are sized from the edge count.
+    val maxParts = edges.sparkSession.conf.get("spark.sql.shuffle.partitions").toLong
+    graft.sources.Isolated.withConf(e +: seedSet.toSeq,
+        "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.shuffle.partitions" ->
+          math.min(maxParts, nEdges / 250000L + 1L).toString) { case (_, e +: seeds) =>
       val (nodes, n) = matCount(
         e.select(col("__graft_src").as("node"))
           .unionAll(e.select(col("__graft_dst").as("node")))
@@ -122,7 +121,7 @@ object PageRank {
       // teleport targets: every node (classic) or the seed∩graph set
       // (personalized); nodesT carries the per-node seed flag so the
       // classic path stays a constant-folded literal, never a join
-      val (nodesT, nT) = seedSet match {
+      val (nodesT, nT) = seeds.headOption match {
         case None => (nodes.select(col("node"), lit(true).as("__graft_seed")), n)
         case Some(sd) =>
           val (sdm, c) = matCount(nodes.join(sd, Seq("node"), "left_semi"))
@@ -158,10 +157,6 @@ object PageRank {
         scores = if (checkpointDir.isDefined) next.checkpoint() else next.localCheckpoint()
       }
       scores
-    } finally {
-      conf.set("spark.sql.adaptive.enabled", savedAqe)
-      conf.set("spark.sql.shuffle.partitions", savedParts)
-      conf.set("spark.sql.autoBroadcastJoinThreshold", savedBcast)
     }
   }
 }

@@ -36,25 +36,23 @@ object StreamOps {
     * and `ts` (microsecond timestamp) whatever physical type the fixture
     * carries (see [[graft.SparkEntry]]'s events reader for the two layouts).
     * The stream schema comes from a one-footer batch read — a driver-side
-    * metadata probe, not a data scan. The file source requires a directory,
-    * so a lone file is exposed through a temp dir holding a symlink. */
+    * metadata probe, not a data scan. A lone file streams through
+    * [[parquetStream]]'s one-file glob. */
   def eventsStream(spark: SparkSession, path: String): DataFrame =
     graft.sources.EventTime.withTsNs(parquetStream(spark, path))
 
   /** File-source stream over any parquet path (schema from a one-footer
-    * batch read — a driver-side metadata probe, not a data scan; lone files
-    * get the symlink-dir treatment the file source requires). */
+    * batch read — a driver-side metadata probe, not a data scan). The file
+    * source takes only a directory or a glob, so a lone file streams through
+    * a glob matching just that file (`<parent>/{<name>}`, escaped). */
   def parquetStream(spark: SparkSession, path: String): DataFrame = {
     val f = new java.io.File(path)
-    val dir =
-      if (f.isFile) {
-        val d = java.nio.file.Files.createTempDirectory("graft_stream_")
-        java.nio.file.Files.createSymbolicLink(
-          d.resolve(f.getName), f.toPath.toAbsolutePath)
-        d.toFile.deleteOnExit()
-        d.toString
-      } else path
-    val fileSchema = spark.read.parquet(dir).schema
+    def escaped(s: String) = s.flatMap(c => if ("\\{}[]*?,".contains(c)) s"\\$c" else s"$c")
+    val (file, source) =
+      if (f.isFile) (escaped(f.getAbsolutePath),
+        s"${escaped(f.getAbsoluteFile.getParent)}/{${escaped(f.getName)}}")
+      else (path, path)
+    val fileSchema = spark.read.parquet(file).schema
     val reader = spark.readStream.schema(fileSchema)
     // harness knob (session conf, unset in production): cap files per
     // micro-batch so a pre-sliced directory replays as a REAL multi-batch
@@ -62,7 +60,7 @@ object StreamOps {
     // every stream query through hostile batch boundaries
     spark.conf.getOption("graft.stream.maxFilesPerTrigger")
       .foreach(v => reader.option("maxFilesPerTrigger", v))
-    reader.parquet(dir)
+    reader.parquet(source)
   }
 
   /** Tumbling-window counts per event type (with watermark so the query is

@@ -22,6 +22,12 @@ object Bridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     CDataset.ofRows(spark.asInstanceOf[CSparkSession], plan)
 
+  /** A new session sharing this one's SparkContext, cache and extensions,
+    * with its own copy of the SQL conf (`SparkSession.cloneSession`,
+    * `private[sql]`). */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[CSparkSession].cloneSession()
+
   /** Wrap an `RDD[InternalRow]` (e.g. `df.queryExecution.toRdd`) back as a
     * DataFrame (`SparkSession.internalCreateDataFrame`, `private[sql]`).
     *

@@ -7,6 +7,20 @@ import graft.llm.Multimodal
 class ImageDHashSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
 
+  test("encoding and decoding through Multimodal leaves ImageIO's JVM-wide cache switch alone") {
+    import spark.implicits._
+    // nothing in this process flips the switch: it still holds the JDK
+    // default after every earlier suite in this JVM, and after this decode
+    assert(javax.imageio.ImageIO.getUseCache, "ImageIO's disk cache switch was flipped")
+    val ids = Seq(3L, 5L)
+    val got = Multimodal.decodeImageStats(
+      ids.toDS().map(id => Multimodal.ImageRecord(id, Multimodal.synthesizePng(id))))
+      .collect()
+    assert(got.map(_.media_id).sorted.toSeq == ids)
+    assert(Multimodal.synthesizeGif(4L).nonEmpty)
+    assert(javax.imageio.ImageIO.getUseCache, "ImageIO's disk cache switch was flipped")
+  }
+
   test("dHash from the REAL decode equals the pattern-formula replay") {
     import spark.implicits._
     val ids = Seq(0L, 1L, 7L, 63L, 200L)

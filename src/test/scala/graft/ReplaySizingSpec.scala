@@ -122,6 +122,30 @@ class ReplaySizingSpec extends AnyFunSuite {
     }
   }
 
+  test("a lone file streams in place: no temp dir, only its own rows, glob characters literal") {
+    withTempDir("graft_replay_glob") { dir =>
+      def rows(counts: DataFrame) =
+        counts.collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
+      writeRandom(dir.resolve("one"), partitioned = false)
+      val want = rows(spark.read.parquet(dir.resolve("one").toString).groupBy("date").count())
+      // a sibling that an unescaped `ev{1,2}*?.parquet` glob would also match
+      spark.range(0, 5).select(col("id"), rand(7).as("v"), lit("x").as("date"))
+        .coalesce(1).write.parquet(dir.resolve("decoy").toString)
+      val nested = Files.createDirectory(dir.resolve("in[1]{a,b}"))
+      val file = Files.move(parquetFiles(dir.resolve("one")).head,
+        nested.resolve("ev{1,2}*?.parquet"))
+      Files.move(parquetFiles(dir.resolve("decoy")).head, nested.resolve("ev1x.parquet"))
+      def tempStreamDirs() = Files.list(Path.of(System.getProperty("java.io.tmpdir")))
+        .iterator().asScala.count(_.getFileName.toString.startsWith("graft_stream_"))
+      val before = tempStreamDirs()
+      val out = StreamOps.runToMemory(spark,
+        StreamOps.parquetStream(spark, file.toString).groupBy("date").count(),
+        "t_replay_glob")
+      assert(tempStreamDirs() == before, "a lone-file stream must not create a temp dir")
+      assert(rows(out) == want)
+    }
+  }
+
   test("a MemoryStream source gets the session setting, never 1") {
     import spark.implicits._
     implicit val sqlc: org.apache.spark.sql.SQLContext = spark.sqlContext

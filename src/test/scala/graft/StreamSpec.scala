@@ -282,12 +282,7 @@ class StreamSpec extends AnyFunSuite {
       "t_stream_kmv", outputMode = "update")
     // multiple updates per group proves the slicing actually happened
     assert(updates.groupBy("g").count().filter(col("count") > 1).count() == 3)
-    val fin = updates.groupBy("g")
-      .agg(max(struct(col("update_seq"), col("n_sample"),
-        col("kth_hash"), col("est_distinct"))).as("__f"))
-      .select(col("g"), col("__f.n_sample").as("n_sample"),
-        col("__f.kth_hash").as("kth_hash"),
-        col("__f.est_distinct").as("est_distinct"))
+    val fin = StreamOps.converged(updates, "g")
     val batch = graft.sketch.KmvOps.kmvDistinct(
       spark.read.parquet(dir.toString), Seq("g"), "v", k = 8)
     fin.ensureDatasetEquals(batch)
@@ -317,15 +312,7 @@ class StreamSpec extends AnyFunSuite {
       StreamOps.latenessUpdates(stream, "g", "arr", "ts"),
       "t_stream_late", outputMode = "update")
     assert(updates.groupBy("g").count().filter(col("count") > 1).count() == 2)
-    val fin = updates.groupBy("g")
-      .agg(max(struct(col("update_seq"), col("n"), col("n_ooo"),
-        col("n_late_1m"), col("n_late_5m"), col("n_late_1h"),
-        col("max_late_ns"))).as("__f"))
-      .select(col("g"), col("__f.n").as("n"), col("__f.n_ooo").as("n_ooo"),
-        col("__f.n_late_1m").as("n_late_1m"),
-        col("__f.n_late_5m").as("n_late_5m"),
-        col("__f.n_late_1h").as("n_late_1h"),
-        col("__f.max_late_ns").as("max_late_ns"))
+    val fin = StreamOps.converged(updates, "g")
     val batch = spark.read.parquet(dir.toString)
       .withColumn("rmax", max("ts").over(Window.partitionBy("g")
         .orderBy("arr").rowsBetween(Window.unboundedPreceding, 0)))
@@ -386,14 +373,10 @@ class StreamSpec extends AnyFunSuite {
       StreamOps.hllDistinctUpdates(stream, "g", "v", p = 6),
       "t_stream_hll", outputMode = "update")
     assert(updates.groupBy("g").count().filter(col("count") > 1).count() == 3)
-    val fin = updates.groupBy("g")
-      .agg(max(struct(col("update_seq"), col("used_buckets"),
-        col("denom_q"), col("est_distinct"))).as("__f"))
-      .select(col("g"), lit(64L).as("m"),
-        col("__f.used_buckets").as("used_buckets"),
-        (lit(64L) - col("__f.used_buckets")).as("zero_buckets"),
-        col("__f.denom_q").as("denom_q"),
-        col("__f.est_distinct").as("est_distinct"))
+    val fin = StreamOps.converged(updates, "g")
+      .select(col("g"), lit(64L).as("m"), col("used_buckets"),
+        (lit(64L) - col("used_buckets")).as("zero_buckets"),
+        col("denom_q"), col("est_distinct"))
     val batch = graft.sketch.HllOps.hllEstimate(
       spark.read.parquet(dir.toString), Seq("g"), "v", p = 6)
     fin.ensureDatasetEquals(batch)
@@ -422,9 +405,7 @@ class StreamSpec extends AnyFunSuite {
       "t_stream_trend", outputMode = "update")
     // multiple updates per group proves the slicing actually happened
     assert(updates.groupBy("g").count().filter(col("count") > 1).count() == 3)
-    val fin = updates.groupBy("g")
-      .agg(max(struct(col("update_seq"), col("n"), col("slope_ppm"))).as("__f"))
-      .select(col("g"), col("__f.n").as("n"), col("__f.slope_ppm").as("slope_ppm"))
+    val fin = StreamOps.converged(updates, "g")
     val batch = graft.operators.Trend.groupedTrend(
       spark.read.parquet(dir.toString), Seq("g"), col("x"), col("y"))
     fin.ensureDatasetEquals(batch)
@@ -453,10 +434,7 @@ class StreamSpec extends AnyFunSuite {
       StreamOps.ewmaUpdates(stream, "g", col("x"), col("y")),
       "t_stream_ewma", outputMode = "update")
     assert(updates.groupBy("g").count().filter(col("count") > 1).count() == 3)
-    val fin = updates.groupBy("g")
-      .agg(max(struct(col("update_seq"), col("x"), col("y"), col("ewma"))).as("__f"))
-      .select(col("g"), col("__f.x").as("x"), col("__f.y").as("y"),
-        col("__f.ewma").as("ewma"))
+    val fin = StreamOps.converged(updates, "g")
     val batchLast = graft.operators.Trend
       .ewmaIntSeries(spark.read.parquet(dir.toString), Seq("g"), col("x"), col("y"))
       .groupBy("g")
@@ -493,11 +471,7 @@ class StreamSpec extends AnyFunSuite {
       StreamOps.changePointUpdates(stream, "g", col("x"), col("y")),
       "t_stream_cpt", outputMode = "update")
     assert(updates.groupBy("g").count().filter(col("count") > 1).count() == 3)
-    val fin = updates.groupBy("g")
-      .agg(max(struct(col("update_seq"), col("n_grid"), col("split_x"),
-        col("shift_ppm"))).as("__f"))
-      .select(col("g"), col("__f.n_grid").as("n_grid"),
-        col("__f.split_x").as("split_x"), col("__f.shift_ppm").as("shift_ppm"))
+    val fin = StreamOps.converged(updates, "g")
     val batch = graft.operators.ChangePoint.meanShiftChangePoint(
       spark.read.parquet(dir.toString), Seq("g"), col("x"), col("y"))
     fin.ensureDatasetEquals(batch)
@@ -572,12 +546,7 @@ class StreamSpec extends AnyFunSuite {
     val updates = StreamOps.runToMemory(spark,
       StreamOps.kmvDistinctUpdates(stream, "g", "v", k = 8),
       "t_stream_kmv_null", outputMode = "update")
-    val fin = updates.groupBy("g")
-      .agg(max(struct(col("update_seq"), col("n_sample"),
-        col("kth_hash"), col("est_distinct"))).as("__f"))
-      .select(col("g"), col("__f.n_sample").as("n_sample"),
-        col("__f.kth_hash").as("kth_hash"),
-        col("__f.est_distinct").as("est_distinct"))
+    val fin = StreamOps.converged(updates, "g")
     val batch = graft.sketch.KmvOps.kmvDistinct(
       spark.read.parquet(dir.toString), Seq("g"), "v", k = 8)
     fin.ensureDatasetEquals(batch)
@@ -667,12 +636,7 @@ class StreamSpec extends AnyFunSuite {
         cooldown = 40L),
       "t_stream_throttle", outputMode = "update")
     assert(updates.groupBy("key").count().filter(col("count") > 1).count() == 3)
-    val fin = updates.groupBy("key")
-      .agg(max(struct(col("update_seq"), col("n_events"), col("n_kept"),
-        col("last_kept_ts"))).as("__f"))
-      .select(col("key"), col("__f.n_events").as("n_events"),
-        col("__f.n_kept").as("n_kept"),
-        col("__f.last_kept_ts").as("last_kept_ts"))
+    val fin = StreamOps.converged(updates, "key")
     val kept = graft.operators.Sessionize.throttle(
       base.distinct.toDF("key", "ts", "tie"), Seq("key"), "ts", "tie",
       cooldown = 40L)
@@ -729,9 +693,8 @@ class StreamSpec extends AnyFunSuite {
       .orderBy(col("update_seq").desc).select("n").head()
     assert(cLast.getLong(0) == 0L,
       "fully-retracted group must emit its n=0 deletion row")
-    val fin = updates.groupBy("key")
-      .agg(max(struct(col("update_seq"), col("n"), col("sum_v"))).as("__f"))
-      .select(col("key"), col("__f.n").as("n"), col("__f.sum_v").as("v"))
+    val fin = StreamOps.converged(updates, "key")
+      .withColumnRenamed("sum_v", "v")
       .filter(col("n") > 0)
     val batch = graft.operators.RollupMaintain.applyAggDelta(
       facts.toDF("key", "v").groupBy("key")
