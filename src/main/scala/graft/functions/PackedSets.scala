@@ -1,15 +1,16 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionDescription, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionDescription, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Exact long packing of short-string sets + the long-merge Jaccard — the
-  * r18 verification fast path.
+/** Exact long packing of short-string sets — the r18 verification fast
+  * path: [[SortedJaccard]] over packed `array<bigint>` sets merges
+  * primitive longs.
   *
   * The LSH/winnow candidate verification ran [[SortedJaccard]] over SORTED
   * STRING shingle arrays: each merge step calls `ArrayData.getUTF8String`
@@ -25,8 +26,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * because inputs are NUL-free) and order-preserving (unsigned long order
   * = unsigned byte order = `UTF8String` order for equal-or-prefix-padded
   * bytes). Therefore |A∩B| and |A∪B| — and the IEEE division — are
-  * bit-identical to the string-side computation; the packed merge just
-  * compares primitive longs. Inputs that violate the contract (> 8 bytes,
+  * bit-identical to the string-side computation; the packed merge
+  * ([[SortedSetOverlap]]'s unsigned-long comparator) just compares
+  * primitive longs. Inputs that violate the contract (> 8 bytes,
   * or a 0x00 byte) fail LOUDLY at pack time — never a silent wrong pack.
   */
 @ExpressionDescription(
@@ -109,96 +111,8 @@ object PackShingleSet {
   }
 }
 
-/** Jaccard of two SORTED, DISTINCT packed-long arrays — the long twin of
-  * [[SortedJaccard]] (same merge, same null-element rule, same IEEE
-  * division), comparing with `Long.compareUnsigned` to match the unsigned
-  * byte order the packing preserves. */
-@ExpressionDescription(
-  usage = "sorted_jaccard_long(a, b) - Jaccard similarity of two sorted distinct long arrays.")
-case class SortedJaccardLong(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"sorted_jaccard_long requires array<bigint> inputs, got " +
-        s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
-  }
-
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val na = a.numElements()
-    val nb = b.numElements()
-    if (na == 0 && nb == 0) return 0.0
-    var i = 0
-    var j = 0
-    var inter = 0
-    while (i < na && j < nb) {
-      val xn = a.isNullAt(i)
-      val yn = b.isNullAt(j)
-      val c = if (xn || yn) { if (xn && yn) 0 else if (xn) -1 else 1 }
-        else java.lang.Long.compareUnsigned(a.getLong(i), b.getLong(j))
-      if (c == 0) { inter += 1; i += 1; j += 1 }
-      else if (c < 0) i += 1
-      else j += 1
-    }
-    val union = na + nb - inter
-    inter.toDouble / union
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val inter = ctx.freshName("inter")
-      val xn = ctx.freshName("xn")
-      val yn = ctx.freshName("yn")
-      val c = ctx.freshName("c")
-      s"""
-         |int $na = $a.numElements();
-         |int $nb = $b.numElements();
-         |if ($na == 0 && $nb == 0) {
-         |  ${ev.value} = 0.0;
-         |} else {
-         |  int $i = 0; int $j = 0; int $inter = 0;
-         |  while ($i < $na && $j < $nb) {
-         |    boolean $xn = $a.isNullAt($i);
-         |    boolean $yn = $b.isNullAt($j);
-         |    int $c;
-         |    if ($xn || $yn) {
-         |      $c = ($xn && $yn) ? 0 : ($xn ? -1 : 1);
-         |    } else {
-         |      $c = java.lang.Long.compareUnsigned($a.getLong($i), $b.getLong($j));
-         |    }
-         |    if ($c == 0) { $inter++; $i++; $j++; }
-         |    else if ($c < 0) { $i++; }
-         |    else { $j++; }
-         |  }
-         |  ${ev.value} = ((double) $inter) / ($na + $nb - $inter);
-         |}
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedJaccardLong =
-    copy(left = newLeft, right = newRight)
-}
-
 object PackedSets {
   /** Column API: pack a sorted ≤8-byte-string set into a sorted long set. */
   def packShingleSet(a: Column): Column =
     Bridge.column(PackShingleSet(Bridge.expression(a)))
-
-  /** Column API: Jaccard of two sorted distinct packed-long sets. */
-  def sortedJaccardLong(a: Column, b: Column): Column =
-    Bridge.column(SortedJaccardLong(Bridge.expression(a), Bridge.expression(b)))
 }

@@ -1,16 +1,15 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionDescription}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graftshim.Bridge
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
 
-/** Jaccard similarity of two SORTED, DISTINCT string arrays as a single
-  * linear merge — a custom Catalyst expression.
+/** Set overlap of two SORTED, DISTINCT arrays as a single linear merge —
+  * the one kernel behind [[SortedJaccard]] and [[SortedIntersect]].
   *
   * Why custom: the composable form
   * `size(array_intersect(a,b)) / size(array_union(a,b))` builds two hash sets
@@ -20,116 +19,41 @@ import org.apache.spark.unsafe.types.UTF8String
   * `array_sort` runs once per *document*, the merge runs once per *candidate
   * pair*, and pairs outnumber documents by orders of magnitude at scale.
   *
-  * Inputs MUST be sorted ascending (UTF8String binary order, i.e. what
-  * `array_sort` yields) and duplicate-free (`array_distinct`); results on
-  * unsorted input are meaningless.
-  */
-@ExpressionDescription(
-  usage = "sorted_jaccard(a, b) - Jaccard similarity of two sorted distinct string arrays.")
-case class SortedJaccard(left: Expression, right: Expression)
-    extends BinaryExpression {
+  * Both inputs are `array<string>` or both `array<bigint>`; the merge's
+  * comparator follows the element type, fixed at plan time (the generated
+  * code carries no per-element type branch):
+  *  - `array<string>`: `UTF8String` binary order, i.e. what `array_sort`
+  *    yields;
+  *  - `array<bigint>`: UNSIGNED long order — the order
+  *    [[PackedSets.packShingleSet]] preserves, so a packed set merges to
+  *    bit-identical |∩| and |∪| (PackedSetsSpec). A `bigint` set sorted by
+  *    `array_sort` (signed order) is only valid input if it holds no
+  *    negative element.
+  *
+  * Inputs MUST be sorted ascending in that order and duplicate-free
+  * (`array_distinct`); results on unsorted input are meaningless. Null
+  * elements sort first and two nulls count as a match. */
+abstract class SortedSetOverlap extends BinaryExpression {
 
-  override def dataType: DataType = DoubleType
+  /** SQL name, for type-check messages. */
+  protected def fnName: String
 
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"sorted_jaccard requires array<string> inputs, got " +
-        s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
-  }
+  /** true: Jaccard |∩|/|∪| as a double (0.0 for two empty sets);
+    * false: the integer |∩|. */
+  protected def jaccard: Boolean
 
-  override def nullSafeEval(l: Any, r: Any): Any = {
-    val a = l.asInstanceOf[ArrayData]
-    val b = r.asInstanceOf[ArrayData]
-    val na = a.numElements()
-    val nb = b.numElements()
-    if (na == 0 && nb == 0) return 0.0
-    var i = 0
-    var j = 0
-    var inter = 0
-    while (i < na && j < nb) {
-      val x = a.getUTF8String(i)
-      val y = b.getUTF8String(j)
-      val c = if (x == null || y == null) {
-        // nulls sort first under Spark's array_sort; treat equal nulls as a match
-        if (x == null && y == null) 0 else if (x == null) -1 else 1
-      } else x.compareTo(y)
-      if (c == 0) { inter += 1; i += 1; j += 1 }
-      else if (c < 0) i += 1
-      else j += 1
-    }
-    val union = na + nb - inter
-    inter.toDouble / union
-  }
+  override def dataType: DataType = if (jaccard) DoubleType else IntegerType
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val inter = ctx.freshName("inter")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val c = ctx.freshName("c")
-      val utf8 = classOf[UTF8String].getName
-      s"""
-         |int $na = $a.numElements();
-         |int $nb = $b.numElements();
-         |if ($na == 0 && $nb == 0) {
-         |  ${ev.value} = 0.0;
-         |} else {
-         |  int $i = 0; int $j = 0; int $inter = 0;
-         |  while ($i < $na && $j < $nb) {
-         |    $utf8 $x = $a.isNullAt($i) ? null : $a.getUTF8String($i);
-         |    $utf8 $y = $b.isNullAt($j) ? null : $b.getUTF8String($j);
-         |    int $c;
-         |    if ($x == null || $y == null) {
-         |      $c = ($x == null && $y == null) ? 0 : ($x == null ? -1 : 1);
-         |    } else {
-         |      $c = $x.compareTo($y);
-         |    }
-         |    if ($c == 0) { $inter++; $i++; $j++; }
-         |    else if ($c < 0) { $i++; }
-         |    else { $j++; }
-         |  }
-         |  ${ev.value} = ((double) $inter) / ($na + $nb - $inter);
-         |}
-       """.stripMargin
-    })
+  @transient private lazy val longs: Boolean =
+    left.dataType.asInstanceOf[ArrayType].elementType == LongType
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedJaccard =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Intersection COUNT of two sorted distinct string arrays — the same
-  * linear merge as [[SortedJaccard]] but returning the exact integer
-  * overlap, for consumers that need integer set algebra (`|∪| = |a| +
-  * |b| − |∩|`) instead of a pre-divided double: the prefix-filtered exact
-  * Jaccard join compares `|∩|·tDen ≥ tNum·|∪|` in pure integers, so no
-  * division may happen inside the expression. Same input contract:
-  * sorted ascending, duplicate-free. */
-@ExpressionDescription(
-  usage = "sorted_intersect(a, b) - intersection size of two sorted distinct string arrays.")
-case class SortedIntersect(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = org.apache.spark.sql.types.IntegerType
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    })
-    if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"sorted_intersect requires array<string> inputs, got " +
-        s"${left.dataType.catalogString} and ${right.dataType.catalogString}")
+  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
+    case (ArrayType(StringType, _), ArrayType(StringType, _)) |
+        (ArrayType(LongType, _), ArrayType(LongType, _)) =>
+      TypeCheckResult.TypeCheckSuccess
+    case (l, r) => TypeCheckResult.TypeCheckFailure(
+      s"$fnName requires two array<string> or two array<bigint> inputs, got " +
+        s"${l.catalogString} and ${r.catalogString}")
   }
 
   override def nullSafeEval(l: Any, r: Any): Any = {
@@ -141,61 +65,80 @@ case class SortedIntersect(left: Expression, right: Expression)
     var j = 0
     var inter = 0
     while (i < na && j < nb) {
-      val x = a.getUTF8String(i)
-      val y = b.getUTF8String(j)
-      val c = if (x == null || y == null) {
-        if (x == null && y == null) 0 else if (x == null) -1 else 1
-      } else x.compareTo(y)
+      val xn = a.isNullAt(i)
+      val yn = b.isNullAt(j)
+      val c = if (xn || yn) { if (xn && yn) 0 else if (xn) -1 else 1 }
+        else if (longs) java.lang.Long.compareUnsigned(a.getLong(i), b.getLong(j))
+        else a.getUTF8String(i).compareTo(b.getUTF8String(j))
       if (c == 0) { inter += 1; i += 1; j += 1 }
       else if (c < 0) i += 1
       else j += 1
     }
-    inter
+    if (!jaccard) inter
+    else if (na == 0 && nb == 0) 0.0
+    else inter.toDouble / (na + nb - inter)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
-      val na = ctx.freshName("na")
-      val nb = ctx.freshName("nb")
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val inter = ctx.freshName("inter")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val c = ctx.freshName("c")
-      val utf8 = classOf[UTF8String].getName
+      val Seq(na, nb, i, j, inter, xn, yn, c) =
+        Seq("na", "nb", "i", "j", "inter", "xn", "yn", "c").map(ctx.freshName)
+      val cmp =
+        if (longs) s"java.lang.Long.compareUnsigned($a.getLong($i), $b.getLong($j))"
+        else s"$a.getUTF8String($i).compareTo($b.getUTF8String($j))"
+      val result =
+        if (jaccard) s"($na == 0 && $nb == 0) ? 0.0 : ((double) $inter) / ($na + $nb - $inter)"
+        else inter
       s"""
          |int $na = $a.numElements();
          |int $nb = $b.numElements();
          |int $i = 0; int $j = 0; int $inter = 0;
          |while ($i < $na && $j < $nb) {
-         |  $utf8 $x = $a.isNullAt($i) ? null : $a.getUTF8String($i);
-         |  $utf8 $y = $b.isNullAt($j) ? null : $b.getUTF8String($j);
-         |  int $c;
-         |  if ($x == null || $y == null) {
-         |    $c = ($x == null && $y == null) ? 0 : ($x == null ? -1 : 1);
-         |  } else {
-         |    $c = $x.compareTo($y);
-         |  }
+         |  boolean $xn = $a.isNullAt($i);
+         |  boolean $yn = $b.isNullAt($j);
+         |  int $c = ($xn || $yn) ? (($xn && $yn) ? 0 : ($xn ? -1 : 1)) : $cmp;
          |  if ($c == 0) { $inter++; $i++; $j++; }
          |  else if ($c < 0) { $i++; }
          |  else { $j++; }
          |}
-         |${ev.value} = $inter;
+         |${ev.value} = $result;
        """.stripMargin
     })
+}
 
+/** Jaccard similarity of two sorted distinct sets ([[SortedSetOverlap]]). */
+@ExpressionDescription(
+  usage = "sorted_jaccard(a, b) - Jaccard similarity of two sorted distinct string or bigint arrays.")
+case class SortedJaccard(left: Expression, right: Expression) extends SortedSetOverlap {
+  override protected def fnName: String = "sorted_jaccard"
+  override protected def jaccard: Boolean = true
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): SortedJaccard =
+    copy(left = newLeft, right = newRight)
+}
+
+/** Intersection COUNT of two sorted distinct sets ([[SortedSetOverlap]]),
+  * for consumers that need integer set algebra (`|∪| = |a| + |b| − |∩|`)
+  * instead of a pre-divided double: the prefix-filtered exact Jaccard join
+  * compares `|∩|·tDen ≥ tNum·|∪|` in pure integers, so no division may
+  * happen inside the expression. */
+@ExpressionDescription(
+  usage = "sorted_intersect(a, b) - intersection size of two sorted distinct string or bigint arrays.")
+case class SortedIntersect(left: Expression, right: Expression) extends SortedSetOverlap {
+  override protected def fnName: String = "sorted_intersect"
+  override protected def jaccard: Boolean = false
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SortedIntersect =
     copy(left = newLeft, right = newRight)
 }
 
 object SetSimilarity {
-  /** Column API: Jaccard of two sorted distinct string arrays. */
+  /** Column API: Jaccard of two sorted distinct string or bigint arrays. */
   def sortedJaccard(a: Column, b: Column): Column =
     Bridge.column(SortedJaccard(Bridge.expression(a), Bridge.expression(b)))
 
-  /** Column API: intersection count of two sorted distinct string arrays. */
+  /** Column API: intersection count of two sorted distinct string or
+    * bigint arrays. */
   def sortedIntersect(a: Column, b: Column): Column =
     Bridge.column(SortedIntersect(Bridge.expression(a), Bridge.expression(b)))
 }

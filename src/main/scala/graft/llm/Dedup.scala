@@ -194,12 +194,9 @@ object Dedup {
   private def lshVerifiedPairs(docs: DataFrame, setCol: String,
       numHashes: Int, bands: Int, threshold: Double, maxBucketSize: Int,
       rescue: Boolean = true,
-      // exact long-packed verification (r18): valid ONLY when every set
-      // element is ≤ 8 NUL-free bytes (char shingles of normalized text at
-      // shingleSize ≤ 8 — the caller asserts it); word-n-gram callers pass
-      // false and keep the string merge. Bit-identical either way
-      // (PackedSetsSpec); pack_shingle_set fails LOUDLY off-contract.
-      packedVerify: Boolean = false): DataFrame = {
+      // the set as the verify merge reads it: char-shingle callers pass
+      // [[packShingles]]; word-n-gram callers keep the string set
+      verifySet: Column => Column = identity): DataFrame = {
     val rowsPerBand = numHashes / bands
     require(bands * rowsPerBand == numHashes, "bands must divide numHashes")
     val minAgree = math.max(rowsPerBand, (numHashes * threshold * 0.3).floor.toInt)
@@ -239,25 +236,33 @@ object Dedup {
         .filter(col("__agree") >= minAgree)
         .select("id_a", "id_b")
     }
-    // custom linear-merge expressions: the generic array_intersect/union
-    // form builds two hash sets per pair and dominated the profile. The
-    // packed path merges primitive longs instead of per-element
-    // UTF8String allocations — same |∩|/|∪|, bit-identical division
-    // (pack is an order-preserving bijection; PackedSetsSpec) — and the
-    // pack runs once per DOC on the join build sides (below, reading the
-    // reused set exchange), never per pair.
-    val setSide = if (packedVerify)
-      docs.select(col("id"),
-        graft.functions.PackedSets.packShingleSet(col(setCol)).as("__set"))
-    else docs.select(col("id"), col(setCol).as("__set"))
-    def verifyJaccard(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      if (packedVerify) graft.functions.PackedSets.sortedJaccardLong(a, b)
-      else graft.functions.SetSimilarity.sortedJaccard(a, b)
-    prefiltered
+    jaccardVerified(prefiltered, docs, verifySet(col(setCol)), threshold)
+  }
+
+  /** The verify side of a char-shingle set: char shingles of normalized
+    * text are 1-byte NUL-free chars, so at `shingleSize ≤ 8` each packs
+    * exactly into one long ([[graft.functions.PackedSets]], r18) and the
+    * merge compares primitive longs instead of allocating a UTF8String per
+    * element — same |∩|/|∪|, bit-identical division (PackedSetsSpec).
+    * Longer shingles keep the string set; pack_shingle_set fails LOUDLY
+    * off-contract. */
+  private def packShingles(shingleSize: Int)(set: Column): Column =
+    if (shingleSize <= 8) graft.functions.PackedSets.packShingleSet(set) else set
+
+  /** Candidate pairs (id_a, id_b) → (id_a, id_b, jaccard ≥ `threshold`):
+    * both ids join `docs`' verify set back, and the linear-merge
+    * [[graft.functions.SetSimilarity.sortedJaccard]] scores each pair —
+    * the generic array_intersect/union form builds two hash sets per pair
+    * and dominated the profile. `set` is evaluated once per DOC on the
+    * join build sides (reading the reused set exchange), never per pair. */
+  private def jaccardVerified(cand: DataFrame, docs: DataFrame, set: Column,
+      threshold: Double): DataFrame = {
+    val setSide = docs.select(col("id"), set.as("__set"))
+    cand
       .join(setSide.select(col("id").as("id_a"), col("__set").as("set_a")), Seq("id_a"))
       .join(setSide.select(col("id").as("id_b"), col("__set").as("set_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
-        verifyJaccard(col("set_a"), col("set_b")).as("jaccard"))
+        graft.functions.SetSimilarity.sortedJaccard(col("set_a"), col("set_b")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -297,10 +302,8 @@ object Dedup {
       // at extreme duplicate density)
       rescue: Boolean = true): DataFrame = {
     val docs = shingleDocs(df, idCol, textCol, shingleSize)
-    // char shingles of normalized text are 1-byte chars, NUL-free — the
-    // packed long verification applies whenever they fit a long
     lshVerifiedPairs(docs, "sh", numHashes, bands, threshold, maxBucketSize,
-      rescue, packedVerify = shingleSize <= 8)
+      rescue, packShingles(shingleSize))
   }
 
   /** Near-deduplicated corpus: drops every document that has a near-dup
@@ -664,23 +667,9 @@ object Dedup {
     // keeps the verifier fed at ≤ 2×(rows in ≤8×-cap buckets).
     val cand = candidatePairs(fpRows, Seq("fp_val"), maxBucketSize,
       rescueLimit = 8 * maxBucketSize)
-    // packed long verification when shingles fit a long (see
-    // lshVerifiedPairs) — this path has NO signature prefilter, so every
-    // candidate pays the merge; the long merge is the r18 fast path
-    val packed = shingleSize <= 8
-    val setSide = if (packed)
-      docs.select(col("id"),
-        graft.functions.PackedSets.packShingleSet(col("sh")).as("__set"))
-    else docs.select(col("id"), col("sh").as("__set"))
-    def verifyJaccard(a: Column, b: Column) =
-      if (packed) graft.functions.PackedSets.sortedJaccardLong(a, b)
-      else graft.functions.SetSimilarity.sortedJaccard(a, b)
-    cand
-      .join(setSide.select(col("id").as("id_a"), col("__set").as("set_a")), Seq("id_a"))
-      .join(setSide.select(col("id").as("id_b"), col("__set").as("set_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        verifyJaccard(col("set_a"), col("set_b")).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
+    // this path has NO signature prefilter, so every candidate pays the
+    // merge — the packed long merge is the r18 fast path
+    jaccardVerified(cand, docs, packShingles(shingleSize)(col("sh")), threshold)
   }
 
   /** Portable token hash: first 15 hex chars of md5 parsed as a 60-bit int.
@@ -892,24 +881,18 @@ object Dedup {
     val cand = fb.join(ib, Seq("band_idx", "band_key"))
       .select("fresh_id", "hist_id")
       .distinct()
-    // packed long verification when shingles fit a long (see
-    // lshVerifiedPairs); the index stores string sets, both sides pack at
-    // read time — once per doc, bit-identical jaccard (PackedSetsSpec)
-    val packed = shingleSize <= 8
-    def packIf(c: Column): Column =
-      if (packed) graft.functions.PackedSets.packShingleSet(c) else c
-    def verifyJaccard(a: Column, b: Column) =
-      if (packed) graft.functions.PackedSets.sortedJaccardLong(a, b)
-      else graft.functions.SetSimilarity.sortedJaccard(a, b)
+    // the index stores string sets; both sides pack at read time
+    // ([[packShingles]]) — once per doc
     val hist = spark.read.parquet(s"$path/docs")
-      .select(col("id").as("hist_id"), packIf(col("sh")).as("hist_sh"))
+      .select(col("id").as("hist_id"), packShingles(shingleSize)(col("sh")).as("hist_sh"))
     // pin the verify stage's parallelism (same rationale as candidatePairs)
     graft.sources.Spread.pinParallel(cand, col("fresh_id"))
-      .join(freshDocs.select(col("id").as("fresh_id"), packIf(col("sh")).as("fresh_sh")),
-        Seq("fresh_id"))
+      .join(freshDocs.select(col("id").as("fresh_id"),
+        packShingles(shingleSize)(col("sh")).as("fresh_sh")), Seq("fresh_id"))
       .join(hist, Seq("hist_id"))
       .select(col("fresh_id"), col("hist_id"),
-        verifyJaccard(col("fresh_sh"), col("hist_sh")).as("jaccard"))
+        graft.functions.SetSimilarity.sortedJaccard(
+          col("fresh_sh"), col("hist_sh")).as("jaccard"))
       .filter(col("jaccard") >= threshold)
   }
 
@@ -950,12 +933,7 @@ object Dedup {
     * [[stripBoilerplateBlocks]]) so their oracles replay ONE slicing rule. */
   private def tokenBlocks(
       df: DataFrame, idCol: String, textCol: String, blockTokens: Int): DataFrame = {
-    val toks = graft.sources.Spread.spread(
-        df.select(col(idCol).as("id"), col(textCol).as("__text")))
-      .select(col("id"),
-        TextStats.tokens(normalizeText(col("__text"))).as("__toks"))
-      .filter(size(col("__toks")) > 0)
-      .repartition(col("id"))
+    val toks = tokenDocs(df, idCol, textCol)
     val nBlocks = expr(s"(size(__toks) + ${blockTokens - 1}) DIV $blockTokens")
     toks
       .select(col("id"), posexplode(transform(
@@ -1035,19 +1013,7 @@ object Dedup {
       threshold: Double = 0.3,
       numHashes: Int = 32,
       bands: Int = 16): DataFrame = {
-    // the empty-doc filter must run on __toks BEFORE the repartition
-    // barrier: a trailing filter(size(gr) > 0) gets predicate-pushed below
-    // the barrier, substituting the whole ngram expression — with the
-    // tokenization inlined into its per-position lambda — into the filter,
-    // which re-normalizes and re-tokenizes the text once per ngram
-    // position (~20 s of the query at sf0.1). Non-empty tokens ⇒ ≥1 ngram,
-    // so the predicates are equivalent.
-    val docs = graft.sources.Spread.spread(
-        df.select(col(idCol).as("id"), col(textCol).as("__text")))
-      .select(col("id"),
-        TextStats.tokens(normalizeText(col("__text"))).as("__toks"))
-      .filter(size(col("__toks")) > 0)
-      .repartition(col("id"))
+    val docs = tokenDocs(df, idCol, textCol)
       .select(col("id"), array_sort(wordNgrams(col("__toks"), n)).as("gr"))
     lshVerifiedPairs(docs, "gr", numHashes = numHashes, bands = bands,
       threshold = threshold, maxBucketSize = 256)
@@ -1094,25 +1060,12 @@ object Dedup {
       textCol: String,
       tNum: Int = 1,
       tDen: Int = 2,
-      ngram: Int = 1): DataFrame = {
-    // empty-token filter BEFORE the barrier, grams AFTER it — the
-    // ngramJaccardPairs inlining caveat (a pushed-down size(grams) filter
-    // re-tokenizes per gram position)
-    val base = graft.sources.Spread.spread(
-        df.select(col(idCol).as("id"), col(textCol).as("__text")))
-      .select(col("id"),
-        TextStats.tokens(normalizeText(col("__text"))).as("__toks"))
-      .filter(size(col("__toks")) > 0)
-      .repartition(col("id"))
+      ngram: Int = 1): DataFrame =
     // NB: element cardinality decides whether the prefix filter can prune.
     // Word UNIGRAMS over a small closed vocabulary (every doc holds most of
     // the vocab) make almost every pair qualify and no prefix rare — use
     // ngram ≥ 2 (or char shingles via the sets variant) for natural text.
-    val sets = if (ngram <= 1) array_distinct(col("__toks"))
-      else wordNgrams(col("__toks"), ngram)
-    exactJaccardJoinSets(
-      base.select(col("id"), sets.as("__set")), "id", "__set", tNum, tDen)
-  }
+    exactJaccardJoinSets(textGramSets(df, idCol, textCol, ngram), "id", "__set", tNum, tDen)
 
   /** [[exactJaccardJoin]] over a precomputed set column (distinct array
     * elements). See that method for the algorithm and scale notes. */
@@ -1122,66 +1075,12 @@ object Dedup {
       setCol: String,
       tNum: Int,
       tDen: Int): DataFrame = {
-    require(tNum > 0 && tDen > 0 && tNum <= tDen,
-      s"threshold must be a rational in (0, 1]: got $tNum/$tDen")
-    // ONE shared (id, lex-sorted set) frame behind a repartition exchange.
-    // Its four consumers — the df aggregate, the df-order rebuild, and the
-    // two verification joins — all reference exactly (id, __lex), so their
-    // exchange subtrees stay canonically identical and ReusedExchange
-    // computes the frame once (divergent column pruning across consumers
-    // is what forks the subtrees and re-runs the input; the lshVerifiedPairs
-    // motif).
-    // the explicit isnotnull(id) keeps the branches canonically identical
-    // (the verify joins infer it on their branches, the df aggregate's
-    // branch doesn't); the localCheckpoint then materializes the tokenized
-    // corpus ONCE — this frame has four consumers (df aggregate, df-order
-    // rebuild, both verification joins) plus the prefix self-join's two
-    // legs above it, and exchange reuse alone leaves the set-building
-    // expression re-evaluated on every non-identical branch (measured 5×
-    // the checkpointed runtime at sf0.1). One linear materialization of
-    // the (id, sorted set) index is the trade every production AllPairs
-    // implementation makes. The ConnectedComponents/PageRank house rule.
-    // TWO-stage materialization, measured not cosmetic: evaluating
-    // filter(size)+array_sort directly over an unmaterialized set
-    // expression (e.g. the wrapper's wordNgrams projection) re-evaluates
-    // the expression ~20× per row at sf0.1 (16.1 s vs 0.84 s for one
-    // clean pass) — checkpoint the RAW sets first (one evaluation), then
-    // derive the sorted index from materialized rows (sub-second).
-    val raw = df
+    requireRational(tNum, tDen)
+    val docs = lexIndex(df
       .filter(col(idCol).isNotNull)
-      .select(col(idCol).as("id"), col(setCol).as("__tk"))
-      .repartition(col("id"))
-      .localCheckpoint()
-    val docs = raw
-      .filter(size(col("__tk")) > 0)
-      .select(col("id"), array_sort(col("__tk")).as("__lex"))
-      .repartition(col("id"))
-      .localCheckpoint()
-    // global ascending document frequency (map-side combined, vocab-scale)
-    val tokDf = docs.select(explode(col("__lex")).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("__df"))
-    // per doc: tokens re-sorted by (df, tok) — rarest first. Consumed once
-    // (prefix generation only); verification reads `docs` directly.
-    val ordered = docs.select(col("id"), explode(col("__lex")).as("tok"))
-      .join(tokDf, "tok")
-      .groupBy("id")
-      .agg(array_sort(collect_list(struct(col("__df"), col("tok")))).as("__dt"))
-      .select(col("id"),
-        transform(col("__dt"), x => x.getField("tok")).as("__rare"),
-        size(col("__dt")).as("__sz"))
-    // prefix length sz − ceil(t·sz) + 1, with exact integer ceil
-    val prefLen = col("__sz") -
-      floor((col("__sz") * tNum + (tDen - 1)) / tDen).cast("int") + 1
-    val pref = ordered.select(col("id"), col("__sz"),
-      explode(slice(col("__rare"), lit(1), prefLen)).as("tok"))
-      .repartition(col("tok"))
-    val cand = pref.select(col("id").as("id_a"), col("__sz").as("__sa"), col("tok"))
-      .join(pref.select(col("id").as("id_b"), col("__sz").as("__sb"), col("tok")), "tok")
-      .filter(col("id_a") < col("id_b"))
-      // Jaccard ≥ t forces min·tDen ≥ tNum·max (exact integers)
-      .filter(least(col("__sa"), col("__sb")) * tDen >=
-        greatest(col("__sa"), col("__sb")) * tNum)
-      .select("id_a", "id_b").distinct()
+      .select(col(idCol).as("id"), col(setCol).as("__tk")), Seq("id"))
+    val cand = prefixJaccardCandidates(docs, Seq("id"), SelfA, SelfB, tNum, tDen,
+        Some(col("id_a") < col("id_b")))
       // candidate mass AFTER the distinct: the DISTINCT candidate-pair
       // count, i.e. the verified-join input that verification cost is
       // linear in — NOT the raw pre-distinct enumeration (a pair generated
@@ -1192,19 +1091,7 @@ object Dedup {
       // two exact joins may share one query plan.
       .observe(s"graft_exact_jaccard_${candSeq.incrementAndGet()}",
         count(lit(1)).as("n_candidates"))
-    // pin the verify stage's parallelism (same rationale as candidatePairs)
-    graft.sources.Spread.pinParallel(cand, col("id_a"))
-      .join(docs.select(col("id").as("id_a"), col("__lex").as("__la")), Seq("id_a"))
-      .join(docs.select(col("id").as("id_b"), col("__lex").as("__lb")), Seq("id_b"))
-      // linear merge on pre-sorted arrays (pairs outnumber docs; the
-      // hash-set array_intersect/union form dominates the profile) and
-      // |∪| = |a| + |b| − |∩| keeps everything integer
-      .withColumn("n_intersect",
-        graft.functions.SetSimilarity.sortedIntersect(col("__la"), col("__lb")))
-      .withColumn("n_union",
-        size(col("__la")) + size(col("__lb")) - col("n_intersect"))
-      .filter(col("n_intersect") * tDen >= col("n_union") * tNum)
-      .select("id_a", "id_b", "n_intersect", "n_union")
+    jaccardAtLeast(withOverlap(cand, docs, SelfA, SelfB), SelfA, SelfB, tNum, tDen)
   }
 
   /** [[exactJaccardJoin]] across TWO corpora (R-S join): every (left,
@@ -1223,22 +1110,10 @@ object Dedup {
   def exactJaccardJoinBetween(
       left: DataFrame, lIdCol: String, lTextCol: String,
       right: DataFrame, rIdCol: String, rTextCol: String,
-      tNum: Int, tDen: Int, ngram: Int = 1): DataFrame = {
-    def sets(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-      val base = graft.sources.Spread.spread(
-          df.select(col(idCol).as("id"), col(textCol).as("__text")))
-        .select(col("id"),
-          TextStats.tokens(normalizeText(col("__text"))).as("__toks"))
-        .filter(size(col("__toks")) > 0)
-        .repartition(col("id"))
-      val s = if (ngram <= 1) array_distinct(col("__toks"))
-        else wordNgrams(col("__toks"), ngram)
-      base.select(col("id"), s.as("__set"))
-    }
+      tNum: Int, tDen: Int, ngram: Int = 1): DataFrame =
     exactJaccardJoinBetweenSets(
-      sets(left, lIdCol, lTextCol), "id", "__set",
-      sets(right, rIdCol, rTextCol), "id", "__set", tNum, tDen)
-  }
+      textGramSets(left, lIdCol, lTextCol, ngram), "id", "__set",
+      textGramSets(right, rIdCol, rTextCol, ngram), "id", "__set", tNum, tDen)
 
   /** [[exactJaccardJoinBetween]] over precomputed set columns. See
     * [[exactJaccardJoinSets]] for the shared plan-shape notes (checkpointed
@@ -1247,58 +1122,163 @@ object Dedup {
       left: DataFrame, lIdCol: String, lSetCol: String,
       right: DataFrame, rIdCol: String, rSetCol: String,
       tNum: Int, tDen: Int): DataFrame = {
-    require(tNum > 0 && tDen > 0 && tNum <= tDen,
-      s"threshold must be a rational in (0, 1]: got $tNum/$tDen")
-    // same two-stage materialization as exactJaccardJoinSets (see the
-    // measured re-evaluation note there)
-    val tagged = left
+    requireRational(tNum, tDen)
+    val docs = lexIndex(left
       .filter(col(lIdCol).isNotNull)
       .select(lit(0).as("__side"), col(lIdCol).as("id"), col(lSetCol).as("__tk"))
       .unionAll(right
         .filter(col(rIdCol).isNotNull)
-        .select(lit(1).as("__side"), col(rIdCol).as("id"), col(rSetCol).as("__tk")))
-      .repartition(col("__side"), col("id"))
-      .localCheckpoint()
-    val docs = tagged
+        .select(lit(1).as("__side"), col(rIdCol).as("id"), col(rSetCol).as("__tk"))),
+      Seq("__side", "id"))
+    val cand = prefixJaccardCandidates(docs, Seq("__side", "id"), LeftL, RightR,
+      tNum, tDen, None)
+    jaccardAtLeast(withOverlap(cand, docs, LeftL, RightR), LeftL, RightR, tNum, tDen)
+  }
+
+  /** One side of a prefix-filter join, named by `tag`: its id `id_<tag>`,
+    * set size `__s<tag>` and lex-sorted set `__l<tag>`; `rows` picks the
+    * side's rows out of the shared index (all of them in a self-join). */
+  private case class JoinSide(tag: String, rows: DataFrame => DataFrame) {
+    def id: String = s"id_$tag"
+    def sz: String = s"__s$tag"
+    def lex: String = s"__l$tag"
+  }
+  private val SelfA = JoinSide("a", identity)
+  private val SelfB = JoinSide("b", identity)
+  private val LeftL = JoinSide("l", _.filter(col("__side") === 0))
+  private val RightR = JoinSide("r", _.filter(col("__side") === 1))
+
+  private def requireRational(tNum: Int, tDen: Int): Unit =
+    require(tNum > 0 && tDen > 0 && tNum <= tDen,
+      s"threshold must be a rational in (0, 1]: got $tNum/$tDen")
+
+  /** (id, __toks): each doc's normalized word tokens, empty docs dropped
+    * BEFORE the id exchange. The empty-doc filter must run on __toks
+    * before the barrier: a trailing filter on a gram set derived above it
+    * gets predicate-pushed below the barrier, substituting the whole gram
+    * expression — with the tokenization inlined into its per-position
+    * lambda — into the filter, which re-normalizes and re-tokenizes the
+    * text once per gram position (~20 s of ngramJaccardPairs at sf0.1).
+    * Non-empty tokens ⇒ ≥1 gram, so the predicates are equivalent. */
+  private def tokenDocs(df: DataFrame, idCol: String, textCol: String): DataFrame =
+    graft.sources.Spread.spread(
+        df.select(col(idCol).as("id"), col(textCol).as("__text")))
+      .select(col("id"),
+        TextStats.tokens(normalizeText(col("__text"))).as("__toks"))
+      .filter(size(col("__toks")) > 0)
+      .repartition(col("id"))
+
+  /** Text → (id, __set) distinct word-gram sets, the exact Jaccard joins'
+    * head: grams are built AFTER [[tokenDocs]]' id exchange. */
+  private def textGramSets(df: DataFrame, idCol: String, textCol: String,
+      ngram: Int): DataFrame =
+    tokenDocs(df, idCol, textCol).select(col("id"), gramSet(col("__toks"), ngram).as("__set"))
+
+  /** Distinct tokens (`ngram ≤ 1`) or distinct word n-grams of a
+    * materialized token array. */
+  private def gramSet(toks: Column, ngram: Int): Column =
+    if (ngram <= 1) array_distinct(toks) else wordNgrams(toks, ngram)
+
+  /** The prefix-filter joins' sorted-set index: `(keys…, __tk)` rows →
+    * `(keys…, __lex)`, each non-empty set lex-sorted, materialized once.
+    *
+    * ONE shared frame behind a repartition exchange. Its consumers — the df
+    * aggregate, the df-order rebuild, and the verification joins — all
+    * reference exactly (keys…, __lex), so their exchange subtrees stay
+    * canonically identical and ReusedExchange computes the frame once
+    * (divergent column pruning across consumers is what forks the subtrees
+    * and re-runs the input; the lshVerifiedPairs motif). Callers filter
+    * isnotnull(id) up front to keep the branches canonically identical (the
+    * verify joins infer it on their branches, the df aggregate's branch
+    * doesn't); the localCheckpoint then materializes the tokenized corpus
+    * ONCE — exchange reuse alone leaves the set-building expression
+    * re-evaluated on every non-identical branch (measured 5× the
+    * checkpointed runtime at sf0.1). One linear materialization of the
+    * (id, sorted set) index is the trade every production AllPairs
+    * implementation makes. The ConnectedComponents/PageRank house rule.
+    * TWO-stage materialization, measured not cosmetic: evaluating
+    * filter(size)+array_sort directly over an unmaterialized set
+    * expression (e.g. the wrapper's wordNgrams projection) re-evaluates
+    * the expression ~20× per row at sf0.1 (16.1 s vs 0.84 s for one
+    * clean pass) — checkpoint the RAW sets first (one evaluation), then
+    * derive the sorted index from materialized rows (sub-second). */
+  private def lexIndex(sets: DataFrame, keys: Seq[String]): DataFrame = {
+    val by = keys.map(col)
+    sets.repartition(by: _*).localCheckpoint()
       .filter(size(col("__tk")) > 0)
-      .select(col("__side"), col("id"), array_sort(col("__tk")).as("__lex"))
-      .repartition(col("__side"), col("id"))
+      .select(by :+ array_sort(col("__tk")).as("__lex"): _*)
+      .repartition(by: _*)
       .localCheckpoint()
+  }
+
+  /** Per doc of a [[lexIndex]]: `(keys…, __rare, __sz)` — its tokens
+    * re-sorted by (global ascending document frequency, token), rarest
+    * first, and its set size. The df is one map-side-combined aggregate
+    * (vocab-scale); the re-sort a per-doc `array_sort` after the
+    * token→df equi-join. */
+  private def rarestFirst(docs: DataFrame, keys: Seq[String]): DataFrame = {
+    val by = keys.map(col)
     val tokDf = docs.select(explode(col("__lex")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("__df"))
-    val ordered = docs
-      .select(col("__side"), col("id"), explode(col("__lex")).as("tok"))
+    docs.select(by :+ explode(col("__lex")).as("tok"): _*)
       .join(tokDf, "tok")
-      .groupBy("__side", "id")
+      .groupBy(keys.head, keys.tail: _*)
       .agg(array_sort(collect_list(struct(col("__df"), col("tok")))).as("__dt"))
-      .select(col("__side"), col("id"),
+      .select(by ++ Seq(
         transform(col("__dt"), x => x.getField("tok")).as("__rare"),
-        size(col("__dt")).as("__sz"))
+        size(col("__dt")).as("__sz")): _*)
+  }
+
+  /** One `tok` row per token of a [[rarestFirst]] doc's prefix: its first
+    * `sz − ⌈t·sz⌉ + 1` rarest tokens, with exact integer ceil. */
+  private def prefixTokens(tNum: Int, tDen: Int): Column = {
     val prefLen = col("__sz") -
       floor((col("__sz") * tNum + (tDen - 1)) / tDen).cast("int") + 1
-    val pref = ordered.select(col("__side"), col("id"), col("__sz"),
-      explode(slice(col("__rare"), lit(1), prefLen)).as("tok"))
-      .repartition(col("tok"))
-    val cand = pref.filter(col("__side") === 0)
-      .select(col("id").as("id_l"), col("__sz").as("__sl"), col("tok"))
-      .join(pref.filter(col("__side") === 1)
-        .select(col("id").as("id_r"), col("__sz").as("__sr"), col("tok")), "tok")
-      .filter(least(col("__sl"), col("__sr")) * tDen >=
-        greatest(col("__sl"), col("__sr")) * tNum)
-      .select("id_l", "id_r").distinct()
-    // pin the verify stage's parallelism (same rationale as candidatePairs)
-    graft.sources.Spread.pinParallel(cand, col("id_l"))
-      .join(docs.filter(col("__side") === 0)
-        .select(col("id").as("id_l"), col("__lex").as("__ll")), Seq("id_l"))
-      .join(docs.filter(col("__side") === 1)
-        .select(col("id").as("id_r"), col("__lex").as("__lr")), Seq("id_r"))
-      .withColumn("n_intersect",
-        graft.functions.SetSimilarity.sortedIntersect(col("__ll"), col("__lr")))
-      .withColumn("n_union",
-        size(col("__ll")) + size(col("__lr")) - col("n_intersect"))
-      .filter(col("n_intersect") * tDen >= col("n_union") * tNum)
-      .select("id_l", "id_r", "n_intersect", "n_union")
+    explode(slice(col("__rare"), lit(1), prefLen)).as("tok")
   }
+
+  /** Distinct Jaccard candidates `(a.id, b.id)`: docs sharing a prefix
+    * token (the equi-join on `tok` plays the LSH bucket role), passing
+    * `pairFilter` and the length filter Jaccard ≥ t forces,
+    * min·tDen ≥ tNum·max (exact integers). */
+  private def prefixJaccardCandidates(docs: DataFrame, keys: Seq[String],
+      a: JoinSide, b: JoinSide, tNum: Int, tDen: Int,
+      pairFilter: Option[Column]): DataFrame = {
+    val pref = rarestFirst(docs, keys)
+      .select(keys.map(col) ++ Seq(col("__sz"), prefixTokens(tNum, tDen)): _*)
+      .repartition(col("tok"))
+    def leg(s: JoinSide) =
+      s.rows(pref).select(col("id").as(s.id), col("__sz").as(s.sz), col("tok"))
+    val joined = leg(a).join(leg(b), "tok")
+    pairFilter.fold(joined)(joined.filter)
+      .filter(least(col(a.sz), col(b.sz)) * tDen >=
+        greatest(col(a.sz), col(b.sz)) * tNum)
+      .select(a.id, b.id).distinct()
+  }
+
+  /** The pinned overlap-verify join: each candidate pair `(a.id, b.id)`
+    * joins both lex-sorted sets back from the index by id and gets its
+    * exact `n_intersect` from the linear merge on pre-sorted arrays (pairs
+    * outnumber docs; the hash-set array_intersect/union form dominates the
+    * profile). The verify stage's parallelism is pinned (same rationale as
+    * candidatePairs). */
+  private def withOverlap(cand: DataFrame, docs: DataFrame,
+      a: JoinSide, b: JoinSide): DataFrame =
+    graft.sources.Spread.pinParallel(cand, col(a.id))
+      .join(a.rows(docs).select(col("id").as(a.id), col("__lex").as(a.lex)), Seq(a.id))
+      .join(b.rows(docs).select(col("id").as(b.id), col("__lex").as(b.lex)), Seq(b.id))
+      .withColumn("n_intersect",
+        graft.functions.SetSimilarity.sortedIntersect(col(a.lex), col(b.lex)))
+
+  /** Verified pairs at Jaccard ≥ `tNum/tDen` with their integer overlap:
+    * |∪| = |a| + |b| − |∩| keeps everything integer. */
+  private def jaccardAtLeast(verified: DataFrame, a: JoinSide, b: JoinSide,
+      tNum: Int, tDen: Int): DataFrame =
+    verified
+      .withColumn("n_union",
+        size(col(a.lex)) + size(col(b.lex)) - col("n_intersect"))
+      .filter(col("n_intersect") * tDen >= col("n_union") * tNum)
+      .select(a.id, b.id, "n_intersect", "n_union")
 
   /** EXACT set-containment join (directed): every ordered pair (a, b),
     * a ≠ b, where document b contains at least `tNum/tDen` of a's n-gram
@@ -1334,40 +1314,19 @@ object Dedup {
       tNum: Int = 2,
       tDen: Int = 3,
       ngram: Int = 3): DataFrame = {
-    require(tNum > 0 && tDen > 0 && tNum <= tDen,
-      s"threshold must be a rational in (0, 1]: got $tNum/$tDen")
-    // two-stage materialization — the exactJaccardJoinSets measured
-    // re-evaluation note applies verbatim
-    val raw = graft.sources.Spread.spread(df
+    requireRational(tNum, tDen)
+    // its own head: grams are built BEFORE the id exchange, which is the
+    // index's first stage
+    val docs = lexIndex(graft.sources.Spread.spread(df
         .filter(col(idCol).isNotNull)
         .select(col(idCol).as("id"), col(textCol).as("__text")))
       .select(col("id"),
         TextStats.tokens(normalizeText(col("__text"))).as("__toks"))
       .filter(size(col("__toks")) > 0)
-      .select(col("id"),
-        (if (ngram <= 1) array_distinct(col("__toks"))
-         else wordNgrams(col("__toks"), ngram)).as("__tk"))
-      .repartition(col("id"))
-      .localCheckpoint()
-    val docs = raw
-      .filter(size(col("__tk")) > 0)
-      .select(col("id"), array_sort(col("__tk")).as("__lex"))
-      .repartition(col("id"))
-      .localCheckpoint()
-    val tokDf = docs.select(explode(col("__lex")).as("tok"))
-      .groupBy("tok").agg(count(lit(1)).as("__df"))
-    val ordered = docs.select(col("id"), explode(col("__lex")).as("tok"))
-      .join(tokDf, "tok")
-      .groupBy("id")
-      .agg(array_sort(collect_list(struct(col("__df"), col("tok")))).as("__dt"))
-      .select(col("id"),
-        transform(col("__dt"), x => x.getField("tok")).as("__rare"),
-        size(col("__dt")).as("__sz"))
+      .select(col("id"), gramSet(col("__toks"), ngram).as("__tk")), Seq("id"))
     // probe prefix: sz − ceil(t·sz) + 1 rarest tokens
-    val prefLen = col("__sz") -
-      floor((col("__sz") * tNum + (tDen - 1)) / tDen).cast("int") + 1
-    val pref = ordered.select(col("id").as("id_a"), col("__sz").as("__sa"),
-      explode(slice(col("__rare"), lit(1), prefLen)).as("tok"))
+    val pref = rarestFirst(docs, Seq("id"))
+      .select(col("id").as("id_a"), col("__sz").as("__sa"), prefixTokens(tNum, tDen))
     // index side: FULL postings (id, every token) — containment admits no
     // index-side prefix; built from `docs` so the exchange subtree is the
     // checkpointed frame, not a second tokenization
@@ -1379,13 +1338,8 @@ object Dedup {
       // b must hold at least ⌈t·|Gₐ|⌉ tokens to contain t of a
       .filter(col("__sz_b") * tDen >= col("__sa") * tNum)
       .select("id_a", "id_b").distinct()
-    // pin the verify stage's parallelism (same rationale as candidatePairs)
-    graft.sources.Spread.pinParallel(cand, col("id_a"))
-      .join(docs.select(col("id").as("id_a"), col("__lex").as("__la")), Seq("id_a"))
-      .join(docs.select(col("id").as("id_b"), col("__lex").as("__lb")), Seq("id_b"))
-      .withColumn("n_intersect",
-        graft.functions.SetSimilarity.sortedIntersect(col("__la"), col("__lb")))
-      .withColumn("n_a", size(col("__la")))
+    withOverlap(cand, docs, SelfA, SelfB)
+      .withColumn("n_a", size(col(SelfA.lex)))
       .filter(col("n_intersect") * tDen >= col("n_a") * tNum)
       .select("id_a", "id_b", "n_intersect", "n_a")
   }

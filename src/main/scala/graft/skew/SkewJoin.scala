@@ -207,6 +207,17 @@ object SkewJoin {
       replicationUdf(bc, conf.CMSeps, conf.replicationFactor, cap)(cmsKey(usingColumns)))
   }
 
+  /** THE salt layout's fragment id: a row of a key replicated `rep` times
+    * draws its fragment uniformly from `[0, rep)`. */
+  private[graft] def fragmentId(rep: Column, seed: Long): Column =
+    floor(rand(seed) * rep).cast("int")
+
+  /** THE salt layout's replica ids: a row of a key replicated `rep` times
+    * explodes to one copy per fragment id `0 until rep`, so every fragment
+    * meets exactly one copy. */
+  private[graft] def replicaIds(rep: Column): Column =
+    explode(sequence(lit(0), rep - 1))
+
   private def normalize(joinType: String): String =
     joinType.toLowerCase(java.util.Locale.ROOT).replace("_", "") match {
       case "inner"                       => "inner"
@@ -251,11 +262,11 @@ object SkewJoin {
       left.sparkSession, sketch(left, usingColumns, conf), usingColumns, conf)
     val ls = left
       .withColumn(RepL, rep)
-      .withColumn(SaltL, floor(rand(conf.CMSseed.toLong) * col(RepL)).cast("int"))
+      .withColumn(SaltL, fragmentId(col(RepL), conf.CMSseed.toLong))
       .drop(RepL)
     val rKeys = right.select(usingColumns.map(col): _*).distinct()
       .withColumn(RepL, rep)
-      .withColumn(SaltL, explode(sequence(lit(0), col(RepL) - 1)))
+      .withColumn(SaltL, replicaIds(col(RepL)))
       .drop(RepL)
     ls.join(rKeys, usingColumns :+ SaltL, joinType).drop(SaltL)
   }
@@ -336,8 +347,8 @@ object SkewJoin {
       val salted = base
         .withColumn(RepL, repL)
         .withColumn(RepR, repR)
-        .withColumn(SaltL, floor(rand(seed) * col(RepL)).cast("int"))
-        .withColumn(SaltR, explode(sequence(lit(0), col(RepR) - 1)))
+        .withColumn(SaltL, fragmentId(col(RepL), seed))
+        .withColumn(SaltR, replicaIds(col(RepR)))
       if (outer) salted.drop(RepL) else salted.drop(RepL, RepR)
     }
     val rs = {
@@ -348,8 +359,8 @@ object SkewJoin {
       val salted = base
         .withColumn(RepL, repL)
         .withColumn(RepR, repR)
-        .withColumn(SaltR, floor(rand(seed + 1) * col(RepR)).cast("int"))
-        .withColumn(SaltL, explode(sequence(lit(0), col(RepL) - 1)))
+        .withColumn(SaltR, fragmentId(col(RepR), seed + 1))
+        .withColumn(SaltL, replicaIds(col(RepL)))
       if (outer) salted.drop(RepR) else salted.drop(RepL, RepR)
     }
 

@@ -9,6 +9,8 @@ import org.apache.spark.sql.execution.streaming.runtime.StreamingRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.skew.SkewJoin
+
 /** Structured Streaming operators over the events stream: watermarked
   * windowed aggregation, gap-based sessionization, and a salted
   * stream-static join (the streaming face of the skew-join idea).
@@ -130,10 +132,8 @@ object StreamOps {
       hotKeySource: Option[DataFrame] = None,
       seed: Long = 1L): DataFrame = {
     val repCol = replicationCol(static, usingColumns, conf, hotKeySource)
-    val salted = stream.withColumn("__graft_salt",
-      floor(rand(seed) * repCol).cast("int"))
-    val replicated = static.withColumn("__graft_salt",
-      explode(sequence(lit(0), repCol - 1)))
+    val salted = stream.withColumn("__graft_salt", SkewJoin.fragmentId(repCol, seed))
+    val replicated = static.withColumn("__graft_salt", SkewJoin.replicaIds(repCol))
     salted.join(replicated, usingColumns :+ "__graft_salt", "inner")
       .drop("__graft_salt")
   }
@@ -146,7 +146,6 @@ object StreamOps {
       usingColumns: Seq[String],
       conf: graft.skew.SkewJoinConf,
       hotKeySource: Option[DataFrame]): Column = {
-    import graft.skew.SkewJoin
     val cms = SkewJoin.sketch(hotKeySource.getOrElse(static), usingColumns, conf)
     SkewJoin.replicationCol(static.sparkSession, cms, usingColumns, conf)
   }
@@ -241,12 +240,12 @@ object StreamOps {
       watermark: String,
       seed: Long): DataFrame = {
     val l = left
-      .withColumn("__graft_salt", floor(rand(seed) * repCol).cast("int"))
+      .withColumn("__graft_salt", SkewJoin.fragmentId(repCol, seed))
       .withWatermark("ts", watermark)
     // salt the right side BEFORE the r_-renames so the rep probe sees the
     // original key column names
     val rSalted = right
-      .withColumn("__graft_r_salt", explode(sequence(lit(0), repCol - 1)))
+      .withColumn("__graft_r_salt", SkewJoin.replicaIds(repCol))
     val r = usingCols.foldLeft(
         rSalted.withColumnRenamed("ts", "r_ts")
           .withWatermark("r_ts", watermark)) {

@@ -383,6 +383,13 @@ class LlmSpec extends AnyFunSuite {
       .collect().map(r2 => (r2.getInt(0), r2.getInt(1), r2.getLong(2))).toList
     def q24(x: Double) = math.floor(x * 16777216.0).toLong
     assert(gm == List((1, 1, q24(1.0)), (1, 2, q24(2.0)), (2, 2, q24(4.0))))
+    // the set-overlap kernel takes two string or two bigint sets, nothing else
+    Seq("array('a')" -> "array(1L)", "array(1)" -> "array(2)").foreach { case (a, b) =>
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"SELECT sorted_jaccard($a, $b) AS j").collect()
+      }
+      assert(e.getMessage.contains("sorted_jaccard requires"), e.getMessage)
+    }
   }
 
   test("kmv_kmins aggregate is callable from SQL and k must be a literal") {

@@ -45,7 +45,8 @@ class SkewJoinSpec extends AnyFunSuite {
 
   test("skewJoin ≡ plain join when unmatched rows exist on both sides") {
     // customer ⋈ orders on custkey: some customers have no orders; also
-    // filter orders so some orders lose their customer → both anti legs used.
+    // filter orders so some orders lose their customer → unmatched rows on
+    // both sides, whose padded copies the window must keep exactly once.
     val o = orders.withColumnRenamed("o_custkey", "c_custkey")
     val c = customer.filter(col("c_custkey") % 3 =!= 0)
     Seq("left_outer", "right_outer", "full_outer").foreach { jt =>
