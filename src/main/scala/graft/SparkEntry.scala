@@ -137,8 +137,8 @@ object SparkEntry {
     }),
 
     "skewjoin_left" -> ((s, dir) => {
-      // ~0.4% of orders have no lineitems: unmatched rows, whose padded
-      // copies the resolution window must keep exactly once.
+      // ~0.4% of orders have no lineitems: unmatched rows, each of which
+      // must come out padded exactly once.
       val li = t(s, dir, "lineitem").withColumnRenamed("l_orderkey", "o_orderkey")
       t(s, dir, "orders")
         .skewJoin(li, Seq("o_orderkey"), "left_outer", testConf)

@@ -771,13 +771,9 @@ object Dedup {
     val docs = spark.read.parquet(s"$path/docs")
     val bandsDf = bandRows(signedDocs(docs, "sh", numHashes), numHashes, bands)
       .persist()
-    try {
-      val hot = bandsDf.groupBy("band_idx", "band_key")
-        .agg(count(lit(1)).as("__n")).filter(col("__n") > maxBucketSize)
-        .select("band_idx", "band_key")
-      bandsDf.join(broadcast(hot), Seq("band_idx", "band_key"), "left_anti")
-        .write.mode("overwrite").parquet(s"$path/bands")
-    } finally bandsDf.unpersist()
+    try dropOversizedBuckets(bandsDf, maxBucketSize)
+      .write.mode("overwrite").parquet(s"$path/bands")
+    finally bandsDf.unpersist()
     // parameter manifest: probing with different parameters produces band
     // keys from a different space and would silently report zero recall.
     // Written through the Hadoop FileSystem resolved from `path` — the
@@ -786,6 +782,16 @@ object Dedup {
     writeIndexManifest(spark, path, Map(
       "numHashes" -> numHashes, "bands" -> bands,
       "shingleSize" -> shingleSize, "maxBucketSize" -> maxBucketSize))
+  }
+
+  /** `bands` without the buckets shared by more than `maxBucketSize` rows
+    * (not discriminative). The one cap rule of a MinHash index: its build
+    * and its probes both apply it. */
+  private def dropOversizedBuckets(bands: DataFrame, maxBucketSize: Int): DataFrame = {
+    val hot = bands.groupBy("band_idx", "band_key")
+      .agg(count(lit(1)).as("__n")).filter(col("__n") > maxBucketSize)
+      .select("band_idx", "band_key")
+    bands.join(broadcast(hot), Seq("band_idx", "band_key"), "left_anti")
   }
 
   private def manifestFile(spark: org.apache.spark.sql.SparkSession, path: String) = {
@@ -872,10 +878,7 @@ object Dedup {
     val freshBands = bandRows(signedDocs(freshDocs, "sh", numHashes), numHashes, bands)
       .select(col("id").as("fresh_id"), col("band_idx"), col("band_key"))
     // fresh-side bucket cap mirrors the index's build-time cap
-    val hot = freshBands.groupBy("band_idx", "band_key")
-      .agg(count(lit(1)).as("__n")).filter(col("__n") > maxBucketSize)
-      .select("band_idx", "band_key")
-    val fb = freshBands.join(broadcast(hot), Seq("band_idx", "band_key"), "left_anti")
+    val fb = dropOversizedBuckets(freshBands, maxBucketSize)
     val ib = spark.read.parquet(s"$path/bands")
       .select(col("id").as("hist_id"), col("band_idx"), col("band_key"))
     val cand = fb.join(ib, Seq("band_idx", "band_key"))

@@ -48,8 +48,8 @@ import graft.skew.SkewJoin.SkewJoinOps
   *  - `l.hint("skew").join(r, Seq(cols...), jt)` — using-join form for
   *    inner AND left/right/full outer types; replaced by the skewJoin plan
   *    directly (same output shape by construction — [[SkewJoin]]'s C2
-  *    single-pass outer decomposition already matches using-join
-  *    semantics);
+  *    outer joins fragment only their preserved side and emit using-join
+  *    columns and padding);
   *  - `l.hint("skew").join(r, l("k") === r("k") [&& ...], jt)` — raw
   *    equi-join on same-name columns, inner or outer; both sides' key
   *    columns are copied into payload columns so the final Project can

@@ -23,10 +23,16 @@ import graft.sketch.CmsOps
   *  - '''C1''' joins on the original `usingColumns` (plus salts), never on a
   *    concatenated key string, so `("ab","c")` can't collide with `("a","bc")`;
   *    the concatenated key feeds only the CMS.
-  *  - '''C2''' outer joins run as ONE salted outer join: presence markers
-  *    identify null-padded rows, and a replica-count window keeps exactly one
-  *    padded row per genuinely-unmatched input row — the reference would emit
-  *    one null-padded row *per replica* for unmatched rows under replication.
+  *  - '''C2''' outer joins never copy a row of a side they preserve:
+  *    `left_outer` fragments only the left side (the right side's rows are
+  *    copied to every left fragment), `right_outer` mirrors it, so each
+  *    preserved row meets all its matches in the one fragment it draws and
+  *    is padded at most once. `full_outer` is a salted `left_outer` leg plus
+  *    the right rows whose key is not on the left (an anti leg through
+  *    [[saltedSemiAnti]]), padded with null left columns. Spark AQE's
+  *    `OptimizeSkewedJoin` likewise splits only the preserved side of an
+  *    outer join. The reference salts both sides of an outer join and emits
+  *    one null-padded row *per replica* for unmatched rows.
   *  - '''C3''' semi/anti joins get their own exact salted decomposition
   *    ([[saltedSemiAnti]]: fragment left, replicate the right side's
   *    DISTINCT key set to every fragment) — the reference passes them
@@ -51,11 +57,7 @@ object SkewJoin {
 
   private[graft] val SaltL = "__graft_salt_l"
   private[graft] val SaltR = "__graft_salt_r"
-  // outer-join bookkeeping: per-input-row ids, presence markers, replica counts
-  private val Lid = "__graft_lid"
-  private val Rid = "__graft_rid"
-  private val Lm = "__graft_lm"
-  private val Rm = "__graft_rm"
+  // per-row replication counts, dropped once the salts are drawn
   private val RepL = "__graft_rep_l"
   private val RepR = "__graft_rep_r"
   /** Unit separator between key parts fed to the CMS (avoids C1-style
@@ -83,6 +85,10 @@ object SkewJoin {
 
     /** Skew-aware equi-join on `usingColumns`; output row multiset and schema
       * equal `left.join(right, usingColumns, joinType)`.
+      *
+      * `full_outer` reads each input twice, so both reads must return the
+      * same rows, as Spark's own stage retry assumes. An input whose analyzed
+      * plan is not deterministic gets the plain full outer join instead.
       */
     def skewJoin(
         right: DataFrame,
@@ -91,6 +97,10 @@ object SkewJoin {
         skewJoinConf: SkewJoinConf = SkewJoinConf()): DataFrame = {
       require(usingColumns.nonEmpty, "skewJoin requires at least one join column")
       normalize(joinType) match {
+        case "full_outer" if !(left.queryExecution.analyzed.deterministic &&
+            right.queryExecution.analyzed.deterministic) =>
+          // the full_outer decomposition reads each input twice (saltedJoin)
+          left.join(right, usingColumns, "full_outer")
         case jt @ ("inner" | "left_outer" | "right_outer" | "full_outer") =>
           saltedJoin(left, right, usingColumns, skewJoinConf, jt)
         case jt @ ("left_semi" | "left_anti") =>
@@ -101,7 +111,8 @@ object SkewJoin {
           // LEFT sketch; under RightSkew there is nothing to fragment (the
           // right side collapses to distinct keys anyway) → plain join.
           if (skewJoinConf.skewType.left)
-            saltedSemiAnti(left, right, usingColumns, skewJoinConf, jt)
+            saltedSemiAnti(left, right, usingColumns, skewJoinConf, jt,
+              Some(sketch(left, usingColumns, skewJoinConf)))
           else left.join(right, usingColumns, jt)
         case other =>
           throw new IllegalArgumentException(
@@ -229,71 +240,44 @@ object SkewJoin {
       case other                         => other
     }
 
-  /** Salted semi/anti join — exact semantics under left-side skew.
-    *
+  /** Salted semi/anti join, exact under left-side skew. The left side
+    * fragments by `cms`, its own sketch, and joins the right side's DISTINCT
+    * key set copied to every fragment: a map-side-combined aggregate, so a
+    * hot right key is deduplicated inside each map task before any shuffle.
     * The pairwise salting layout cannot serve semi/anti (a left fragment
     * would only meet right rows that drew the same salt, producing false
-    * anti positives), so these use a different decomposition:
-    *
-    *  1. the right side collapses to its DISTINCT key set — a map-side-
-    *     combined aggregate, skew-safe by construction (a hot right key is
-    *     deduplicated inside each map task before any shuffle);
-    *  2. the left side fragments exactly like the inner path
-    *     (`salt = uniform(0, rep(key))` from the broadcast CMS probe);
-    *  3. each distinct key explodes to ALL `rep(key)` fragment ids, so a
-    *     left row matches its fragment's replica iff the key exists at all —
-    *     `left_semi`/`left_anti` on `(keys, salt)` is then exactly
-    *     `left_semi`/`left_anti` on `keys`.
-    *
-    * Output multiplicity is untouched: semi/anti never duplicate the probe
-    * side, and the exploded key set carries at most `rep(key)` ≤ cap rows
-    * per distinct key. The hot key's left rows spread over `rep(key)`
-    * reducers instead of funnelling through one.
+    * anti positives); here a left row meets its key's copy iff the key
+    * exists at all, so semi/anti on `(keys, salt)` is exactly semi/anti on
+    * `keys`. The copies carry at most `rep(key)` ≤ cap rows per distinct
+    * key, and the hot key's left rows spread over `rep(key)` reducers
+    * instead of funnelling through one. Without a sketch the left side joins
+    * the key set unsalted.
     */
   private def saltedSemiAnti(
       left: DataFrame,
       right: DataFrame,
       usingColumns: Seq[String],
       conf: SkewJoinConf,
-      joinType: String): DataFrame = {
-    // fragmentation is driven by the LEFT side's key frequencies — the side
-    // whose rows pile onto one reducer without it
-    val rep = replicationCol(
-      left.sparkSession, sketch(left, usingColumns, conf), usingColumns, conf)
-    val ls = left
-      .withColumn(RepL, rep)
-      .withColumn(SaltL, fragmentId(col(RepL), conf.CMSseed.toLong))
-      .drop(RepL)
-    val rKeys = right.select(usingColumns.map(col): _*).distinct()
-      .withColumn(RepL, rep)
-      .withColumn(SaltL, replicaIds(col(RepL)))
-      .drop(RepL)
-    ls.join(rKeys, usingColumns :+ SaltL, joinType).drop(SaltL)
-  }
+      joinType: String,
+      cms: Option[CountMinSketch]): DataFrame =
+    fragmentReplicate(left, right.select(usingColumns.map(col): _*).distinct(),
+      usingColumns, conf, cms, None, joinType)
 
-  /** The fragment-replicate core: salted equi-join, all join types in ONE
-    * pass over each input.
+  /** Inner and outer joins. An inner join fragments every skewed side; an
+    * outer join only a side it preserves (C2), and builds no sketch for a
+    * side that stays whole.
     *
-    * Left rows get `SaltL = uniform(0, repL(key))` and are exploded over all
-    * `repR(key)` right-fragment ids as `SaltR`; right rows mirror. Joining on
-    * `usingColumns ++ (SaltL, SaltR)` pairs every left fragment with every
-    * right replica exactly once (reference salting layout,
-    * `dfimplicits.scala:110-116`).
-    *
-    * Outer semantics without re-scanning the inputs: the join itself runs as
-    * the requested outer type; presence markers (`lit(true)` columns, null
-    * only where the outer join padded) identify null-padded rows, and ONE
-    * count-over-owner window keeps a padded row only when ALL of its
-    * replicas went unmatched (a row of a matched key can still produce
-    * padded replicas — a salt cell the other side happened not to draw).
-    * The owner key is the padded row's input-row id, and a unique
-    * (left-id, right-id) pair for matched rows, so every matched row sits in
-    * its own singleton window partition and the count only gates padded
-    * rows. A union-of-filtered-legs formulation was rejected: the optimizer
-    * specializes each leg (outer-join elimination, per-leg null filters), the
-    * legs' exchanges stop canonicalizing equal, and every leg re-scans both
-    * inputs — the single window costs one uniform (never skewed) shuffle of
-    * the join output instead, and each input is scanned exactly once.
+    * `full_outer` is the union of two legs: a salted `left_outer` leg, and
+    * the right rows whose key is not on the left (the anti leg of
+    * [[saltedSemiAnti]], fragmenting the right side by its own sketch),
+    * padded with typed null left columns in the using-join order
+    * `keys ++ left non-keys ++ right non-keys`. `RightSkew` mirrors the legs.
+    * The trade: one more scan of the non-preserved input and a key-only scan
+    * of the preserved one, against the window that shuffled the whole join
+    * output to resolve padding (50× the input on a 50-rows-per-key right
+    * side). The second read needs each input to return the same rows, so
+    * [[SkewJoinOps.skewJoin]] routes nondeterministic inputs to the plain
+    * join.
     */
   private def saltedJoin(
       left: DataFrame,
@@ -301,15 +285,16 @@ object SkewJoin {
       usingColumns: Seq[String],
       conf: SkewJoinConf,
       joinType: String): DataFrame = {
-    val spark = left.sparkSession
-    def keyOf(df: DataFrame): Column = cmsKey(df, usingColumns)
-
-    // Sketches for the gated side(s), broadcast (KB-to-MB scale). When both
-    // sides are gated (CrossSkew) the two sketches come from ONE job — a
-    // tagged union aggregated per side — so the scans run concurrently
-    // instead of as two sequential jobs (the reference ran one job per side).
+    val st = conf.skewType
+    val needL = st.left && joinType != "right_outer"
+    val needR = st.right && joinType != "left_outer"
+    // Sketches of the sides to fragment, broadcast (KB-to-MB scale). When
+    // both sides need one the two come from ONE job — a tagged union
+    // aggregated per side — so the scans run concurrently instead of as two
+    // sequential jobs (the reference ran one job per side).
     val (cmsL, cmsR) =
-      if (conf.skewType.left && conf.skewType.right) {
+      if (needL && needR) {
+        def keyOf(df: DataFrame): Column = cmsKey(df, usingColumns)
         val tagged = left.select(keyOf(left).as("__graft_k"), lit("l").as("__graft_side"))
           .union(right.select(keyOf(right).as("__graft_k"), lit("r").as("__graft_side")))
         val rows = tagged.groupBy("__graft_side")
@@ -322,70 +307,74 @@ object SkewJoin {
         def get(side: String) = bySide.getOrElse(side, emptySketch(conf))
         (Some(get("l")), Some(get("r")))
       } else (
-        if (conf.skewType.left) Some(sketch(left, usingColumns, conf)) else None,
-        if (conf.skewType.right) Some(sketch(right, usingColumns, conf)) else None)
+        Option.when(needL)(sketch(left, usingColumns, conf)),
+        Option.when(needR)(sketch(right, usingColumns, conf)))
+    if (joinType != "full_outer")
+      return fragmentReplicate(left, right, usingColumns, conf, cmsL, cmsR, joinType)
 
-    // repL = fragment count of the left side for this key; repR mirror. Both
-    // sides must compute identical values per key (same sketch, same formula)
-    // so fragment ids and replica ids range over the same domain.
-    def rep(cms: Option[CountMinSketch]): Column =
-      cms.map(replicationCol(spark, _, usingColumns, conf)).getOrElse(lit(1))
-    val repL = rep(cmsL)
-    val repR = rep(cmsR)
+    val mirrored = st == RightSkew
+    val (outerLeg, onlyLeg) =
+      if (mirrored) (
+        fragmentReplicate(left, right, usingColumns, conf, None, cmsR, "right_outer"),
+        saltedSemiAnti(left, right, usingColumns, conf, "left_anti", cmsL))
+      else (
+        fragmentReplicate(left, right, usingColumns, conf, cmsL, None, "left_outer"),
+        saltedSemiAnti(right, left, usingColumns, conf, "left_anti", cmsR))
+    // onlyLeg holds one side's rows; the other side's columns are typed nulls
+    val resolver = left.sparkSession.sessionState.conf.resolver
+    def nonKeys(df: DataFrame, present: Boolean): Seq[Column] =
+      df.schema.fields.toSeq
+        .filterNot(f => usingColumns.exists(resolver(_, f.name)))
+        .map(f => if (present) col(f.name) else lit(null).cast(f.dataType).as(f.name))
+    outerLeg.union(onlyLeg.select(
+      usingColumns.map(col) ++ nonKeys(left, mirrored) ++ nonKeys(right, !mirrored): _*))
+  }
 
+  /** The fragment-replicate layout. Each side with a sketch fragments: its
+    * rows draw `salt = uniform(0, rep(key))`, and the other side's rows are
+    * copied to all `rep(key)` fragment ids, so joining on
+    * `usingColumns ++ salts` pairs every fragment with exactly one copy
+    * (reference salting layout, `dfimplicits.scala:110-116`). A side without
+    * a sketch gets no salt column; with neither this is the plain join.
+    *
+    * Exact for every join type whose preserved sides (outer, semi, anti) are
+    * never copied, i.e. have no sketch on the other side: each preserved row
+    * then meets all its matches in the one fragment it draws, so it is
+    * padded, kept or dropped exactly once. Both sides compute `rep` from the
+    * same broadcast sketch and formula, so fragment ids and copy ids range
+    * over the same domain.
+    */
+  private def fragmentReplicate(
+      left: DataFrame,
+      right: DataFrame,
+      usingColumns: Seq[String],
+      conf: SkewJoinConf,
+      cmsL: Option[CountMinSketch],
+      cmsR: Option[CountMinSketch],
+      joinType: String): DataFrame = {
+    val spark = left.sparkSession
     val seed = conf.CMSseed.toLong
-    val outer = joinType != "inner"
+    // (replication column, salt column, fragment-id seed, rep) per fragmented side
+    type Frag = (String, String, Long, Column)
+    val fragL: Option[Frag] =
+      cmsL.map(c => (RepL, SaltL, seed, replicationCol(spark, c, usingColumns, conf)))
+    val fragR: Option[Frag] =
+      cmsR.map(c => (RepR, SaltR, seed + 1, replicationCol(spark, c, usingColumns, conf)))
+    val frags = fragL.toSeq ++ fragR
+    if (frags.isEmpty) return left.join(right, usingColumns, joinType)
 
-    // Outer joins carry per-input-row ids (shared by all replicas of a row),
-    // presence markers, and the row's replica count, so padded rows can be
-    // resolved in one pass after the join.
-    val ls = {
-      val base =
-        if (outer)
-          left.withColumn(Lid, monotonically_increasing_id()).withColumn(Lm, lit(true))
-        else left
-      val salted = base
-        .withColumn(RepL, repL)
-        .withColumn(RepR, repR)
-        .withColumn(SaltL, fragmentId(col(RepL), seed))
-        .withColumn(SaltR, replicaIds(col(RepR)))
-      if (outer) salted.drop(RepL) else salted.drop(RepL, RepR)
+    // a side draws its own fragment id, then copies itself to every fragment
+    // of the other side
+    def salted(df: DataFrame, own: Option[Frag], other: Option[Frag]): DataFrame = {
+      val withReps = frags.foldLeft(df) { case (d, (r, _, _, rep)) => d.withColumn(r, rep) }
+      val drawn = own.fold(withReps) { case (r, s, sd, _) =>
+        withReps.withColumn(s, fragmentId(col(r), sd)) }
+      other.fold(drawn) { case (r, s, _, _) => drawn.withColumn(s, replicaIds(col(r))) }
+        .drop(frags.map(_._1): _*)
     }
-    val rs = {
-      val base =
-        if (outer)
-          right.withColumn(Rid, monotonically_increasing_id()).withColumn(Rm, lit(true))
-        else right
-      val salted = base
-        .withColumn(RepL, repL)
-        .withColumn(RepR, repR)
-        .withColumn(SaltR, fragmentId(col(RepR), seed + 1))
-        .withColumn(SaltL, replicaIds(col(RepL)))
-      if (outer) salted.drop(RepR) else salted.drop(RepL, RepR)
-    }
-
-    val joined = ls.join(rs, usingColumns ++ Seq(SaltL, SaltR), joinType)
-    val helperCols = Seq(SaltL, SaltR, Lid, Rid, Lm, Rm, RepL, RepR)
-    if (!outer) return joined.drop(helperCols: _*)
-
-    // A padded row for key k appears once per replica whose salt cell the
-    // other side left empty. Keep it only if EVERY replica went unmatched
-    // (count over the row id == replica count), and then only the salt-0
-    // copy. Matched rows get a unique (left-id, right-id) owner — singleton
-    // partitions, count unused — so one window serves all cases.
-    val isLeftNull = col(Rm).isNull   // left row present, right side padded
-    val isRightNull = col(Lm).isNull  // right row present, left side padded
-    // owner = (left row id or -1, right row id or -1): padded rows group with
-    // their sibling replicas (the missing side's id is null → -1), matched
-    // rows get a unique pair (ids are non-negative, so -1 never collides)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(coalesce(col(Lid), lit(-1L)), coalesce(col(Rid), lit(-1L)))
-    joined
-      .withColumn("__graft_miss", count(lit(1)).over(w))
-      .filter(
-        (!isLeftNull && !isRightNull) ||
-          (isLeftNull && col("__graft_miss") === col(RepR) && col(SaltR) === 0) ||
-          (isRightNull && col("__graft_miss") === col(RepL) && col(SaltL) === 0))
-      .drop(helperCols :+ "__graft_miss": _*)
+    val salts = frags.map(_._2)
+    salted(left, fragL, fragR)
+      .join(salted(right, fragR, fragL), usingColumns ++ salts, joinType)
+      .drop(salts: _*)
   }
 }

@@ -56,26 +56,36 @@ class PlanSpec extends AnyFunSuite {
       s"no codegen spans:\n$p")
   }
 
-  test("outer skewJoin scans each input once (single-pass window design)") {
-    // the full-outer decomposition used to re-scan both inputs 3×; the
-    // single-pass design (one salted outer join + one window) must plan
-    // exactly one FileScan per table. Broadcast off pins the at-scale
-    // shape (100-TB sides are never broadcast).
+  test("outer skewJoin plans no window, scans only what its legs read") {
+    // outer joins fragment only their preserved side, so no window over the
+    // join output resolves padding: left/right outer scan each table once,
+    // and full_outer's anti leg adds one scan of the right table and a
+    // key-only scan of the left. Broadcast off pins the at-scale shape
+    // (100-TB sides are never broadcast).
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
       val li = spark.read.parquet(s"$sf/lineitem.parquet")
       val p = spark.read.parquet(s"$sf/part.parquet")
         .withColumnRenamed("p_partkey", "l_partkey")
-      val q = li.skewJoin(p, Seq("l_partkey"), "full_outer", SkewJoinConf())
-      q.collect()
-      // AQE toString prints "== Final Plan ==" and "== Initial Plan ==";
-      // count scans only in the final executed section
-      val planStr = plan(q).split("== Initial Plan ==")(0)
-      def scansOf(table: String): Int =
-        s"FileScan parquet[^\\n]*$table\\.parquet".r.findAllIn(planStr).length
-      assert(scansOf("lineitem") <= 1, s"lineitem scanned more than once:\n$planStr")
-      assert(scansOf("part") <= 1, s"part scanned more than once:\n$planStr")
+      Seq("left_outer" -> 1, "right_outer" -> 1, "full_outer" -> 2).foreach {
+        case (jt, maxScans) =>
+          val q = li.skewJoin(p, Seq("l_partkey"), jt, SkewJoinConf())
+          q.collect()
+          // AQE toString prints "== Final Plan ==" and "== Initial Plan ==";
+          // read only the final executed section
+          val planStr = plan(q).split("== Initial Plan ==")(0)
+          def scansOf(table: String): Seq[String] =
+            s"FileScan parquet[^\\n]*$table\\.parquet[^\\n]*".r.findAllIn(planStr).toSeq
+          withClue(s"joinType=$jt:\n$planStr\n") {
+            assert("\\bWindow\\b".r.findFirstIn(planStr).isEmpty, "window in the plan")
+            assert(scansOf("lineitem").size <= maxScans)
+            assert(scansOf("part").size <= maxScans)
+            assert(scansOf("lineitem")
+              .count(!_.contains("ReadSchema: struct<l_partkey:bigint>")) <= 1,
+              "the left table's second scan reads more than its key")
+          }
+      }
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
   }
 

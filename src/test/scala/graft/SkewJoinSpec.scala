@@ -46,7 +46,7 @@ class SkewJoinSpec extends AnyFunSuite {
   test("skewJoin ≡ plain join when unmatched rows exist on both sides") {
     // customer ⋈ orders on custkey: some customers have no orders; also
     // filter orders so some orders lose their customer → unmatched rows on
-    // both sides, whose padded copies the window must keep exactly once.
+    // both sides, each of which must come out padded exactly once.
     val o = orders.withColumnRenamed("o_custkey", "c_custkey")
     val c = customer.filter(col("c_custkey") % 3 =!= 0)
     Seq("left_outer", "right_outer", "full_outer").foreach { jt =>
@@ -108,16 +108,50 @@ class SkewJoinSpec extends AnyFunSuite {
 
   test("skewJoin ≡ plain join under extreme single-key skew, all SkewTypes") {
     import spark.implicits._
-    val hot = (1 to 20000).map(i => (1L, s"h$i")) ++ (1 to 500).map(i => (i.toLong + 1, s"u$i"))
-    val lhs = hot.toDF("k", "lv").repartition(8)
-    val rhs = ((1 to 50).map(i => (1L, s"r$i")) ++ (1 to 500).map(i => (i.toLong + 1, s"w$i")))
+    val hot = ((1 to 20000).map(i => (1L, s"h$i")) ++ (1 to 500).map(i => (i.toLong + 1, s"u$i")))
+      .toDF("k", "lv").repartition(8)
+    val cold = ((1 to 50).map(i => (1L, s"r$i")) ++ (1 to 500).map(i => (i.toLong + 1, s"w$i")))
       .toDF("k", "rv")
-    Seq(CrossSkew, LeftSkew, RightSkew).foreach { st =>
+    val nullable = Seq[(java.lang.Long, String)]((null, "n1"), (null, "n2"))
+    val cases = Seq(
+      "left hot" -> (hot, cold),
+      // the right side holds the hot key
+      "right hot" -> (cold.toDF("k", "lv"), hot.toDF("k", "rv")),
+      // a key only the right side has: padded on the left by right/full outer
+      "right-only key" -> (hot, cold.unionByName(Seq((9999L, "only-r")).toDF("k", "rv"))),
+      // null keys on both sides never match; outer joins keep each padded once
+      "null key" -> (hot.unionByName(nullable.toDF("k", "lv")),
+        cold.unionByName(nullable.toDF("k", "rv"))))
+    for {
+      (name, (l, r)) <- cases
+      st <- Seq(CrossSkew, LeftSkew, RightSkew)
+      jt <- Seq("inner", "left_outer", "right_outer", "full_outer")
+    } withClue(s"case=$name, skewType=$st, joinType=$jt: ") {
       val cfg = SkewJoinConf(replicationFactor = 0.005, skewType = st)
-      withClue(s"skewType=$st: ") {
-        lhs.skewJoin(rhs, Seq("k"), "inner", cfg)
-          .ensureDatasetEquals(lhs.join(rhs, Seq("k"), "inner"))
-      }
+      l.skewJoin(r, Seq("k"), jt, cfg).ensureDatasetEquals(l.join(r, Seq("k"), jt))
+    }
+  }
+
+  test("full_outer over a nondeterministic input plans the plain join") {
+    import spark.implicits._
+    // each evaluation draws the next key, so two reads of the left input
+    // would disagree on its keys and the two-leg decomposition would pad a
+    // right row that a first read had matched
+    val nextKey = udf(() => SkewJoinSpec.counter.getAndIncrement() % 40)
+      .asNondeterministic()
+    val l = spark.range(200).select(nextKey().as("k"), col("id").as("lv"))
+    val r = (0L until 80L).map(k => (k, s"r$k")).toDF("k", "rv")
+    val cfg = SkewJoinConf(replicationFactor = 0.5)
+    val q = l.skewJoin(r, Seq("k"), "full_outer", cfg)
+    assert(!q.queryExecution.analyzed.toString.contains("__graft_salt"),
+      "a nondeterministic input took the salted decomposition")
+    val rows = q.select("lv", "rv").collect()
+    assert(rows.flatMap(row => Option(row.getString(1))).toSet ==
+      (0L until 80L).map(k => s"r$k").toSet, "a right row is missing")
+    val padded = rows.filter(_.isNullAt(0)).map(_.getString(1))
+    assert(padded.nonEmpty)
+    padded.foreach { rv =>
+      assert(rows.count(_.getString(1) == rv) == 1, s"padded right row $rv appears more than once")
     }
   }
 
@@ -243,8 +277,18 @@ class SkewJoinSpec extends AnyFunSuite {
 
   test("output schema matches plain join column order and names") {
     val o = orders.withColumnRenamed("o_orderkey", "l_orderkey")
-    val got = li.skewJoin(o, Seq("l_orderkey"), "inner", conf)
-    val want = li.join(o, Seq("l_orderkey"), "inner")
-    assert(got.columns.toSeq == want.columns.toSeq)
+    // full_outer twice: its legs are mirrored under RightSkew
+    (joinTypes.map(_ -> conf) :+ ("full_outer" -> conf.copy(skewType = RightSkew))).foreach {
+      case (jt, cfg) =>
+        val got = li.skewJoin(o, Seq("l_orderkey"), jt, cfg)
+        val want = li.join(o, Seq("l_orderkey"), jt)
+        withClue(s"joinType=$jt, skewType=${cfg.skewType}: ") {
+          assert(got.columns.toSeq == want.columns.toSeq)
+        }
+    }
   }
+}
+
+object SkewJoinSpec {
+  val counter = new java.util.concurrent.atomic.AtomicLong()
 }
