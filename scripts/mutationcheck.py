@@ -23,7 +23,11 @@ This is an EVIDENCE artifact (~N compile+verify cycles, minutes per
 mutant), not a per-close gate; run it when operator code changes shape.
 
 Usage: mutationcheck.py [--only M1,M7] [--write-json MUTATIONCHECK.json]
-Exit 0 iff every applied mutant was KILLED.
+       mutationcheck.py --sites
+Exit 0 iff every applied mutant was KILLED. `--sites` builds and runs
+nothing: it checks that every mutant's `old` text is still in its file
+(a refactor that moves a site turns its mutant into a BROKEN_SITE that
+witnesses nothing) and exits 1 naming each missing site.
 """
 import json
 import os
@@ -57,8 +61,8 @@ MUTANTS = [
     #    load-bearing smallStar election min.
     {"id": "M1", "desc": "exact-Jaccard verify stage drops |a|+|b|-|intersect| union term",
      "file": "src/main/scala/graft/llm/Dedup.scala",
-     "old": "size(col(\"__la\")) + size(col(\"__lb\")) - col(\"n_intersect\")",
-     "new": "size(col(\"__la\")) + size(col(\"__lb\"))",
+     "old": "size(col(a.lex)) + size(col(b.lex)) - col(\"n_intersect\")",
+     "new": "size(col(a.lex)) + size(col(b.lex))",
      "queries": ["dedup_jaccard_exact", "dedup_ngram", "dedup_threshold_sweep"]},
     {"id": "M2", "desc": "normalizeText drops the trim (edge whitespace survives)",
      "file": "src/main/scala/graft/llm/TextStats.scala",
@@ -75,11 +79,11 @@ MUTANTS = [
      "old": "Dedup.portableTokenHash(concat(id.cast(\"string\"), lit(salt))) % Buckets",
      "new": "Dedup.portableTokenHash(concat(id.cast(\"string\"), lit(salt))) % (Buckets - 1)",
      "queries": ["events_ab_test", "split_leakage_safe", "sample_temperature"]},
-    {"id": "M5", "desc": "skew-join left side skips replica id 0 (salt domain hole)",
+    {"id": "M5", "desc": "skew-join salt layout's copied side skips replica id 0 (salt domain hole)",
      "file": "src/main/scala/graft/skew/SkewJoin.scala",
-     "old": ".withColumn(SaltR, explode(sequence(lit(0), col(RepR) - 1)))",
-     "new": ".withColumn(SaltR, explode(sequence(lit(1), col(RepR) - 1)))",
-     "queries": ["skewjoin_inner", "skewjoin_left"]},
+     "old": "explode(sequence(lit(0), col(r) - 1))",
+     "new": "explode(sequence(lit(1), col(r) - 1))",
+     "queries": ["skewjoin_inner", "skewjoin_left", "stream_skew_interval"]},
     # M6 history: the final-agg min->max was equivalent (unique values at
     # the fixpoint); the smallStar ELECTION min->max also survived the full
     # surface — star rewiring only moves edges WITHIN a component, and
@@ -162,8 +166,24 @@ def divergent(verdicts):
     return sorted(q for q, v in verdicts.items() if not v.startswith("MATCH"))
 
 
+def site_present(m):
+    with open(os.path.join(REPO, m["file"])) as f:
+        return m["old"] in f.read()
+
+
+def check_sites():
+    missing = [m for m in MUTANTS if not site_present(m)]
+    for m in missing:
+        print(f"{m['id']}: BROKEN SITE — pattern not found in {m['file']}: "
+              f"{m['old']}")
+    print(f"{len(MUTANTS) - len(missing)}/{len(MUTANTS)} mutant sites present")
+    sys.exit(1 if missing else 0)
+
+
 def main():
     argv = sys.argv[1:]
+    if "--sites" in argv:
+        check_sites()
     write_json, only = None, None
     if "--write-json" in argv:
         i = argv.index("--write-json")
@@ -202,7 +222,7 @@ def main():
         path = os.path.join(REPO, m["file"])
         original = open(path, "rb").read()
         text = original.decode()
-        if m["old"] not in text:
+        if not site_present(m):
             results.append({**strip(m), "status": "BROKEN_SITE",
                             "killed_by": None})
             print(f"{m['id']}: BROKEN SITE — pattern not found in {m['file']}")

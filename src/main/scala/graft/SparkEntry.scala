@@ -2941,9 +2941,9 @@ object SparkEntry {
     "skewjoin_typed" -> ((s, dir) => {
       // typed skewJoinWith (the reference's own unshipped Dataset-API TODO,
       // README.md:27) oracle-gated on an OUTER type: customers with no
-      // orders must surface a NULL _2 slot (presence-marker semantics, not
-      // data-column nullness) — flattened to columns for the DuckDB hash
-      // compare, with `unmatched` pinning the null-slot itself
+      // orders must surface a NULL _2 slot (the slot itself, not just its
+      // data columns) — flattened to columns for the DuckDB hash compare,
+      // with `unmatched` pinning the null-slot itself
       import s.implicits._
       val cust = t(s, dir, "customer")
         .select(col("c_custkey").as("custkey"), col("c_name")).as[TKCust]

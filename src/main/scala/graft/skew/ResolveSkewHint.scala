@@ -3,7 +3,7 @@ package graft.skew
 import java.util.Locale
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, EqualTo, Expression, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, CreateStruct, EqualTo, Expression, GetStructField}
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter, UsingJoin}
 import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, Project, UnaryNode, UnresolvedHint}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -51,8 +51,8 @@ import graft.skew.SkewJoin.SkewJoinOps
   *    outer joins fragment only their preserved side and emit using-join
   *    columns and padding);
   *  - `l.hint("skew").join(r, l("k") === r("k") [&& ...], jt)` — raw
-  *    equi-join on same-name columns, inner or outer; both sides' key
-  *    columns are copied into payload columns so the final Project can
+  *    equi-join on same-name columns, inner or outer; each side's whole row
+  *    rides in one struct slot beside its keys, so the final Project can
   *    restore `l.output ++ r.output` with each side's own null-padding
   *    (see [[rewriteRaw]]). This shape is also what outer USING joins lower
   *    to before this rule sees them (ResolveNaturalAndUsingJoin runs
@@ -114,54 +114,32 @@ case class ResolveSkewHint(spark: SparkSession) extends Rule[LogicalPlan] {
     case _          => None
   }
 
-  /** Raw-condition form, any supported join type: each side's key columns
-    * are first COPIED into ordinary payload columns (`__graft_lk_i` /
-    * `__graft_rk_i`), the using-join skew plan runs on the original key
-    * names, and a final Project restores `l.output ++ r.output` with the
-    * original expression ids — key attributes rebuilt from the copies.
-    * The copies are what makes OUTER types sound here: a using-join output
-    * keeps only one (side-dependent, or coalesced) key column, but the
-    * copies null-pad exactly like any payload column, so each side's key
-    * reconstructs with its own padding. */
+  /** Raw-condition form, any supported join type: each side rides as its
+    * keys plus one struct slot holding its whole row (the slots
+    * [[SkewJoin.SkewJoinTypedOps.skewJoinWith]] uses), the using-join skew
+    * plan runs on the key names, and a final Project restores
+    * `l.output ++ r.output` field by field from the slots, original
+    * expression ids kept. A using-join output keeps only one
+    * (side-dependent, or coalesced) key column, but a slot null-pads as a
+    * whole, so each side's key comes back with its own padding. A semi or
+    * anti join outputs the left slot only, so only `l.output` comes back. */
   private def rewriteRaw(l: LogicalPlan, r: LogicalPlan,
       pairs: Seq[(AttributeReference, AttributeReference)],
       joinType: String): LogicalPlan = {
-    // semi/anti output is the left side only and never null-pads, so no key
-    // copies are needed — the salted plan ([[SkewJoin.saltedSemiAnti]])
-    // passes l's attributes through withColumn/join/drop untouched, exprIds
-    // intact
-    if (joinType == "left_semi" || joinType == "left_anti")
-      return skewJoined(l, r, pairs.map(_._1.name), joinType)
-    val lCopies = pairs.zipWithIndex.map { case ((la, _), i) =>
-      Alias(la, s"__graft_lk_$i")()
-    }
-    val rCopies = pairs.zipWithIndex.map { case ((_, ra), i) =>
-      Alias(ra, s"__graft_rk_$i")()
-    }
+    def slotted(p: LogicalPlan, keys: Seq[Attribute], slot: String): LogicalPlan =
+      Project(keys :+ Alias(CreateStruct(p.output), slot)(), p)
     val out = skewJoined(
-      Project(l.output ++ lCopies, l),
-      Project(r.output ++ rCopies, r),
+      slotted(l, pairs.map(_._1), SkewJoin.SlotL),
+      slotted(r, pairs.map(_._2), SkewJoin.SlotR),
       pairs.map(_._1.name), joinType)
-    val byId = out.output.map(a => a.exprId -> a).toMap
-    val copyByLeftId = pairs.zipWithIndex.map { case ((la, _), i) =>
-      la.exprId -> lCopies(i).exprId
-    }.toMap
-    val copyByRightId = pairs.zipWithIndex.map { case ((_, ra), i) =>
-      ra.exprId -> rCopies(i).exprId
-    }.toMap
-    val leftCols: Seq[NamedExpression] = l.output.map { a =>
-      copyByLeftId.get(a.exprId) match {
-        case Some(cid) => Alias(byId(cid), a.name)(exprId = a.exprId)
-        case None      => byId(a.exprId)
+    val restored = Seq(l -> SkewJoin.SlotL, r -> SkewJoin.SlotR).flatMap { case (p, name) =>
+      out.output.filter(_.name == name).flatMap { slot =>
+        p.output.zipWithIndex.map { case (a, i) =>
+          Alias(GetStructField(slot, i), a.name)(exprId = a.exprId)
+        }
       }
     }
-    val rightCols: Seq[NamedExpression] = r.output.map { a =>
-      copyByRightId.get(a.exprId) match {
-        case Some(cid) => Alias(byId(cid), a.name)(exprId = a.exprId)
-        case None      => byId(a.exprId)
-      }
-    }
-    Project(leftCols ++ rightCols, out)
+    Project(restored, out)
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsDown {

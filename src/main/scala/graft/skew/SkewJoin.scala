@@ -57,6 +57,9 @@ object SkewJoin {
 
   private[graft] val SaltL = "__graft_salt_l"
   private[graft] val SaltR = "__graft_salt_r"
+  // the typed and hinted joins carry each side whole in one struct column
+  private[graft] val SlotL = "__graft_slot_l"
+  private[graft] val SlotR = "__graft_slot_r"
   // per-row replication counts, dropped once the salts are drawn
   private val RepL = "__graft_rep_l"
   private val RepR = "__graft_rep_r"
@@ -111,8 +114,9 @@ object SkewJoin {
           // LEFT sketch; under RightSkew there is nothing to fragment (the
           // right side collapses to distinct keys anyway) → plain join.
           if (skewJoinConf.skewType.left)
-            saltedSemiAnti(left, right, usingColumns, skewJoinConf, jt,
-              Some(sketch(left, usingColumns, skewJoinConf)))
+            saltedSemiAnti(left, right, usingColumns, skewJoinConf.CMSseed, jt,
+              Some(replicationCol(left.sparkSession,
+                sketch(left, usingColumns, skewJoinConf), usingColumns, skewJoinConf)))
           else left.join(right, usingColumns, jt)
         case other =>
           throw new IllegalArgumentException(
@@ -138,33 +142,14 @@ object SkewJoin {
       val jt = normalize(joinType)
       require(jt == "inner" || jt.endsWith("_outer"),
         s"skewJoinWith supports inner/outer join types, got '$joinType'")
-      val lCols = left.columns.toSeq
-      val rCols = right.columns.toSeq
-      // joinWith keeps both sides whole, so the right side's non-key columns
-      // are prefixed to stay addressable; presence markers (true on every
-      // input row, null only where the outer decomposition padded) identify
-      // unmatched sides without relying on data columns being non-null
-      val rKeyed = right.toDF(rCols.map("__graft_r_" + _): _*)
-        .withColumn("__graft_r_present", lit(true))
-      val rJoinable = usingColumns.foldLeft(rKeyed) { (df, c) =>
-        df.withColumnRenamed("__graft_r_" + c, c)
-      }
-      val lDf = left.toDF().withColumn("__graft_l_present", lit(true))
-      val joined = new SkewJoinOps(lDf)
-        .skewJoin(rJoinable, usingColumns, jt, skewJoinConf)
-      val leftStruct = struct(lCols.map(col): _*)
-      val rightStruct = struct(rCols.map { c =>
-        (if (usingColumns.contains(c)) col(c) else col("__graft_r_" + c)).as(c)
-      }: _*)
-      val lVal =
-        if (jt == "right_outer" || jt == "full_outer")
-          when(col("__graft_l_present").isNull, lit(null)).otherwise(leftStruct)
-        else leftStruct
-      val rVal =
-        if (jt == "left_outer" || jt == "full_outer")
-          when(col("__graft_r_present").isNull, lit(null)).otherwise(rightStruct)
-        else rightStruct
-      joined.select(lVal.as("_1"), rVal.as("_2"))
+      // each side rides whole as one struct slot beside its keys: a matched
+      // row's slot is a struct even when every field is null, and the outer
+      // join pads a missing side's slot itself with null, as joinWith does
+      def slotted(ds: Dataset[_], slot: String): DataFrame =
+        ds.select(usingColumns.map(col) :+ struct(ds.columns.toSeq.map(col): _*).as(slot): _*)
+      new SkewJoinOps(slotted(left, SlotL))
+        .skewJoin(slotted(right, SlotR), usingColumns, jt, skewJoinConf)
+        .select(col(SlotL).as("_1"), col(SlotR).as("_2"))
         .as[(T, U)](Encoders.tuple(te, ue))
     }
   }
@@ -218,17 +203,6 @@ object SkewJoin {
       replicationUdf(bc, conf.CMSeps, conf.replicationFactor, cap)(cmsKey(usingColumns)))
   }
 
-  /** THE salt layout's fragment id: a row of a key replicated `rep` times
-    * draws its fragment uniformly from `[0, rep)`. */
-  private[graft] def fragmentId(rep: Column, seed: Long): Column =
-    floor(rand(seed) * rep).cast("int")
-
-  /** THE salt layout's replica ids: a row of a key replicated `rep` times
-    * explodes to one copy per fragment id `0 until rep`, so every fragment
-    * meets exactly one copy. */
-  private[graft] def replicaIds(rep: Column): Column =
-    explode(sequence(lit(0), rep - 1))
-
   private def normalize(joinType: String): String =
     joinType.toLowerCase(java.util.Locale.ROOT).replace("_", "") match {
       case "inner"                       => "inner"
@@ -241,27 +215,28 @@ object SkewJoin {
     }
 
   /** Salted semi/anti join, exact under left-side skew. The left side
-    * fragments by `cms`, its own sketch, and joins the right side's DISTINCT
-    * key set copied to every fragment: a map-side-combined aggregate, so a
-    * hot right key is deduplicated inside each map task before any shuffle.
+    * fragments by `rep`, its own sketch's replication, and joins the right
+    * side's DISTINCT key set copied to every fragment: a map-side-combined
+    * aggregate, so a hot right key is deduplicated inside each map task
+    * before any shuffle.
     * The pairwise salting layout cannot serve semi/anti (a left fragment
     * would only meet right rows that drew the same salt, producing false
     * anti positives); here a left row meets its key's copy iff the key
     * exists at all, so semi/anti on `(keys, salt)` is exactly semi/anti on
     * `keys`. The copies carry at most `rep(key)` ≤ cap rows per distinct
     * key, and the hot key's left rows spread over `rep(key)` reducers
-    * instead of funnelling through one. Without a sketch the left side joins
+    * instead of funnelling through one. Without `rep` the left side joins
     * the key set unsalted.
     */
   private def saltedSemiAnti(
       left: DataFrame,
       right: DataFrame,
       usingColumns: Seq[String],
-      conf: SkewJoinConf,
+      seed: Long,
       joinType: String,
-      cms: Option[CountMinSketch]): DataFrame =
+      rep: Option[Column]): DataFrame =
     fragmentReplicate(left, right.select(usingColumns.map(col): _*).distinct(),
-      usingColumns, conf, cms, None, joinType)
+      usingColumns, rep, None, seed, joinType)
 
   /** Inner and outer joins. An inner join fragments every skewed side; an
     * outer join only a side it preserves (C2), and builds no sketch for a
@@ -288,11 +263,13 @@ object SkewJoin {
     val st = conf.skewType
     val needL = st.left && joinType != "right_outer"
     val needR = st.right && joinType != "left_outer"
+    def rep(cms: CountMinSketch): Column =
+      replicationCol(left.sparkSession, cms, usingColumns, conf)
     // Sketches of the sides to fragment, broadcast (KB-to-MB scale). When
     // both sides need one the two come from ONE job — a tagged union
     // aggregated per side — so the scans run concurrently instead of as two
     // sequential jobs (the reference ran one job per side).
-    val (cmsL, cmsR) =
+    val (repL, repR) =
       if (needL && needR) {
         def keyOf(df: DataFrame): Column = cmsKey(df, usingColumns)
         val tagged = left.select(keyOf(left).as("__graft_k"), lit("l").as("__graft_side"))
@@ -304,22 +281,23 @@ object SkewJoin {
         val bySide = rows.map(r =>
           r.getString(0) -> CmsOps.fromBytes(r.getAs[Array[Byte]](1))).toMap
         // a side absent from the union (empty input) gets an empty sketch
-        def get(side: String) = bySide.getOrElse(side, emptySketch(conf))
+        def get(side: String) = rep(bySide.getOrElse(side, emptySketch(conf)))
         (Some(get("l")), Some(get("r")))
       } else (
-        Option.when(needL)(sketch(left, usingColumns, conf)),
-        Option.when(needR)(sketch(right, usingColumns, conf)))
+        Option.when(needL)(rep(sketch(left, usingColumns, conf))),
+        Option.when(needR)(rep(sketch(right, usingColumns, conf))))
+    val seed = conf.CMSseed.toLong
     if (joinType != "full_outer")
-      return fragmentReplicate(left, right, usingColumns, conf, cmsL, cmsR, joinType)
+      return fragmentReplicate(left, right, usingColumns, repL, repR, seed, joinType)
 
     val mirrored = st == RightSkew
     val (outerLeg, onlyLeg) =
       if (mirrored) (
-        fragmentReplicate(left, right, usingColumns, conf, None, cmsR, "right_outer"),
-        saltedSemiAnti(left, right, usingColumns, conf, "left_anti", cmsL))
+        fragmentReplicate(left, right, usingColumns, None, repR, seed, "right_outer"),
+        saltedSemiAnti(left, right, usingColumns, seed, "left_anti", repL))
       else (
-        fragmentReplicate(left, right, usingColumns, conf, cmsL, None, "left_outer"),
-        saltedSemiAnti(right, left, usingColumns, conf, "left_anti", cmsR))
+        fragmentReplicate(left, right, usingColumns, repL, None, seed, "left_outer"),
+        saltedSemiAnti(right, left, usingColumns, seed, "left_anti", repR))
     // onlyLeg holds one side's rows; the other side's columns are typed nulls
     val resolver = left.sparkSession.sessionState.conf.resolver
     def nonKeys(df: DataFrame, present: Boolean): Seq[Column] =
@@ -330,51 +308,60 @@ object SkewJoin {
       usingColumns.map(col) ++ nonKeys(left, mirrored) ++ nonKeys(right, !mirrored): _*))
   }
 
-  /** The fragment-replicate layout. Each side with a sketch fragments: its
-    * rows draw `salt = uniform(0, rep(key))`, and the other side's rows are
-    * copied to all `rep(key)` fragment ids, so joining on
-    * `usingColumns ++ salts` pairs every fragment with exactly one copy
-    * (reference salting layout, `dfimplicits.scala:110-116`). A side without
-    * a sketch gets no salt column; with neither this is the plain join.
+  /** The fragment-replicate join: [[saltLayout]], then the join on
+    * `usingColumns ++ salts`, salts dropped. With no `rep` column this is
+    * the plain join.
     *
     * Exact for every join type whose preserved sides (outer, semi, anti) are
-    * never copied, i.e. have no sketch on the other side: each preserved row
+    * never copied, i.e. have no `rep` on the other side: each preserved row
     * then meets all its matches in the one fragment it draws, so it is
-    * padded, kept or dropped exactly once. Both sides compute `rep` from the
-    * same broadcast sketch and formula, so fragment ids and copy ids range
-    * over the same domain.
+    * padded, kept or dropped exactly once.
     */
-  private def fragmentReplicate(
+  private[graft] def fragmentReplicate(
       left: DataFrame,
       right: DataFrame,
       usingColumns: Seq[String],
-      conf: SkewJoinConf,
-      cmsL: Option[CountMinSketch],
-      cmsR: Option[CountMinSketch],
+      repL: Option[Column],
+      repR: Option[Column],
+      seed: Long,
       joinType: String): DataFrame = {
-    val spark = left.sparkSession
-    val seed = conf.CMSseed.toLong
+    val (l, r, salts) = saltLayout(left, right, repL, repR, seed)
+    l.join(r, usingColumns ++ salts, joinType).drop(salts: _*)
+  }
+
+  /** THE salt layout every skew join runs on (reference salting layout,
+    * `dfimplicits.scala:110-116`). Each side with a `rep` column (a row's
+    * fragment count for its key, from [[replicationCol]] or a
+    * [[graft.streaming.RefreshableHotness]] model) fragments: its rows draw
+    * a salt uniformly from `[0, rep)`, and the other side's rows are copied
+    * once per salt `0 until rep`, so joining on the keys plus the returned
+    * salt columns pairs every fragment with exactly one copy. Both sides
+    * evaluate the same `rep` column, so fragment ids and copy ids range over
+    * the same domain. A side without `rep` gets no salt column; with neither
+    * both frames come back with their plans untouched and there are no
+    * salts.
+    */
+  private[graft] def saltLayout(
+      left: DataFrame,
+      right: DataFrame,
+      repL: Option[Column],
+      repR: Option[Column],
+      seed: Long): (DataFrame, DataFrame, Seq[String]) = {
     // (replication column, salt column, fragment-id seed, rep) per fragmented side
     type Frag = (String, String, Long, Column)
-    val fragL: Option[Frag] =
-      cmsL.map(c => (RepL, SaltL, seed, replicationCol(spark, c, usingColumns, conf)))
-    val fragR: Option[Frag] =
-      cmsR.map(c => (RepR, SaltR, seed + 1, replicationCol(spark, c, usingColumns, conf)))
+    val fragL: Option[Frag] = repL.map((RepL, SaltL, seed, _))
+    val fragR: Option[Frag] = repR.map((RepR, SaltR, seed + 1, _))
     val frags = fragL.toSeq ++ fragR
-    if (frags.isEmpty) return left.join(right, usingColumns, joinType)
-
     // a side draws its own fragment id, then copies itself to every fragment
     // of the other side
     def salted(df: DataFrame, own: Option[Frag], other: Option[Frag]): DataFrame = {
       val withReps = frags.foldLeft(df) { case (d, (r, _, _, rep)) => d.withColumn(r, rep) }
       val drawn = own.fold(withReps) { case (r, s, sd, _) =>
-        withReps.withColumn(s, fragmentId(col(r), sd)) }
-      other.fold(drawn) { case (r, s, _, _) => drawn.withColumn(s, replicaIds(col(r))) }
+        withReps.withColumn(s, floor(rand(sd) * col(r)).cast("int")) }
+      other.fold(drawn) { case (r, s, _, _) =>
+        drawn.withColumn(s, explode(sequence(lit(0), col(r) - 1))) }
         .drop(frags.map(_._1): _*)
     }
-    val salts = frags.map(_._2)
-    salted(left, fragL, fragR)
-      .join(salted(right, fragR, fragL), usingColumns ++ salts, joinType)
-      .drop(salts: _*)
+    (salted(left, fragL, fragR), salted(right, fragR, fragL), frags.map(_._2))
   }
 }

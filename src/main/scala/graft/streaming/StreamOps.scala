@@ -114,13 +114,14 @@ object StreamOps {
     * A Count-Min Sketch over `hotKeySource` (default: the static side; pass
     * a historical sample of the stream when stream-side hotness is the
     * concern) drives a per-key replication factor via the same debiased
-    * formula as the batch [[graft.skew.SkewJoin]]. Static rows for a key are
-    * replicated `rep(key)` times; stream rows are salted uniformly into
-    * `[0, rep(key))`, so a hot key's join work spreads across `rep(key)`
-    * tasks. Cold keys get rep = 1 — no replication, no extra shuffle volume
-    * (the previous design replicated the ENTIRE static side 8×
-    * unconditionally, turning a 1-TB dimension into 8 TB of shuffle whether
-    * or not any key was hot). Row multiset equals the plain stream-static
+    * formula as the batch [[graft.skew.SkewJoin]], and the join runs on its
+    * fragment-replicate core. Static rows for a key are replicated
+    * `rep(key)` times; stream rows are salted uniformly into `[0, rep(key))`
+    * (salts drawn with `conf.CMSseed`), so a hot key's join work spreads
+    * across `rep(key)` tasks. Cold keys get rep = 1 — no replication, no
+    * extra shuffle volume (the previous design replicated the ENTIRE static
+    * side 8× unconditionally, turning a 1-TB dimension into 8 TB of shuffle
+    * whether or not any key was hot). Row multiset equals the plain stream-static
     * join for any rep values: each stream row meets exactly one replica of
     * every matching static row.
     */
@@ -129,14 +130,10 @@ object StreamOps {
       static: DataFrame,
       usingColumns: Seq[String],
       conf: graft.skew.SkewJoinConf = graft.skew.SkewJoinConf(),
-      hotKeySource: Option[DataFrame] = None,
-      seed: Long = 1L): DataFrame = {
-    val repCol = replicationCol(static, usingColumns, conf, hotKeySource)
-    val salted = stream.withColumn("__graft_salt", SkewJoin.fragmentId(repCol, seed))
-    val replicated = static.withColumn("__graft_salt", SkewJoin.replicaIds(repCol))
-    salted.join(replicated, usingColumns :+ "__graft_salt", "inner")
-      .drop("__graft_salt")
-  }
+      hotKeySource: Option[DataFrame] = None): DataFrame =
+    SkewJoin.fragmentReplicate(stream, static, usingColumns,
+      Some(replicationCol(static, usingColumns, conf, hotKeySource)), None,
+      conf.CMSseed, "inner")
 
   /** Per-key replication column for the gated stream-static join: a CMS over
     * `hotKeySource` (default: the static side), probed per row with the
@@ -170,19 +167,8 @@ object StreamOps {
       left: DataFrame, right: DataFrame,
       usingCols: Seq[String],
       lower: String, upper: String,
-      watermark: String = "1 hour"): DataFrame = {
-    val l = left.withWatermark("ts", watermark)
-    val r = usingCols.foldLeft(
-        right.withColumnRenamed("ts", "r_ts")
-          .withWatermark("r_ts", watermark)) {
-        (df, c) => df.withColumnRenamed(c, s"r_$c")
-      }
-    val keyEq = usingCols.map(c => col(c) === col(s"r_$c")).reduce(_ && _)
-    val timeRange =
-      col("r_ts") >= col("ts") + expr(s"INTERVAL $lower") &&
-        col("r_ts") < col("ts") + expr(s"INTERVAL $upper")
-    l.join(r, keyEq && timeRange, "inner")
-  }
+      watermark: String = "1 hour"): DataFrame =
+    saltedIntervalJoin(left, right, usingCols, lower, upper, None, 0L, watermark)
 
   /** CMS-gated salted stream-STREAM interval join — [[intervalJoin]] with
     * the fragment-replicate treatment for hot keys on BOTH buffered sides.
@@ -190,13 +176,14 @@ object StreamOps {
     * A hot key in a stream-stream join concentrates ALL of that key's
     * buffered state (both sides) plus its pairwise matching work on the one
     * task that owns the key's hash partition. Salting spreads it: left rows
-    * draw a fragment `[0, rep(key))`, right rows replicate to every
-    * fragment, and the join condition gains salt equality — each matching
-    * (left, right) pair still meets exactly ONCE (in the left row's
-    * fragment), so the emitted multiset equals [[intervalJoin]]'s for any
-    * rep values. Hot-key state and CPU spread over `rep(key)` tasks; the
-    * price is the right side's state growing by the same factor — the CMS
-    * gate keeps that multiplier 1 for every cold key.
+    * draw a fragment `[0, rep(key))` (salts drawn with `conf.CMSseed`),
+    * right rows replicate to every fragment, and the join condition gains
+    * salt equality — each matching (left, right) pair still meets exactly
+    * ONCE (in the left row's fragment), so the emitted multiset equals
+    * [[intervalJoin]]'s for any rep values. Hot-key state and CPU spread
+    * over `rep(key)` tasks; the price is the right side's state growing by
+    * the same factor — the CMS gate keeps that multiplier 1 for every cold
+    * key.
     *
     * The sketch comes from `hotKeySource`, a STATIC frame (yesterday's
     * events, a dimension table): a streaming query cannot scan its own
@@ -211,10 +198,9 @@ object StreamOps {
       lower: String, upper: String,
       hotKeySource: DataFrame,
       conf: graft.skew.SkewJoinConf = graft.skew.SkewJoinConf(),
-      watermark: String = "1 hour",
-      seed: Long = 1L): DataFrame =
-    skewedIntervalJoinImpl(left, right, usingCols, lower, upper,
-      replicationCol(hotKeySource, usingCols, conf, None), watermark, seed)
+      watermark: String = "1 hour"): DataFrame =
+    saltedIntervalJoin(left, right, usingCols, lower, upper,
+      Some(replicationCol(hotKeySource, usingCols, conf, None)), conf.CMSseed, watermark)
 
   /** [[skewedIntervalJoin]] with an adaptive hotness model: the replication
     * column probes `hotness`'s CURRENT sketch snapshot — seeded from a
@@ -227,37 +213,34 @@ object StreamOps {
       usingCols: Seq[String],
       lower: String, upper: String,
       hotness: RefreshableHotness,
-      watermark: String = "1 hour",
-      seed: Long = 1L): DataFrame =
-    skewedIntervalJoinImpl(left, right, usingCols, lower, upper,
-      hotness.replication(left.sparkSession), watermark, seed)
+      watermark: String = "1 hour"): DataFrame =
+    saltedIntervalJoin(left, right, usingCols, lower, upper,
+      Some(hotness.replication(left.sparkSession)), hotness.conf.CMSseed, watermark)
 
-  private def skewedIntervalJoinImpl(
+  /** The interval join behind [[intervalJoin]] and both skewed variants: the
+    * left side fragments by `rep` over [[SkewJoin.saltLayout]] (none without
+    * `rep`), and the salts join the keys in the equality the right side's
+    * `r_` renames pair up. Salting runs before the renames, so the rep probe
+    * sees the original key names. */
+  private def saltedIntervalJoin(
       left: DataFrame, right: DataFrame,
       usingCols: Seq[String],
       lower: String, upper: String,
-      repCol: Column,
-      watermark: String,
-      seed: Long): DataFrame = {
-    val l = left
-      .withColumn("__graft_salt", SkewJoin.fragmentId(repCol, seed))
-      .withWatermark("ts", watermark)
-    // salt the right side BEFORE the r_-renames so the rep probe sees the
-    // original key column names
-    val rSalted = right
-      .withColumn("__graft_r_salt", SkewJoin.replicaIds(repCol))
-    val r = usingCols.foldLeft(
+      rep: Option[Column], seed: Long,
+      watermark: String): DataFrame = {
+    val (lSalted, rSalted, salts) = SkewJoin.saltLayout(left, right, rep, None, seed)
+    val keys = usingCols ++ salts
+    val l = lSalted.withWatermark("ts", watermark)
+    val r = keys.foldLeft(
         rSalted.withColumnRenamed("ts", "r_ts")
           .withWatermark("r_ts", watermark)) {
         (df, c) => df.withColumnRenamed(c, s"r_$c")
       }
-    val keyEq = (usingCols.map(c => col(c) === col(s"r_$c")) :+
-      (col("__graft_salt") === col("__graft_r_salt"))).reduce(_ && _)
+    val keyEq = keys.map(c => col(c) === col(s"r_$c")).reduce(_ && _)
     val timeRange =
       col("r_ts") >= col("ts") + expr(s"INTERVAL $lower") &&
         col("r_ts") < col("ts") + expr(s"INTERVAL $upper")
-    l.join(r, keyEq && timeRange, "inner")
-      .drop("__graft_salt", "__graft_r_salt")
+    l.join(r, keyEq && timeRange, "inner").drop(salts ++ salts.map("r_" + _): _*)
   }
 
   /** Running per-user event count via `flatMapGroupsWithState` — the

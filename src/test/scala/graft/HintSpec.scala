@@ -91,15 +91,27 @@ class HintSpec extends AnyFunSuite {
           s"outer hinted join not salted for $jt")
       }
     }
-    // raw-condition outer joins rewrite too (key copies carry each side's
-    // own null-padding through the using-join plan): both key columns
-    // survive, schema and rows equal the plain join, plan salted
-    val l = lhs
-    val rr = rhs
-    val rawOuter = l.hint("skew").join(rr, l("k") === rr("k"), "full_outer")
-    val plainOuter = l.join(rr, l("k") === rr("k"), "full_outer")
-    assert(rawOuter.columns.toSeq == plainOuter.columns.toSeq)
-    rawOuter.ensureDatasetEquals(plainOuter)
-    assert(rawOuter.queryExecution.executedPlan.toString.contains("__graft_salt"))
+    // raw-condition outer joins rewrite too (each side's row rides in one
+    // struct slot, so each side's own key columns come back with its own
+    // null-padding), on one and on two key columns, with a null key part on
+    // each side: schema and rows equal the plain join, plan salted
+    val l2 = lhs.withColumn("k2", col("k") % 3).select("k", "k2", "lv").unionByName(
+      Seq((Option.empty[Long], Option(0L), "null-k"), (Option(7777L), Option(1L), "only-left"))
+        .toDF("k", "k2", "lv"))
+    val r2 = rhs.withColumn("k2", col("k") % 3).select("k", "k2", "rv").unionByName(
+      Seq((Option(2L), Option.empty[Long], "null-k2"), (Option(9999L), Option(0L), "only-right"))
+        .toDF("k", "k2", "rv"))
+    val conds = Seq(
+      "k" -> (l2("k") === r2("k")),
+      "k,k2" -> (l2("k") === r2("k") && l2("k2") === r2("k2")))
+    for (jt <- Seq("left_outer", "right_outer", "full_outer"); (keys, cond) <- conds) {
+      val rawOuter = l2.hint("skew").join(r2, cond, jt)
+      val plainOuter = l2.join(r2, cond, jt)
+      withClue(s"joinType=$jt on ($keys): ") {
+        assert(rawOuter.columns.toSeq == plainOuter.columns.toSeq)
+        rawOuter.ensureDatasetEquals(plainOuter)
+        assert(rawOuter.queryExecution.executedPlan.toString.contains("__graft_salt"))
+      }
+    }
   }
 }

@@ -13,7 +13,8 @@ class SkewJoinTypedSpec extends AnyFunSuite {
 
   private def data = {
     import spark.implicits._
-    val l = Seq(L(1, "a"), L(1, "b"), L(2, "c"), L(3, "d")).toDS()
+    // a null payload on a matched key (1) and on a left-only key (3)
+    val l = Seq(L(1, "a"), L(1, "b"), L(1, null), L(2, "c"), L(3, "d"), L(3, null)).toDS()
     val r = Seq(R(1, 10), R(2, 20), R(4, 40)).toDS()
     (l, r)
   }
@@ -30,10 +31,12 @@ class SkewJoinTypedSpec extends AnyFunSuite {
   test("skewJoinWith outer joins null the unmatched side like joinWith") {
     import spark.implicits._
     val (l, r) = data
-    Seq("left_outer", "full_outer").foreach { jt =>
-      val got = l.skewJoinWith(r, Seq("k"), jt, conf).collect().toSet
-      val want = l.joinWith(r, l("k") === r("k"), jt).collect().toSet
-      assert(got == want, s"joinType=$jt")
+    Seq("left_outer", "right_outer", "full_outer").foreach { jt =>
+      val got = l.skewJoinWith(r, Seq("k"), jt, conf).collect()
+      val want = l.joinWith(r, l("k") === r("k"), jt).collect()
+      assert(got.sortBy(_.toString).toSeq == want.sortBy(_.toString).toSeq, s"joinType=$jt")
+      // a null payload field leaves a matched row's slot non-null
+      assert(got.contains((L(1, null), R(1, 10))), s"joinType=$jt")
     }
   }
 
