@@ -48,10 +48,11 @@ import graft.sketch.CmsOps
   *    against the broadcast CMS — no driver-side hot-key list ever
   *    materializes, so the operator scales to arbitrarily many hot keys.
   *
-  * 100-TB design notes: per-side CMS is a single partial+final aggregate over
-  * only the key columns (column-pruned parquet scan); the broadcast payload is
-  * KB-scale regardless of data size; fan-out is capped at the shuffle
-  * parallelism; no collect() anywhere.
+  * 100-TB design notes: the sketches of every side a call fragments come from
+  * one partial+final aggregate ([[sketches]]) over only the key columns
+  * (column-pruned parquet scan); the broadcast payload is KB-scale regardless
+  * of data size; fan-out is capped at the shuffle parallelism; no collect()
+  * anywhere.
   */
 object SkewJoin {
 
@@ -115,8 +116,7 @@ object SkewJoin {
           // right side collapses to distinct keys anyway) → plain join.
           if (skewJoinConf.skewType.left)
             saltedSemiAnti(left, right, usingColumns, skewJoinConf.CMSseed, jt,
-              Some(replicationCol(left.sparkSession,
-                sketch(left, usingColumns, skewJoinConf), usingColumns, skewJoinConf)))
+              Some(replication(Seq(left), usingColumns, skewJoinConf).head))
           else left.join(right, usingColumns, jt)
         case other =>
           throw new IllegalArgumentException(
@@ -174,19 +174,37 @@ object SkewJoin {
     }
   }
 
-  /** THE sketch every skew path builds and probes: a CMS over
-    * [[cmsKey]]`(df, usingColumns)` with `conf`'s (eps, delta, seed). One
-    * aggregate job. */
-  private[graft] def sketch(
-      df: DataFrame, usingColumns: Seq[String], conf: SkewJoinConf): CountMinSketch =
-    CmsOps.cmsOf(df, cmsKey(df, usingColumns), conf.CMSeps, conf.CMSdelta, conf.CMSseed)
+  /** THE sketch builder of every skew and streaming path: one CMS per
+    * source over [[cmsKey]]`(source, usingColumns)` with `conf`'s (eps,
+    * delta, seed), all from ONE aggregate job over the tagged union of the
+    * sources' keys, each sketch counting only its own source's rows. The CMS
+    * aggregate skips nulls, so an empty source gets the empty sketch; no
+    * sources run no job. */
+  private[graft] def sketches(
+      sources: Seq[DataFrame], usingColumns: Seq[String], conf: SkewJoinConf): Seq[CountMinSketch] =
+    if (sources.isEmpty) Nil
+    else {
+      val tagged = sources.zipWithIndex.map { case (df, i) =>
+        df.select(cmsKey(df, usingColumns).as("__graft_k"), lit(i).as("__graft_src"))
+      }.reduce(_ union _)
+      val row = tagged.select(sources.indices.map(i => CmsOps.cmsAgg(
+        when(col("__graft_src") === i, col("__graft_k")),
+        conf.CMSeps, conf.CMSdelta, conf.CMSseed)): _*).head()
+      sources.indices.map(i => CmsOps.fromBytes(row.getAs[Array[Byte]](i)))
+    }
 
-  /** The empty sketch [[sketch]] would build over no rows (mergeable with it). */
-  private[graft] def emptySketch(conf: SkewJoinConf): CountMinSketch =
-    CountMinSketch.create(conf.CMSeps, 1.0 - conf.CMSdelta, conf.CMSseed)
+  /** Each source's replication column ([[replicationCol]] over its sketch
+    * from [[sketches]]), in the order of `sources`. */
+  private[graft] def replication(
+      sources: Seq[DataFrame], usingColumns: Seq[String], conf: SkewJoinConf): Seq[Column] =
+    sources.zip(sketches(sources, usingColumns, conf)).map { case (df, cms) =>
+      replicationCol(df.sparkSession, cms, usingColumns, conf)
+    }
 
-  /** THE replication policy, shared by the batch joins, the stream-static
-    * join and the refreshable hotness model: each row's fragment count from
+  /** THE replication policy, shared by [[replication]] (the batch joins, the
+    * stream-static and stream-stream joins) and the refreshable hotness
+    * model ([[graft.streaming.RefreshableHotness]] and its orchestrator's
+    * drift check): each row's fragment count from
     * `cms` (broadcast here, probed by [[replicationUdf]]), 1 when any key
     * column is null, fan-out capped at `conf.maxReplication` (default: the
     * session's shuffle partition count). */
@@ -263,29 +281,11 @@ object SkewJoin {
     val st = conf.skewType
     val needL = st.left && joinType != "right_outer"
     val needR = st.right && joinType != "left_outer"
-    def rep(cms: CountMinSketch): Column =
-      replicationCol(left.sparkSession, cms, usingColumns, conf)
-    // Sketches of the sides to fragment, broadcast (KB-to-MB scale). When
-    // both sides need one the two come from ONE job — a tagged union
-    // aggregated per side — so the scans run concurrently instead of as two
-    // sequential jobs (the reference ran one job per side).
-    val (repL, repR) =
-      if (needL && needR) {
-        def keyOf(df: DataFrame): Column = cmsKey(df, usingColumns)
-        val tagged = left.select(keyOf(left).as("__graft_k"), lit("l").as("__graft_side"))
-          .union(right.select(keyOf(right).as("__graft_k"), lit("r").as("__graft_side")))
-        val rows = tagged.groupBy("__graft_side")
-          .agg(CmsOps.cmsAgg(col("__graft_k"),
-            conf.CMSeps, conf.CMSdelta, conf.CMSseed).as("cms"))
-          .collect()
-        val bySide = rows.map(r =>
-          r.getString(0) -> CmsOps.fromBytes(r.getAs[Array[Byte]](1))).toMap
-        // a side absent from the union (empty input) gets an empty sketch
-        def get(side: String) = rep(bySide.getOrElse(side, emptySketch(conf)))
-        (Some(get("l")), Some(get("r")))
-      } else (
-        Option.when(needL)(rep(sketch(left, usingColumns, conf))),
-        Option.when(needR)(rep(sketch(right, usingColumns, conf))))
+    // the fragmenting sides' sketches come from one job (see [[sketches]])
+    val reps = replication(Option.when(needL)(left).toSeq ++ Option.when(needR)(right),
+      usingColumns, conf).iterator
+    val repL = Option.when(needL)(reps.next())
+    val repR = Option.when(needR)(reps.next())
     val seed = conf.CMSseed.toLong
     if (joinType != "full_outer")
       return fragmentReplicate(left, right, usingColumns, repL, repR, seed, joinType)
@@ -331,7 +331,7 @@ object SkewJoin {
 
   /** THE salt layout every skew join runs on (reference salting layout,
     * `dfimplicits.scala:110-116`). Each side with a `rep` column (a row's
-    * fragment count for its key, from [[replicationCol]] or a
+    * fragment count for its key, from [[replication]] or a
     * [[graft.streaming.RefreshableHotness]] model) fragments: its rows draw
     * a salt uniformly from `[0, rep)`, and the other side's rows are copied
     * once per salt `0 until rep`, so joining on the keys plus the returned

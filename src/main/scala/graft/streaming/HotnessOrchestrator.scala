@@ -1,9 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.util.sketch.CountMinSketch
 
 /** Monitor-driven restart orchestration for adaptive streaming skew joins.
   *
@@ -32,7 +31,8 @@ final class HotnessOrchestrator(
     driftThreshold: Int = 1) {
   require(driftThreshold >= 1, "driftThreshold must be at least 1")
 
-  @volatile private var pinned: CountMinSketch = _
+  // the running query's replication column, built from the snapshot it saw
+  @volatile private var pinned: Column = _
   @volatile private var active: StreamingQuery = _
   @volatile private var restartCount = 0
 
@@ -41,7 +41,7 @@ final class HotnessOrchestrator(
   def start(): StreamingQuery = synchronized {
     require(active == null || !active.isActive,
       "orchestrated query is already running")
-    pinned = hotness.snapshot
+    pinned = hotness.replication(SparkSession.active)
     active = startQuery()
     active
   }
@@ -55,37 +55,31 @@ final class HotnessOrchestrator(
   /** Monitor hook: fold the batch into the model, then count the batch's
     * distinct keys whose replication under the refreshed model differs from
     * the pinned (query-visible) snapshot; restart when the count reaches
-    * `driftThreshold`. */
+    * `driftThreshold`. Before [[start]] there is no query to re-plan, so the
+    * hook only folds: the first start builds on everything folded so far. */
   private[streaming] def observeAndMaybeRestart(batch: DataFrame): Unit = {
     hotness.observe(batch)
+    if (active == null) return
     val spark = batch.sparkSession
-    val cols = hotness.usingColumns
-    val oldRep = graft.skew.SkewJoin.replicationCol(
-      spark, pinned, cols, hotness.conf)
     val newRep = hotness.replication(spark)
-    val drifted = batch.select(cols.map(col): _*).distinct()
-      .select(when(oldRep =!= newRep, 1L).otherwise(0L).as("__graft_drift"))
-      .agg(coalesce(sum("__graft_drift"), lit(0L)).as("n"))
-      .head().getLong(0)
+    val drifted = batch.select(hotness.usingColumns.map(col): _*).distinct()
+      .filter(pinned =!= newRep).count()
     if (drifted >= driftThreshold) synchronized {
       val q = active
       if (q != null && q.isActive) q.stop()
       restartCount += 1
-      pinned = hotness.snapshot
+      pinned = hotness.replication(spark)
       active = startQuery()
     }
   }
 
   /** [[RefreshableHotness.attachMonitor]] with the restart hook wired in:
-    * same key-column-only side query, same checkpoint contract (pass one so
-    * a restarted monitor folds each event exactly once). */
+    * the same monitor query ([[RefreshableHotness.monitor]]), same
+    * checkpoint contract (pass one so a restarted monitor folds each event
+    * exactly once). A monitor attached before [[start]] only folds. */
   def attachMonitor(
-      stream: DataFrame, checkpoint: Option[String] = None): StreamingQuery = {
-    val w = stream.select(hotness.usingColumns.map(col): _*).writeStream
-      .outputMode("append")
-      .foreachBatch { (b: DataFrame, _: Long) => observeAndMaybeRestart(b) }
-    checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
+      stream: DataFrame, checkpoint: Option[String] = None): StreamingQuery =
+    hotness.monitor(stream, checkpoint)(observeAndMaybeRestart)
 
   /** Stop the active query (the monitor is owned by the caller). */
   def stop(): Unit = synchronized {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.util.sketch.CountMinSketch
 
+import graft.sketch.CmsOps
 import graft.skew.{SkewJoin, SkewJoinConf}
 
 /** Refreshable hotness model for streaming skew mitigation.
@@ -16,6 +17,8 @@ import graft.skew.{SkewJoin, SkewJoinConf}
   * seeded from the historical sample and then FOLDED FORWARD per
   * micro-batch by a `foreachBatch` monitor over the live stream
   * ([[attachMonitor]]), so the model tracks the union of everything seen.
+  * Without a sample the model starts empty and replicates nothing until
+  * its first fold. Every sketch comes from [[graft.skew.SkewJoin.sketches]].
   *
   * Merge mechanics: Spark's `CountMinSketch` is a monoid — sketches built
   * with the same (eps, delta, seed) merge exactly (`mergeInPlace`), so each
@@ -43,8 +46,9 @@ final class RefreshableHotness(
     val conf: SkewJoinConf = SkewJoinConf(),
     initialSample: Option[DataFrame] = None) {
 
-  private val sketch: CountMinSketch = initialSample
-    .fold(SkewJoin.emptySketch(conf))(SkewJoin.sketch(_, usingColumns, conf))
+  // None until a sample or a batch is folded in
+  private var sketch: Option[CountMinSketch] =
+    SkewJoin.sketches(initialSample.toSeq, usingColumns, conf).headOption
 
   /** Fold one micro-batch (or any sample frame) into the model: one
     * aggregate job over the batch, one sketch merge on the driver. The
@@ -54,14 +58,14 @@ final class RefreshableHotness(
     * (the sketch is width×depth longs: KBs at the default eps, ~4 MB at
     * eps = 1e-4 — copying it per batch would dominate the monitor). */
   def observe(batch: DataFrame): Unit = {
-    val b = SkewJoin.sketch(batch, usingColumns, conf)
-    synchronized { sketch.mergeInPlace(b) }
+    val b = SkewJoin.sketches(Seq(batch), usingColumns, conf).head
+    synchronized { sketch = Some(sketch.fold(b)(_.mergeInPlace(b))) }
   }
 
   /** Immutable snapshot of the current sketch (safe to broadcast — the
-    * master keeps mutating underneath). */
-  def snapshot: CountMinSketch =
-    synchronized { RefreshableHotness.copyOf(sketch) }
+    * master keeps mutating underneath); None until something is folded in. */
+  def snapshot: Option[CountMinSketch] =
+    synchronized { sketch.map(s => CmsOps.fromBytes(s.toByteArray)) }
 
   /** Per-row replication column from the CURRENT snapshot (same debiased
     * formula as the batch skew join). Sampled when the query plan is built:
@@ -69,13 +73,13 @@ final class RefreshableHotness(
     * Each call broadcasts its snapshot; the broadcast lives as long as the
     * query plan referencing it and is reclaimed by Spark's ContextCleaner
     * once the plan is dropped — superseded snapshots are NOT destroyed
-    * eagerly here, because an older still-running query may hold one. */
+    * eagerly here, because an older still-running query may hold one. An
+    * empty model replicates nothing. */
   def replication(spark: SparkSession): Column =
-    SkewJoin.replicationCol(spark, snapshot, usingColumns, conf)
+    snapshot.fold(lit(1))(SkewJoin.replicationCol(spark, _, usingColumns, conf))
 
   /** Start the monitor: a lightweight side query that folds every
-    * micro-batch of `stream` into the model. Projects to the key columns
-    * before the sink, so the monitor ships keys, not payloads.
+    * micro-batch of `stream` into the model (see [[monitor]]).
     *
     * Pass `checkpoint` for any monitor that can restart on a live model:
     * without one, a restarted file-source monitor replays the source from
@@ -85,20 +89,18 @@ final class RefreshableHotness(
     * but the join buffers salted state it never needed). With a checkpoint
     * the restarted monitor resumes from its committed offsets and each
     * event is folded exactly once. */
-  def attachMonitor(stream: DataFrame, checkpoint: Option[String] = None): StreamingQuery = {
+  def attachMonitor(stream: DataFrame, checkpoint: Option[String] = None): StreamingQuery =
+    monitor(stream, checkpoint)(observe)
+
+  /** The monitor query behind [[attachMonitor]] and
+    * [[HotnessOrchestrator.attachMonitor]]: projects `stream` to the key
+    * columns before the sink, so the monitor ships keys, not payloads, and
+    * hands each micro-batch to `onBatch`. */
+  private[streaming] def monitor(stream: DataFrame, checkpoint: Option[String])(
+      onBatch: DataFrame => Unit): StreamingQuery = {
     val w = stream.select(usingColumns.map(col): _*).writeStream
       .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) => observe(batch) }
+      .foreachBatch { (batch: DataFrame, _: Long) => onBatch(batch) }
     checkpoint.fold(w)(c => w.option("checkpointLocation", c)).start()
-  }
-}
-
-object RefreshableHotness {
-  /** Deep copy via the sketch's own serialization (CountMinSketch exposes
-    * no copy; `mergeInPlace` mutates its receiver). */
-  private def copyOf(c: CountMinSketch): CountMinSketch = {
-    val bos = new java.io.ByteArrayOutputStream()
-    c.writeTo(bos)
-    CountMinSketch.readFrom(new java.io.ByteArrayInputStream(bos.toByteArray))
   }
 }

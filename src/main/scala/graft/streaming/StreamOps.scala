@@ -111,14 +111,12 @@ object StreamOps {
 
   /** CMS-gated salted stream-static equi-join: only HOT keys are salted.
     *
-    * A Count-Min Sketch over `hotKeySource` (default: the static side; pass
-    * a historical sample of the stream when stream-side hotness is the
-    * concern) drives a per-key replication factor via the same debiased
-    * formula as the batch [[graft.skew.SkewJoin]], and the join runs on its
-    * fragment-replicate core. Static rows for a key are replicated
-    * `rep(key)` times; stream rows are salted uniformly into `[0, rep(key))`
-    * (salts drawn with `conf.CMSseed`), so a hot key's join work spreads
-    * across `rep(key)` tasks. Cold keys get rep = 1 — no replication, no
+    * A Count-Min Sketch over the static side drives a per-key replication
+    * factor via the same debiased formula as the batch [[graft.skew.SkewJoin]],
+    * and the join runs on its fragment-replicate core. Static rows for a key
+    * are replicated `rep(key)` times; stream rows are salted uniformly into
+    * `[0, rep(key))` (salts drawn with `conf.CMSseed`), so a hot key's join
+    * work spreads across `rep(key)` tasks. Cold keys get rep = 1 — no replication, no
     * extra shuffle volume (the previous design replicated the ENTIRE static
     * side 8× unconditionally, turning a 1-TB dimension into 8 TB of shuffle
     * whether or not any key was hot). Row multiset equals the plain stream-static
@@ -129,23 +127,10 @@ object StreamOps {
       stream: DataFrame,
       static: DataFrame,
       usingColumns: Seq[String],
-      conf: graft.skew.SkewJoinConf = graft.skew.SkewJoinConf(),
-      hotKeySource: Option[DataFrame] = None): DataFrame =
+      conf: graft.skew.SkewJoinConf = graft.skew.SkewJoinConf()): DataFrame =
     SkewJoin.fragmentReplicate(stream, static, usingColumns,
-      Some(replicationCol(static, usingColumns, conf, hotKeySource)), None,
+      Some(SkewJoin.replication(Seq(static), usingColumns, conf).head), None,
       conf.CMSseed, "inner")
-
-  /** Per-key replication column for the gated stream-static join: a CMS over
-    * `hotKeySource` (default: the static side), probed per row with the
-    * debiased batch formula. Evaluates to 1 for cold and null keys. */
-  private[graft] def replicationCol(
-      static: DataFrame,
-      usingColumns: Seq[String],
-      conf: graft.skew.SkewJoinConf,
-      hotKeySource: Option[DataFrame]): Column = {
-    val cms = SkewJoin.sketch(hotKeySource.getOrElse(static), usingColumns, conf)
-    SkewJoin.replicationCol(static.sparkSession, cms, usingColumns, conf)
-  }
 
   /** Watermarked stream-STREAM interval equi-join: each left row pairs with
     * the right rows sharing its `usingCols` whose event time falls in
@@ -200,7 +185,8 @@ object StreamOps {
       conf: graft.skew.SkewJoinConf = graft.skew.SkewJoinConf(),
       watermark: String = "1 hour"): DataFrame =
     saltedIntervalJoin(left, right, usingCols, lower, upper,
-      Some(replicationCol(hotKeySource, usingCols, conf, None)), conf.CMSseed, watermark)
+      Some(SkewJoin.replication(Seq(hotKeySource), usingCols, conf).head), conf.CMSseed,
+      watermark)
 
   /** [[skewedIntervalJoin]] with an adaptive hotness model: the replication
     * column probes `hotness`'s CURRENT sketch snapshot — seeded from a

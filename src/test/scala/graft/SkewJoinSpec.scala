@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -256,15 +257,53 @@ class SkewJoinSpec extends AnyFunSuite {
     import spark.implicits._
     val a = Seq((1L, "x"), (2L, "y")).toDF("k", "va")
     val empty = Seq.empty[(Long, String)].toDF("k", "vb")
-    joinTypes.foreach { jt =>
-      withClue(s"empty right, joinType=$jt: ") {
-        a.skewJoin(empty, Seq("k"), jt, conf)
+    for (st <- Seq(LeftSkew, RightSkew, CrossSkew); jt <- joinTypes) {
+      val cfg = conf.copy(skewType = st)
+      withClue(s"empty right, skewType=$st, joinType=$jt: ") {
+        a.skewJoin(empty, Seq("k"), jt, cfg)
           .ensureDatasetEquals(a.join(empty, Seq("k"), jt))
       }
-      withClue(s"empty left, joinType=$jt: ") {
-        empty.skewJoin(a.toDF("k", "vb"), Seq("k"), jt, conf)
+      withClue(s"empty left, skewType=$st, joinType=$jt: ") {
+        empty.skewJoin(a.toDF("k", "vb"), Seq("k"), jt, cfg)
           .ensureDatasetEquals(empty.join(a.toDF("k", "vb"), Seq("k"), jt))
       }
+    }
+  }
+
+  test("every entry point sketches its fragmenting sides in one job (job-count witness)") {
+    // jobs a call runs before it returns, i.e. its eager sketch build. AQE
+    // counts each map stage as a job, so counts are compared with each other
+    val sc = spark.sparkContext
+    def jobsOf(body: => Any): Int = {
+      val tag = s"skew-jobs-${SkewJoinSpec.counter.incrementAndGet()}"
+      sc.setJobGroup(tag, tag)
+      try body finally sc.clearJobGroup()
+      // statusTracker is fed by the async listener bus
+      Bridge.drainListeners(sc)
+      sc.statusTracker.getJobIdsForGroup(tag).length
+    }
+    // inputs built outside the count: reading a parquet schema may run a job
+    val l = li
+    val o = orders.withColumnRenamed("o_orderkey", "l_orderkey")
+    val stream = graft.streaming.StreamOps.eventsStream(spark, s"$sf/events.parquet")
+    val static = customer.withColumnRenamed("c_custkey", "user_id")
+    val oneSide = jobsOf(l.skewJoin(o, Seq("l_orderkey"), "inner", conf.copy(skewType = LeftSkew)))
+    assert(oneSide > 0, "LeftSkew inner ran no sketch job")
+    Seq("inner", "full_outer").foreach { jt =>
+      val n = jobsOf(l.skewJoin(o, Seq("l_orderkey"), jt, conf))
+      assert(n == oneSide, s"CrossSkew $jt ran $n jobs, LeftSkew inner $oneSide")
+    }
+    val semi = jobsOf(
+      l.skewJoin(o, Seq("l_orderkey"), "left_semi", conf.copy(skewType = RightSkew)))
+    assert(semi == 0, s"RightSkew left_semi fragments nothing but ran $semi jobs")
+    val others = Seq(
+      "streamStaticSkewJoin" -> jobsOf(graft.streaming.StreamOps.streamStaticSkewJoin(
+        stream, static, Seq("user_id"), conf)),
+      "RefreshableHotness.observe" -> jobsOf(
+        new graft.streaming.RefreshableHotness(Seq("l_orderkey"), conf).observe(l)),
+      "hint(skew)" -> jobsOf(l.hint("skew").join(o, Seq("l_orderkey"))))
+    others.foreach { case (name, n) =>
+      assert(n == oneSide, s"$name ran $n jobs, a one-side skewJoin $oneSide")
     }
   }
 

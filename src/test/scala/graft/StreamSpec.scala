@@ -96,7 +96,7 @@ class StreamSpec extends AnyFunSuite {
     assert(salted.queryExecution.analyzed.toString.contains("__graft_salt"))
     // and the gate must actually replicate the hot key > 1×
     val reps = hist.withColumn("__rep",
-        StreamOps.replicationCol(hist, Seq("user_id"), conf, None))
+        graft.skew.SkewJoin.replication(Seq(hist), Seq("user_id"), conf).head)
       .filter(col("user_id") === 7L).select("__rep").distinct()
       .collect().map(_.getInt(0))
     assert(reps.nonEmpty && reps.forall(_ > 1), s"hot key rep = ${reps.toSeq}")
@@ -159,28 +159,28 @@ class StreamSpec extends AnyFunSuite {
     got.ensureDatasetEquals(want)
   }
 
-  test("orchestrator: a mid-stream-hot key is salted after an AUTOMATED restart") {
+  /** An orchestrated adaptive interval join (purchases ⋈ clicks) over a
+    * model in which key 7 is hot and key 99 unseen, and a monitor over a
+    * stream in which key 99 turns hot. `repAtStart` holds rep(99) as each
+    * (re)started join saw it: the factory reads it at build time, when the
+    * model cannot move (folds happen on the test thread). */
+  private class Orchestrated(tag: String) {
     import spark.implicits._
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     import graft.skew.SkewJoinConf
     import graft.streaming.{HotnessOrchestrator, RefreshableHotness}
-    val conf = SkewJoinConf(CMSeps = 1e-4, replicationFactor = 0.05)
-    // historical model: key 7 hot, key 99 unseen
-    val hist = (batchEvents.select("user_id") unionAll
+    private val hist = (batchEvents.select("user_id") unionAll
       (1 to 400).map(_ => 7L).toDF("user_id"))
-    val hot = new RefreshableHotness(Seq("user_id"), conf, Some(hist))
+    val hot = new RefreshableHotness(Seq("user_id"),
+      SkewJoinConf(CMSeps = 1e-4, replicationFactor = 0.05), Some(hist))
     def repOf(k: Long): Int =
       Seq(k).toDF("user_id")
         .withColumn("__rep", hot.replication(spark)).head().getInt(1)
-    val outDir = java.nio.file.Files.createTempDirectory("graft_orch_out_")
-    val joinCkpt = java.nio.file.Files.createTempDirectory("graft_orch_ck_")
-    val monDir = java.nio.file.Files.createTempDirectory("graft_orch_mon_")
-    val monCkpt = java.nio.file.Files.createTempDirectory("graft_orch_mck_")
+    private val Seq(outDir, joinCkpt, monDir, monCkpt) = Seq("out", "ck", "mon", "mck")
+      .map(d => java.nio.file.Files.createTempDirectory(s"${tag}_${d}_"))
     Seq(outDir, joinCkpt, monDir, monCkpt).foreach(_.toFile.deleteOnExit())
-    // rep(99) as seen by each (re)started join: the factory records it at
-    // build time, when the model cannot move (folds happen on this thread)
     val repAtStart = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def factory(): org.apache.spark.sql.streaming.StreamingQuery = {
+    private def factory(): org.apache.spark.sql.streaming.StreamingQuery = {
       val ev = StreamOps.eventsStream(spark, s"$sf/events.parquet")
       val purch = ev.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id").as("p_event_id"), col("ts"))
@@ -197,11 +197,8 @@ class StreamSpec extends AnyFunSuite {
         .outputMode("append").start()
     }
     val orch = new HotnessOrchestrator(hot, () => factory(), driftThreshold = 1)
-    val first = orch.start()
-    try {
-      first.processAllAvailable()
-      // key 99 becomes hot mid-stream; the orchestrated monitor folds it,
-      // sees the drift, and restarts the join on its own
+    /** Key 99 turns hot: 400 rows through the orchestrated monitor. */
+    def foldHotKey(): Unit = {
       (1 to 400).map(_ => 99L).toDF("user_id")
         .write.mode("overwrite").parquet(monDir.toString)
       val mon = orch.attachMonitor(
@@ -210,6 +207,18 @@ class StreamSpec extends AnyFunSuite {
           .parquet(monDir.toString),
         Some(monCkpt.toString))
       try mon.processAllAvailable() finally mon.stop()
+    }
+  }
+
+  test("orchestrator: a mid-stream-hot key is salted after an AUTOMATED restart") {
+    val o = new Orchestrated("graft_orch")
+    import o._
+    val first = orch.start()
+    try {
+      first.processAllAvailable()
+      // key 99 becomes hot mid-stream; the orchestrated monitor folds it,
+      // sees the drift, and restarts the join on its own
+      foldHotKey()
       assert(orch.restarts == 1, s"expected 1 automated restart, got ${orch.restarts}")
       assert(orch.activeQuery.isActive, "restarted query is not running")
       assert(!(orch.activeQuery eq first), "restart must build a NEW query")
@@ -219,6 +228,22 @@ class StreamSpec extends AnyFunSuite {
       assert(repAtStart(0) == 1, s"initial query already salted 99: ${repAtStart(0)}")
       assert(repAtStart(1) > 1, s"restarted query does not salt 99: ${repAtStart(1)}")
       assert(repOf(7L) > 1, "historical hot key lost its salting")
+    } finally orch.stop()
+  }
+
+  test("orchestrator: a monitor attached before start() only folds") {
+    val o = new Orchestrated("graft_orch0")
+    import o._
+    // no query is running yet: the monitor folds key 99 and re-plans nothing
+    foldHotKey()
+    assert(orch.restarts == 0, s"restarted ${orch.restarts} times before start()")
+    assert(orch.activeQuery == null, "a query started before start()")
+    assert(repAtStart.isEmpty, s"factory ran ${repAtStart.size} times before start()")
+    // the first start builds on everything folded so far
+    try {
+      orch.start().processAllAvailable()
+      assert(repAtStart.toSeq.length == 1, s"factory ran ${repAtStart.size} times")
+      assert(repAtStart(0) > 1, s"started query does not salt 99: ${repAtStart(0)}")
     } finally orch.stop()
   }
 
@@ -555,12 +580,13 @@ class StreamSpec extends AnyFunSuite {
   test("stream-static join replicates nothing on uniform keys, only hot keys on skew") {
     import spark.implicits._
     import graft.skew.SkewJoinConf
-    import graft.streaming.StreamOps.replicationCol
     val conf = SkewJoinConf(CMSeps = 1e-4, replicationFactor = 0.5)
+    def replicationCol(df: org.apache.spark.sql.DataFrame) =
+      graft.skew.SkewJoin.replication(Seq(df), Seq("k"), conf).head
     // uniform: every key once → rep must be 1 everywhere (< 2× input)
     val uniform = (1L to 500L).map(k => (k, s"v$k")).toDF("k", "v")
     val uniReplicated = uniform
-      .withColumn("__rep", replicationCol(uniform, Seq("k"), conf, None))
+      .withColumn("__rep", replicationCol(uniform))
       .agg(sum("__rep")).head().getLong(0)
     assert(uniReplicated < 2 * 500,
       s"uniform static side replicated $uniReplicated rows from 500")
@@ -569,7 +595,7 @@ class StreamSpec extends AnyFunSuite {
     val skewed = ((1L to 400L).map(k => (k, s"v$k")) ++
       (1 to 100).map(i => (999L, s"hot$i"))).toDF("k", "v")
     val reps = skewed
-      .withColumn("__rep", replicationCol(skewed, Seq("k"), conf, None))
+      .withColumn("__rep", replicationCol(skewed))
       .select("k", "__rep").collect().map(r => (r.getLong(0), r.getInt(1)))
     val (hot, cold) = reps.partition(_._1 == 999L)
     assert(hot.forall(_._2 > 1), s"hot key not replicated: ${hot.take(3).toSeq}")
@@ -584,12 +610,19 @@ class StreamSpec extends AnyFunSuite {
     val static = ((1L to 50L).map(k => (k, s"dim$k")) ++
       (1 to 50).map(i => (7L, s"hotdim$i"))).toDF("user_id", "dim")
     val streamIn = batchEvents.filter(col("user_id") <= 60)
+    val joined = StreamOps.streamStaticSkewJoin(
+      StreamOps.eventsStream(spark, s"$sf/events.parquet")
+        .filter(col("user_id") <= 60),
+      static, Seq("user_id"), conf)
+    // the join runs the salted layout, and the hot key really replicates
+    assert(joined.queryExecution.analyzed.toString.contains("__graft_salt_l"))
+    val reps = static
+      .withColumn("__rep", graft.skew.SkewJoin.replication(Seq(static), Seq("user_id"), conf).head)
+      .filter(col("user_id") === 7L).select("__rep").distinct()
+      .collect().map(_.getInt(0))
+    assert(reps.nonEmpty && reps.forall(_ > 1), s"hot key rep = ${reps.toSeq}")
     val streamed = StreamOps.runToMemory(spark,
-      StreamOps.streamStaticSkewJoin(
-        StreamOps.eventsStream(spark, s"$sf/events.parquet")
-          .filter(col("user_id") <= 60),
-        static, Seq("user_id"), conf)
-        .groupBy("user_id").agg(count(lit(1)).as("n")),
+      joined.groupBy("user_id").agg(count(lit(1)).as("n")),
       "t_stream_hotjoin")
     val batch = streamIn.join(static, Seq("user_id"), "inner")
       .groupBy("user_id").agg(count(lit(1)).as("n"))
