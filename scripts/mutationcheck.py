@@ -83,7 +83,8 @@ MUTANTS = [
      "file": "src/main/scala/graft/skew/SkewJoin.scala",
      "old": "explode(sequence(lit(0), col(r) - 1))",
      "new": "explode(sequence(lit(1), col(r) - 1))",
-     "queries": ["skewjoin_inner", "skewjoin_left", "stream_skew_interval"]},
+     "queries": ["skewjoin_inner", "skewjoin_left", "stream_skew_interval",
+                 "skewjoin_typed"]},
     # M6 history: the final-agg min->max was equivalent (unique values at
     # the fixpoint); the smallStar ELECTION min->max also survived the full
     # surface — star rewiring only moves edges WITHIN a component, and
@@ -129,6 +130,15 @@ MUTANTS = [
      "old": ".agg(min(struct(col(\"id\"), col(\"pos\"))).as(\"o\"))",
      "new": ".agg(max(struct(col(\"id\"), col(\"pos\"))).as(\"o\"))",
      "queries": ["dedup_paragraphs", "dedup_substring_apply"]},
+    # GroupedRank.rangedPrefix is the one range-partitioned prefix scan
+    # under both the rank family and RunningExtremum: a prefix that takes
+    # in its own partition double-counts it (ranks shift, running maxima
+    # see rows after them)
+    {"id": "M13", "desc": "ranged prefix window includes its own partition (-1 -> 0)",
+     "file": "src/main/scala/graft/operators/GroupedRank.scala",
+     "old": ".rowsBetween(Window.unboundedPreceding, -1)",
+     "new": ".rowsBetween(Window.unboundedPreceding, 0)",
+     "queries": ["events_ntile", "watermark_audit"]},
 ]
 
 

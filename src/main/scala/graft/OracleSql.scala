@@ -1323,7 +1323,7 @@ private[graft] object OracleSql {
       """SELECT c.c_custkey AS custkey, c.c_name AS c_name,
         |  o.o_orderkey AS o_orderkey, o.o_totalprice AS o_totalprice,
         |  (o.o_orderkey IS NULL) AS unmatched
-        |FROM customer c LEFT JOIN orders o ON c.c_custkey = o.o_custkey""".stripMargin),
+        |FROM customer c FULL JOIN orders o ON c.c_custkey = o.o_custkey""".stripMargin),
 
     "decontaminate" -> decontaminateSql(),
 

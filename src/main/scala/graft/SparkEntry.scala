@@ -2943,7 +2943,10 @@ object SparkEntry {
       // README.md:27) oracle-gated on an OUTER type: customers with no
       // orders must surface a NULL _2 slot (the slot itself, not just its
       // data columns) — flattened to columns for the DuckDB hash compare,
-      // with `unmatched` pinning the null-slot itself
+      // with `unmatched` pinning the null-slot itself. RightSkew fragments
+      // `orders`, whose busy customers replicate at testConf even at
+      // sf0.01 (customer keys are unique, so fragmenting that side never
+      // salts any key)
       import s.implicits._
       val cust = t(s, dir, "customer")
         .select(col("c_custkey").as("custkey"), col("c_name")).as[TKCust]
@@ -2951,7 +2954,8 @@ object SparkEntry {
         .select(col("o_custkey").as("custkey"), col("o_orderkey"),
           col("o_totalprice")).as[TKOrd]
       new graft.skew.SkewJoin.SkewJoinTypedOps(cust)
-        .skewJoinWith(ord, Seq("custkey"), "left_outer", testConf)
+        .skewJoinWith(ord, Seq("custkey"), "full_outer",
+          testConf.copy(skewType = graft.skew.RightSkew))
         .select(
           col("_1.custkey").as("custkey"),
           col("_1.c_name").as("c_name"),

@@ -1566,7 +1566,7 @@ object Dedup {
       // total). The sibling set-based families measurably do NOT want this
       // pin (their consumers are byte-proportional, and pinning them
       // regressed the LSH family ~30% — measured, reverted).
-      .transform(graft.sources.Spread.pinned(col("id")))
+      .transform(graft.sources.Spread.pinParallel(_, col("id")))
       .localCheckpoint()
 
     // segment i of a length-La string: start i*q + min(i, r), width

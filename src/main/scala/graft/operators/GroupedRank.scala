@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{Window, WindowSpec}
 import org.apache.spark.sql.functions._
 
 /** Exact per-group ranks and ntile WITHOUT a per-group single-task sort.
@@ -48,10 +48,14 @@ import org.apache.spark.sql.functions._
   * once and reused across their jobs (no extra copy vs the ReusedExchange
   * plan), and no optimizer rewrite can fork it. The explicit partition
   * count additionally keeps `spark_partition_id()` = range bucket id under
-  * any AQE coalescing config (REPARTITION_BY_NUM is coalesce-exempt). The
-  * GroupedRankSpec hostile-AQE pins (including the stacked-rank spearman
-  * shape that reproduced the r18 failure) are mandatory for any change to
-  * this file.
+  * any AQE coalescing config (REPARTITION_BY_NUM is coalesce-exempt).
+  *
+  * One core, [[rangedPrefix]], holds this scheme for both operators built
+  * on it: [[withGroupRank]] (and the ntile/percentile forms above it) and
+  * [[RunningExtremum.withRunningMax]]. The hostile-AQE sweeps of
+  * GroupedRankSpec (including the stacked-rank spearman shape that
+  * reproduced the r18 failure) and of RunningExtremumSpec are mandatory
+  * for any change to this file.
   */
 object GroupedRank {
 
@@ -72,7 +76,34 @@ object GroupedRank {
       df: DataFrame,
       groupCols: Seq[String],
       orderCols: Seq[Column],
-      rankCol: String = "rank"): DataFrame = {
+      rankCol: String = "rank"): DataFrame =
+    rangedPrefix(df, groupCols, orderCols,
+      local = w => row_number().over(w),
+      part = count(lit(1)),
+      offset = (c, w) => coalesce(sum(c).over(w), lit(0L)))
+      .withColumn(rankCol, col(Offset) + col(Local))
+      .drop(Local, Offset)
+
+  // the two columns rangedPrefix adds to its input
+  private[operators] val Local = "__graft_lrn"
+  private[operators] val Offset = "__graft_off"
+
+  /** The scheme of the class doc, for [[withGroupRank]] and
+    * [[RunningExtremum.withRunningMax]]: `df` plus [[Local]] = `local` over
+    * the row's `(partition, group)` window in `orderCols` order, and
+    * [[Offset]] = `offset(p, w)`, with `p` the `part` aggregate per
+    * `(partition, group)` and `w` the group's window over the STRICTLY
+    * preceding partitions. Eager and an optimizer barrier. */
+  private[operators] def rangedPrefix(
+      df: DataFrame,
+      groupCols: Seq[String],
+      orderCols: Seq[Column],
+      local: WindowSpec => Column,
+      part: Column,
+      offset: (Column, WindowSpec) => Column): DataFrame = {
+    val internal = Seq("__graft_pid", Local, Offset)
+    require(df.columns.intersect(internal).isEmpty,
+      s"input must not use internal names ${internal.mkString(", ")}")
     // correctness dependency, not just cost (see class doc): the counts
     // branch and the join branch MUST read one physical range exchange
     // EXPLICIT partition count: a count-less `repartitionByRange` plans a
@@ -97,16 +128,16 @@ object GroupedRank {
     val wLocal = Window
       .partitionBy(("__graft_pid" +: groupCols).map(col): _*)
       .orderBy(orderCols: _*)
-    val local = ranged.withColumn("__graft_lrn", row_number().over(wLocal))
-    val counts = local
+    val locals = ranged.withColumn(Local, local(wLocal))
+    val parts = locals
       .groupBy(("__graft_pid" +: groupCols).map(col): _*)
-      .agg(count(lit(1)).as("__graft_c"))
+      .agg(part.as("__graft_c"))
     val wOff = Window.partitionBy(groupCols.map(col): _*)
       .orderBy("__graft_pid")
       .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = counts
-      .withColumn("__graft_off", coalesce(sum("__graft_c").over(wOff), lit(0L)))
-      .select(("__graft_pid" +: groupCols).map(col) :+ col("__graft_off"): _*)
+    val offsets = parts
+      .withColumn(Offset, offset(col("__graft_c"), wOff))
+      .select(("__graft_pid" +: groupCols).map(col) :+ col(Offset): _*)
     // NULL-SAFE group equality: groupBy/Window treat NULL as an ordinary
     // group, so the join back must too — a plain equi-join would silently
     // drop every NULL-group row
@@ -116,10 +147,9 @@ object GroupedRank {
       }
     val cond = (Seq(col("__graft_pid") === col("__graft_o_pid")) ++
       groupCols.map(c => col(c) <=> col(s"__graft_o_$c"))).reduce(_ && _)
-    local
+    locals
       .join(broadcast(offR), cond)
-      .withColumn(rankCol, col("__graft_off") + col("__graft_lrn"))
-      .drop(Seq("__graft_pid", "__graft_lrn", "__graft_off", "__graft_o_pid") ++
+      .drop(Seq("__graft_pid", "__graft_o_pid") ++
         groupCols.map(c => s"__graft_o_$c"): _*)
   }
 

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import GroupedRank.{Local, Offset}
+
 /** Exact per-group RUNNING MAX without a per-group single-task sort —
   * [[GroupedRank]]'s two-phase range-partition scheme applied to a
   * cumulative extremum instead of a rank:
@@ -21,11 +23,9 @@ import org.apache.spark.sql.functions._
   * group (ties could land in either adjacent partition — same contract
   * as GroupedRank).
   *
-  * Same REUSE CORRECTNESS CONTRACT as GroupedRank: the offsets branch and
-  * the join branch must read ONE physical range exchange (boundaries are
-  * sampled per instance), so both are built from the single `ranged` val
-  * with nothing between the exchange and the fork; do not differentiate
-  * the branches below the exchange.
+  * It runs on [[GroupedRank.rangedPrefix]], so it reads one materialized
+  * range exchange with an explicit partition count and, like
+  * [[GroupedRank.withGroupRank]], is eager and an optimizer barrier.
   */
 object RunningExtremum {
 
@@ -37,48 +37,15 @@ object RunningExtremum {
       orderCols: Seq[Column],
       valueCol: String,
       outCol: String = "running_max"): DataFrame = {
-    require(df.sparkSession.sessionState.conf.exchangeReuseEnabled,
-      "RunningExtremum requires spark.sql.exchange.reuse=true (range " +
-        "boundaries are sampled per exchange instance; without reuse the " +
-        "prefix maxima and the local maxima could disagree on partition ids)")
     require(!df.columns.contains(outCol),
       s"RunningExtremum: output column '$outCol' already exists")
-    val internal = Seq("__graft_rmpid", "__graft_rmlocal", "__graft_rmoff",
-      "__graft_rmpmax", "__graft_rmo_pid")
-    require(df.columns.intersect(internal).isEmpty,
-      s"RunningExtremum: input must not use internal names ${internal.mkString(", ")}")
-    val ranged = df
-      .repartitionByRange((groupCols.map(col) ++ orderCols): _*)
-      .withColumn("__graft_rmpid", spark_partition_id())
-    val wLocal = Window
-      .partitionBy(("__graft_rmpid" +: groupCols).map(col): _*)
-      .orderBy(orderCols: _*)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val local = ranged.withColumn("__graft_rmlocal",
-      max(col(valueCol)).over(wLocal))
-    val partMax = local
-      .groupBy(("__graft_rmpid" +: groupCols).map(col): _*)
-      .agg(max(col(valueCol)).as("__graft_rmpmax"))
-    val wOff = Window.partitionBy(groupCols.map(col): _*)
-      .orderBy("__graft_rmpid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = partMax
-      .withColumn("__graft_rmoff", max("__graft_rmpmax").over(wOff))
-      .select(("__graft_rmpid" +: groupCols).map(col)
-        :+ col("__graft_rmoff"): _*)
-    val offR = groupCols.foldLeft(
-        offsets.withColumnRenamed("__graft_rmpid", "__graft_rmo_pid")) {
-        (d, c) => d.withColumnRenamed(c, s"__graft_rmo_$c")
-      }
-    // NULL-SAFE group equality (NULL is an ordinary group, as everywhere)
-    val cond = (Seq(col("__graft_rmpid") === col("__graft_rmo_pid")) ++
-      groupCols.map(c => col(c) <=> col(s"__graft_rmo_$c"))).reduce(_ && _)
-    local
-      .join(broadcast(offR), cond)
+    GroupedRank.rangedPrefix(df, groupCols, orderCols,
+      local = w => max(col(valueCol))
+        .over(w.rowsBetween(Window.unboundedPreceding, 0)),
+      part = max(col(valueCol)),
+      offset = (c, w) => max(c).over(w))
       .withColumn(outCol,
-        greatest(col("__graft_rmlocal"),
-          coalesce(col("__graft_rmoff"), col("__graft_rmlocal"))))
-      .drop(Seq("__graft_rmpid", "__graft_rmlocal", "__graft_rmoff",
-        "__graft_rmo_pid") ++ groupCols.map(c => s"__graft_rmo_$c"): _*)
+        greatest(col(Local), coalesce(col(Offset), col(Local))))
+      .drop(Local, Offset)
   }
 }

@@ -55,17 +55,4 @@ object Spread {
     val n = ds.sparkSession.sparkContext.defaultParallelism
     if (keys.isEmpty) ds.repartition(n) else ds.repartition(n, keys: _*)
   }
-
-  /** Chain-friendly [[pinParallel]] for `.transform(...)` use at keyed
-    * MATERIALIZATION points (`repartition(col)` + `localCheckpoint`, or a
-    * keyed exchange whose read stage does the CPU-dense work). A count-less
-    * `repartition(cols…)` plans REPARTITION_BY_COL, which AQE's
-    * byte-targeted coalescing may legally collapse to 1-2 partitions when
-    * the rows are narrow — and a materialized frame's partitioning caps the
-    * parallelism of EVERY downstream consumer (broadcast builds, set
-    * merges, pair scoring). The explicit count (REPARTITION_BY_NUM,
-    * coalesce-exempt) keeps those stages at cluster parallelism; the count
-    * is `defaultParallelism`, scale-adaptive by construction. */
-  def pinned[T](keys: Column*)(ds: Dataset[T]): Dataset[T] =
-    pinParallel(ds, keys: _*)
 }

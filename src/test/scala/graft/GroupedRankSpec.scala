@@ -50,9 +50,7 @@ class GroupedRankSpec extends AnyFunSuite {
       // force coalescing to actually engage on the tiny test exchange
       "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64m")
-    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    HostileAqe.withConfs(spark, confs) {
       val got = GroupedRank.withGroupRank(
         skewed, Seq("g"), Seq(col("v"), col("id")), "r")
       val w = Window.partitionBy("g").orderBy(col("v"), col("id"))
@@ -68,9 +66,6 @@ class GroupedRankSpec extends AnyFunSuite {
       val wantG = skewed.withColumn("r",
         row_number().over(Window.orderBy(col("v"), col("id"), col("g"))).cast("long"))
       gotG.ensureDatasetEquals(wantG)
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
     }
   }
 
@@ -82,20 +77,9 @@ class GroupedRankSpec extends AnyFunSuite {
     // and spearman_qty_price failed the oracle hash. The fix pins the range
     // exchange's partition count (REPARTITION_BY_NUM is exempt from
     // coalescing). This case sweeps several coalescing-hostile configs,
-    // including the exact r18 one, over the spearman shape (two STACKED
-    // global ranks — the amplifier) and a grouped rank.
+    // including the exact r18 one, and AQE off, over the spearman shape (two
+    // STACKED global ranks — the amplifier) and a grouped rank.
     import spark.implicits._
-    val hostile = Seq(
-      Seq( // the exact r18 bench/verify session config
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "16k"),
-      Seq( // maximally aggressive coalescing: everything into one partition
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1g",
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1g"),
-      Seq( // keep every near-empty partition alive
-        "spark.sql.adaptive.coalescePartitions.parallelismFirst" -> "false",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1k",
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "1k"))
     val df = (1 to 4000)
       .map(i => (i.toLong, (i * 7919 % 401).toLong, (i * 104729 % 613).toLong))
       .toDF("id", "x", "y").repartition(16)
@@ -106,11 +90,8 @@ class GroupedRankSpec extends AnyFunSuite {
       .withColumn("ry", row_number().over(w2).cast("long"))
     val wg = Window.partitionBy(col("x")).orderBy(col("y"), col("id"))
     val wantG = df.withColumn("r", row_number().over(wg).cast("long"))
-    hostile.foreach { confs =>
-      val keys = ("spark.sql.adaptive.enabled" -> "true") +: confs
-      val prev = keys.map { case (k, _) => k -> spark.conf.getOption(k) }
-      keys.foreach { case (k, v) => spark.conf.set(k, v) }
-      try {
+    HostileAqe.configs.foreach { confs =>
+      HostileAqe.withConfs(spark, confs) {
         withClue(s"configs=$confs: ") {
           // the spearman shape: two stacked global ranks
           val r1 = GroupedRank.withGroupRank(
@@ -122,9 +103,6 @@ class GroupedRankSpec extends AnyFunSuite {
           GroupedRank.withGroupRank(df, Seq("x"), Seq(col("y"), col("id")), "r")
             .ensureDatasetEquals(wantG)
         }
-      } finally prev.foreach {
-        case (k, Some(v)) => spark.conf.set(k, v)
-        case (k, None)    => spark.conf.unset(k)
       }
     }
   }

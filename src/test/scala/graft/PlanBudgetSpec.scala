@@ -121,9 +121,9 @@ class PlanBudgetSpec extends AnyFunSuite {
     // GroupedRank quantile bounds + broadcast clamp join; both windows are
     // GroupedRank-internal (partition-bounded local rank, offsets frame)
     ("winsorized_stats", 11, 2),
-    // RunningExtremum two-phase: range exchange (shared) + prefix-max
-    // frame + broadcast join; windows are partition-bounded local max and
-    // the #partitions-grain prefix max
+    // RunningExtremum on GroupedRank.rangedPrefix: one materialized range
+    // exchange + prefix-max frame + broadcast join; windows are
+    // partition-bounded local max and the #partitions-grain prefix max
     ("watermark_audit", 7, 2),
     // dHash is a narrow decode map; the band self-join + distinct are the
     // only exchanges

@@ -28,6 +28,33 @@ class RunningExtremumSpec extends AnyFunSuite {
     }
   }
 
+  test("hostile AQE configs and AQE off cannot desync prefix maxima from local maxima") {
+    // 40k rows overflow the range sampler's sample, so two independently
+    // sampled range exchanges place boundary rows in different partitions;
+    // the prefix maxima and the local maxima must read ONE exchange. The
+    // rows carry a payload the maxima never read: pruning it from one
+    // branch only is what forks a plan into two range exchanges
+    import spark.implicits._
+    val df = (1 to 40000)
+      .map(i => (s"g${i % 3}", i.toLong, (i * 7919L % 10007L), s"p$i"))
+      .toDF("g", "ord", "v", "payload").repartition(16)
+    val frame = Window.unboundedPreceding
+    val want = df.withColumn("running_max", max("v").over(
+      Window.partitionBy("g").orderBy("ord").rowsBetween(frame, 0)))
+    val wantG = df.withColumn("running_max", max("v").over(
+      Window.orderBy("ord").rowsBetween(frame, 0)))
+    HostileAqe.configs.foreach { confs =>
+      HostileAqe.withConfs(spark, confs) {
+        withClue(s"configs=$confs: ") {
+          RunningExtremum.withRunningMax(df, Seq("g"), Seq(col("ord")), "v")
+            .ensureDatasetEquals(want)
+          RunningExtremum.withRunningMax(df, Nil, Seq(col("ord")), "v")
+            .ensureDatasetEquals(wantG)
+        }
+      }
+    }
+  }
+
   test("empty groupCols gives a scale-safe GLOBAL running max") {
     import spark.implicits._
     val rows = Seq((1L, 5L), (2L, 3L), (3L, 9L), (4L, 2L))
@@ -46,7 +73,7 @@ class RunningExtremumSpec extends AnyFunSuite {
     }
     intercept[IllegalArgumentException] {
       RunningExtremum.withRunningMax(
-        df.withColumn("__graft_rmpid", lit(0)), Seq(), Seq(col("ord")), "v")
+        df.withColumn("__graft_pid", lit(0)), Seq(), Seq(col("ord")), "v")
     }
   }
 }
