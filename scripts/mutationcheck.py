@@ -139,6 +139,16 @@ MUTANTS = [
      "old": ".rowsBetween(Window.unboundedPreceding, -1)",
      "new": ".rowsBetween(Window.unboundedPreceding, 0)",
      "queries": ["events_ntile", "watermark_audit"]},
+    # Similarity.cosineOfNorms is the one pair cosine under every embedding
+    # path (exact, ANN, SemDeDup, semantic decontamination, embedding
+    # dedup): dividing by one norm instead of their product rescales every
+    # score and moves every threshold decision
+    {"id": "M14", "desc": "shared pair cosine divides by one norm (na * nb -> na)",
+     "file": "src/main/scala/graft/llm/Similarity.scala",
+     "old": "when(denom === 0, 0.0).otherwise(dot(a, b) / denom)",
+     "new": "when(denom === 0, 0.0).otherwise(dot(a, b) / na)",
+     "queries": ["ann_bruteforce", "semdedup", "decontaminate_semantic",
+                 "dedup_embedding"]},
 ]
 
 

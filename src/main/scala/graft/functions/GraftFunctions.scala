@@ -37,13 +37,7 @@ object GraftFunctions {
     // sizes the aggregation buffer, so it cannot be row-dependent); the
     // analyzer wraps the returned AggregateFunction like any built-in agg
     "kmv_kmins" -> two("kmv_kmins") { (child, kExpr) =>
-      val k = kExpr match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int,
-            org.apache.spark.sql.types.IntegerType) => v
-        case other => throw new IllegalArgumentException(
-          s"kmv_kmins: k must be an INT literal, got $other")
-      }
-      KmvSketchAgg(child, k)
+      KmvSketchAgg(child, intLit("kmv_kmins", "k", kExpr))
     },
     // multi_contains(text, array('p1', 'p2', ...)) — the pattern list must
     // be a foldable array of string literals (it builds the Aho–Corasick
@@ -66,25 +60,13 @@ object GraftFunctions {
     // aggregate: gram_matrix(vec, dim) — dim must be an integer literal
     // (it sizes the d(d+1)/2-long aggregation buffer)
     "gram_matrix" -> two("gram_matrix") { (child, dimExpr) =>
-      val dim = dimExpr match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int,
-            org.apache.spark.sql.types.IntegerType) => v
-        case other => throw new IllegalArgumentException(
-          s"gram_matrix: dim must be an INT literal, got $other")
-      }
-      GramMatrixAgg(child, dim)
+      GramMatrixAgg(child, intLit("gram_matrix", "dim", dimExpr))
     },
     // aggregate: top_k(v, k) — the group's k smallest values of any
     // orderable v (struct for multi-key + payload), ascending; k must be
     // an integer literal for the same buffer-sizing reason as kmv_kmins
     "top_k" -> two("top_k") { (child, kExpr) =>
-      val k = kExpr match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(v: Int,
-            org.apache.spark.sql.types.IntegerType) => v
-        case other => throw new IllegalArgumentException(
-          s"top_k: k must be an INT literal, got $other")
-      }
-      TopKAgg(child, k)
+      TopKAgg(child, intLit("top_k", "k", kExpr))
     },
     // r15 (VERDICT task 7): the dedup-family primitives for pure-SQL
     // users — signature + shingle + winnow were Scala-only; each int

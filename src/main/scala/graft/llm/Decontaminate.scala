@@ -142,10 +142,9 @@ object Decontaminate {
       Similarity.l2Norm(col(evalVecCol)).as("__en"))
     val tv = train.select(col(trainIdCol).as("__tid"), col(trainVecCol).as("__tv"),
       Similarity.l2Norm(col(trainVecCol)).as("__tn"))
-    val denom = col("__tn") * col("__en")
     val flagged = tv.crossJoin(broadcast(ev))
-      .filter(when(denom === 0, lit(0.0))
-        .otherwise(Similarity.dot(col("__tv"), col("__ev")) / denom) >= threshold)
+      .filter(Similarity.cosineOfNorms(col("__tv"), col("__ev"),
+        col("__tn"), col("__en")) >= threshold)
       .select(col("__tid").as(trainIdCol))
       .distinct()
     train.join(broadcast(flagged), Seq(trainIdCol), "left_anti")

@@ -535,9 +535,8 @@ object Dedup {
       maxBucketSize: Int = 4096): DataFrame = {
     // adaptive plan choice: one cheap column-pruned count against the limit
     // (pass broadcastLimit = 0 or Long.MaxValue to force a path without it)
-    val useExact = broadcastLimit > 0 &&
-      (broadcastLimit == Long.MaxValue || df.select(idCol).count() <= broadcastLimit)
-    if (useExact) embeddingDedupPairsExact(df, idCol, vecCol, threshold)
+    if (Similarity.exactWithin(df, idCol, broadcastLimit))
+      embeddingDedupPairsExact(df, idCol, vecCol, threshold)
     else embeddingDedupPairsLsh(df, idCol, vecCol, threshold,
       numPlanes, numTables, dim, seed, maxBucketSize)
   }
@@ -555,11 +554,9 @@ object Dedup {
       .repartition(col("id_a"))
     val b = df.select(col(idCol).as("id_b"), col(vecCol).as("vb"),
       Similarity.l2Norm(col(vecCol)).as("norm_b"))
-    val denom = col("norm_a") * col("norm_b")
     a.join(broadcast(b), col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"),
-        when(denom === 0, 0.0)
-          .otherwise(Similarity.dot(col("va"), col("vb")) / denom).as("cosine"))
+      .select(col("id_a"), col("id_b"), Similarity.cosineOfNorms(col("va"),
+        col("vb"), col("norm_a"), col("norm_b")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 
@@ -582,15 +579,13 @@ object Dedup {
     // bucket shuffle and pair-dedup move 16 bytes/row, not dim× floats
     val vecs = docs.select(col("id"), col("v"),
       Similarity.l2Norm(col("v")).as("nrm"))
-    val denom = col("norm_a") * col("norm_b")
     cand
       .join(vecs.select(col("id").as("id_a"), col("v").as("va"),
         col("nrm").as("norm_a")), Seq("id_a"))
       .join(vecs.select(col("id").as("id_b"), col("v").as("vb"),
         col("nrm").as("norm_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"),
-        when(denom === 0, 0.0)
-          .otherwise(Similarity.dot(col("va"), col("vb")) / denom).as("cosine"))
+      .select(col("id_a"), col("id_b"), Similarity.cosineOfNorms(col("va"),
+        col("vb"), col("norm_a"), col("norm_b")).as("cosine"))
       .filter(col("cosine") >= threshold)
   }
 

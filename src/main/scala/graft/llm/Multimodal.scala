@@ -8,7 +8,7 @@ import javax.imageio.stream.{ImageInputStream, ImageOutputStream,
   MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
 import javax.sound.sampled.{AudioFileFormat, AudioFormat, AudioInputStream, AudioSystem}
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column plumbing: image/audio/video as opaque `binary` columns
@@ -191,6 +191,16 @@ object Multimodal {
     }
   }
 
+  /** The head of every `document*` pipeline: spread the documents' ids
+    * (`doc_id` as `media_id`), then synthesize one payload record per id in
+    * a narrow `mapPartitions` stage. */
+  private def synthesized[R: Encoder](docs: DataFrame)(make: Long => R): Dataset[R] = {
+    import docs.sparkSession.implicits._
+    graft.sources.Spread.spread(
+      docs.select(col("doc_id").cast("long").as("media_id")).as[Long])
+      .mapPartitions(_.map(make))
+  }
+
   /** End-to-end real-decode pipeline over the documents table: synthesize a
     * deterministic PNG per doc_id (standing in for an image payload column,
     * which the synthetic testdata lacks), then decode REAL pixels back out
@@ -198,11 +208,7 @@ object Multimodal {
     * `mapPartitions` stages — the whole query is shuffle-free. */
   def documentImageStats(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    val ids = graft.sources.Spread.spread(
-      docs.select(col("doc_id").cast("long").as("media_id")).as[Long])
-    val records = ids.mapPartitions { it =>
-      it.map(id => ImageRecord(id, synthesizePng(id)))
-    }
+    val records = synthesized(docs)(id => ImageRecord(id, synthesizePng(id)))
     decodeImageStats(records).toDF()
   }
 
@@ -245,11 +251,7 @@ object Multimodal {
     * dispatches on magic bytes). Narrow `mapPartitions`, shuffle-free. */
   def documentBmpStats(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    val ids = graft.sources.Spread.spread(
-      docs.select(col("doc_id").cast("long").as("media_id")).as[Long])
-    val records = ids.mapPartitions { it =>
-      it.map(id => ImageRecord(id, synthesizeBmp(id)))
-    }
+    val records = synthesized(docs)(id => ImageRecord(id, synthesizeBmp(id)))
     decodeImageStats(records).toDF()
   }
 
@@ -326,10 +328,8 @@ object Multimodal {
     * parser. */
   def documentPgmStats(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    val ids = graft.sources.Spread.spread(
-      docs.select(col("doc_id").cast("long").as("media_id")).as[Long])
-    decodePgmStats(ids.mapPartitions(_.map(id =>
-      ImageRecord(id, synthesizePgm(id))))).toDF()
+    decodePgmStats(
+      synthesized(docs)(id => ImageRecord(id, synthesizePgm(id)))).toDF()
   }
 
   def synthesizeTiff(id: Long): Array[Byte] = {
@@ -360,11 +360,7 @@ object Multimodal {
     * Narrow `mapPartitions` stages end to end, shuffle-free. */
   def documentTiffStats(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    val ids = graft.sources.Spread.spread(
-      docs.select(col("doc_id").cast("long").as("media_id")).as[Long])
-    val records = ids.mapPartitions { it =>
-      it.map(id => ImageRecord(id, synthesizeTiff(id)))
-    }
+    val records = synthesized(docs)(id => ImageRecord(id, synthesizeTiff(id)))
     decodeImageStats(records).toDF()
   }
 
@@ -424,11 +420,7 @@ object Multimodal {
     require(maxHamming >= 0 && maxHamming <= 3,
       s"maxHamming must be in [0,3] (4 bands tolerate at most 3 flips " +
         s"by pigeonhole): got $maxHamming")
-    val ids = graft.sources.Spread.spread(
-      docs.select(col("doc_id").cast("long").as("media_id")).as[Long])
-    val records = ids.mapPartitions { it =>
-      it.map(id => ImageRecord(id, synthesizePng(id)))
-    }
+    val records = synthesized(docs)(id => ImageRecord(id, synthesizePng(id)))
     val hashes = imageDHash(records).toDF()
     val banded = hashes.select(col("media_id"), col("dhash"),
       explode(expr(
@@ -543,11 +535,7 @@ object Multimodal {
     * query is shuffle-free. */
   def documentJpegStats(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    val ids = graft.sources.Spread.spread(
-      docs.select(col("doc_id").cast("long").as("media_id")).as[Long])
-    val records = ids.mapPartitions { it =>
-      it.map(id => ImageRecord(id, synthesizeJpeg(id)))
-    }
+    val records = synthesized(docs)(id => ImageRecord(id, synthesizeJpeg(id)))
     decodeJpegStats(records).toDF()
   }
 
@@ -647,11 +635,7 @@ object Multimodal {
     * maps end to end. */
   def documentAudioStats(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    val ids = graft.sources.Spread.spread(
-      docs.select(col("doc_id").cast("long").as("media_id")).as[Long])
-    val records = ids.mapPartitions { it =>
-      it.map(id => AudioRecord(id, synthesizeWav(id)))
-    }
+    val records = synthesized(docs)(id => AudioRecord(id, synthesizeWav(id)))
     decodeAudioStats(records).toDF()
   }
 
@@ -765,11 +749,7 @@ object Multimodal {
     * narrow maps end to end. */
   def documentVideoStats(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    val ids = graft.sources.Spread.spread(
-      docs.select(col("doc_id").cast("long").as("media_id")).as[Long])
-    val records = ids.mapPartitions { it =>
-      it.map(id => VideoRecord(id, synthesizeGif(id)))
-    }
+    val records = synthesized(docs)(id => VideoRecord(id, synthesizeGif(id)))
     decodeVideoStats(records).toDF()
   }
 
@@ -844,11 +824,7 @@ object Multimodal {
     * Shuffle-free narrow maps end to end. */
   def documentGzipStats(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    val ids = graft.sources.Spread.spread(
-      docs.select(col("doc_id").cast("long").as("media_id")).as[Long])
-    val records = ids.mapPartitions { it =>
-      it.map(id => GzipRecord(id, synthesizeGzip(id)))
-    }
+    val records = synthesized(docs)(id => GzipRecord(id, synthesizeGzip(id)))
     decodeGzipStats(records).toDF()
   }
 
@@ -928,11 +904,7 @@ object Multimodal {
     * inflate every member back out. Shuffle-free narrow flatMap. */
   def documentZipStats(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    val ids = graft.sources.Spread.spread(
-      docs.select(col("doc_id").cast("long").as("media_id")).as[Long])
-    val records = ids.mapPartitions { it =>
-      it.map(id => ZipRecord(id, synthesizeZip(id)))
-    }
+    val records = synthesized(docs)(id => ZipRecord(id, synthesizeZip(id)))
     decodeZipStats(records).toDF()
   }
 

@@ -45,26 +45,14 @@ object SemDedup {
       df: DataFrame, idCol: String, vecCol: String,
       nClusters: Int, threshold: Double,
       centroids: Option[Seq[(Long, Seq[Double])]] = None): DataFrame = {
-    val cents: Seq[(Long, Seq[Double])] = centroids.getOrElse {
-      df.select(col(idCol).cast("long"), col(vecCol))
-        .orderBy(col(idCol))
-        .limit(nClusters)
-        .collect()
-        .map(r => r.getLong(0) ->
-          r.getSeq[Any](1).map(x => x.asInstanceOf[Number].doubleValue()).toSeq)
-        .toSeq
-    }
-    // struct(cos, -cid): array_max resolves centroid ties toward the LOWEST
-    // centroid id — the ivfTopK convention, same rule as the oracle's
-    // row_number ORDER BY cos DESC, cid ASC
-    val scoreStructs = array(cents.map { case (cid, cv) =>
-      struct(Similarity.cosineSim(col("__v"), typedLit(cv)).as("cos"),
-        lit(-cid).as("ncid"))
-    }: _*)
+    val cents = centroids.getOrElse(
+      Similarity.seedCentroids(df, idCol, vecCol, nClusters))
+    // the ivfTopK argmax: ties to the LOWEST centroid id
     val assigned = df
       .select(col(idCol).as("id"), col(vecCol).as("__v"),
         Similarity.l2Norm(col(vecCol)).as("__n"))
-      .withColumn("__best", array_max(scoreStructs))
+      .withColumn("__best",
+        array_max(Similarity.centroidScoreStructs(cents)(col("__v"))))
       .select(col("id"), col("__v"), col("__n"),
         (-col("__best.ncid")).as("cluster"),
         col("__best.cos").as("cent_cos"))
@@ -75,11 +63,10 @@ object SemDedup {
       col("__v").as("va"), col("__n").as("na"), col("cent_cos").as("ca"))
     val b = assigned.select(col("cluster"), col("id").as("id_b"),
       col("__v").as("vb"), col("__n").as("nb"), col("cent_cos").as("cb"))
-    val denom = col("na") * col("nb")
     val dropped = a.join(b, Seq("cluster"))
       .filter(col("id_a") < col("id_b"))
-      .filter(when(denom === 0, lit(0.0))
-        .otherwise(Similarity.dot(col("va"), col("vb")) / denom) >= threshold)
+      .filter(Similarity.cosineOfNorms(col("va"), col("vb"), col("na"), col("nb"))
+        >= threshold)
       .select(when(struct(col("ca"), col("id_a")) > struct(col("cb"), col("id_b")),
         col("id_a")).otherwise(col("id_b")).as("id"))
       .distinct()

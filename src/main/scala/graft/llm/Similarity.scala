@@ -32,10 +32,33 @@ object Similarity {
 
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
 
-  def cosineSim(a: Column, b: Column): Column = {
-    val denom = l2Norm(a) * l2Norm(b)
+  def cosineSim(a: Column, b: Column): Column =
+    cosineOfNorms(a, b, l2Norm(a), l2Norm(b))
+
+  /** The pair cosine of every embedding path, from the two vectors' norms
+    * (callers that score many pairs compute each norm once per vector); a
+    * zero-norm side scores 0 instead of dividing by zero. */
+  private[llm] def cosineOfNorms(a: Column, b: Column, na: Column, nb: Column): Column = {
+    val denom = na * nb
     when(denom === 0, 0.0).otherwise(dot(a, b) / denom)
   }
+
+  /** The top-k tail of every per-query ranking: best `order` first, ties
+    * to the lowest `neighbor_id`; output `(query_id, neighbor_id, score,
+    * rank)`. */
+  private def topKPerQuery(
+      scored: DataFrame, score: String, order: Column, k: Int): DataFrame = {
+    val w = Window.partitionBy("query_id").orderBy(order, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select("query_id", "neighbor_id", score, "rank")
+  }
+
+  /** Exact-vs-approximate size rule: exact when `limit` is positive and
+    * `df` has at most `limit` ids. `Long.MaxValue` forces exact without the
+    * count job, `0` forces approximate. */
+  private[llm] def exactWithin(df: DataFrame, idCol: String, limit: Long): Boolean =
+    limit > 0 && (limit == Long.MaxValue || df.select(idCol).count() <= limit)
 
   /** Exact top-k nearest corpus vectors per query vector, by cosine.
     *
@@ -61,17 +84,16 @@ object Similarity {
     val c = graft.sources.Spread.spread(
         corpus.select(col(cIdCol).as("neighbor_id"), col(cVecCol).as("cv")))
       .withColumn("__cn", l2Norm(col("cv")))
-    val denom = col("__qn") * col("__cn")
     val scored = c.crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("cosine",
-        when(denom === 0, 0.0).otherwise(dot(col("qv"), col("cv")) / denom))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+      .withColumn("cosine", queryCosine)
+    topKPerQuery(scored, "cosine", col("cosine").desc, k)
   }
+
+  // the pair cosine of the query-side frames below: (qv, __qn) per query,
+  // (cv, __cn) per corpus vector
+  private def queryCosine: Column =
+    cosineOfNorms(col("qv"), col("cv"), col("__qn"), col("__cn"))
 
   /** Mean-reciprocal-rank retrieval eval: per query vector, the rank of
     * the FIRST relevant (same-label) corpus vector in the full cosine
@@ -108,11 +130,9 @@ object Similarity {
         corpus.select(col(cIdCol).as("__nid"),
           col(cLabelCol).as("__nlabel"), col(cVecCol).as("cv")))
       .withColumn("__cn", l2Norm(col("cv")))
-    val denom = col("__qn") * col("__cn")
     val scored = c.crossJoin(broadcast(q))
       .filter(col("__nid") =!= col("query_id"))
-      .withColumn("__cos",
-        when(denom === 0, 0.0).otherwise(dot(col("qv"), col("cv")) / denom))
+      .withColumn("__cos", queryCosine)
       .select("query_id", "label", "__nid", "__nlabel", "__cos")
     // scored feeds the argmax AND the rank count: two corpus scans per
     // eval (deliberately NOT checkpointed — the frame is corpus × queries,
@@ -180,17 +200,11 @@ object Similarity {
         corpus.select(col(cIdCol).as("neighbor_id"), col(cVecCol).as("cv"),
           col(cLabelCol).as("__cl")))
       .withColumn("__cn", l2Norm(col("cv")))
-    val denom = col("__qn") * col("__cn")
     val scored = c.crossJoin(broadcast(q))
       .filter(col("neighbor_id") =!= col("query_id"))
       .filter(!(col("__cl") <=> col("__ql"))) // null-safe label mismatch
-      .withColumn("cosine",
-        when(denom === 0, 0.0).otherwise(dot(col("qv"), col("cv")) / denom))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+      .withColumn("cosine", queryCosine)
+    topKPerQuery(scored, "cosine", col("cosine").desc, k)
   }
 
   /** Deterministic pseudo-random hyperplanes: component (p, d) is ±1 derived
@@ -247,7 +261,7 @@ object Similarity {
 
   /** First `nCells` corpus vectors by id — [[ivfTopK]]'s deterministic
     * sampled-centroid convention as a reusable piece (O(nCells) collect,
-    * independent of corpus size). */
+    * independent of corpus size); [[pqCodebooks]] seeds from it too. */
   def seedCentroids(corpus: DataFrame, cIdCol: String, cVecCol: String,
       nCells: Int): Seq[(Long, Seq[Double])] = {
     val cents = corpus.select(col(cIdCol).cast("long"), col(cVecCol))
@@ -261,18 +275,33 @@ object Similarity {
     // would silently build array() centroid literals that fail analysis
     // with an unrelated-looking VOID error — reject loudly instead
     require(cents.nonEmpty,
-      "seedCentroids: corpus is empty, an IVF index needs at least one seed vector")
+      "seedCentroids: corpus is empty, a seeded index needs at least one seed vector")
     cents
   }
 
   // per-centroid score structs; struct(cos, -cid) makes array_max resolve
   // ties toward the LOWEST centroid id (same rule as the oracle's
   // row_number ORDER BY cos DESC, cid ASC)
-  private def centroidScoreStructs(
+  private[llm] def centroidScoreStructs(
       cents: Seq[(Long, Seq[Double])])(vec: Column): Column =
     array(cents.map { case (cid, cv) =>
       struct(cosineSim(vec, typedLit(cv)).as("cos"), lit(-cid).as("ncid"))
     }: _*)
+
+  /** The argmax-cosine centroid id of `vec` (ties to the lowest id). */
+  private def nearestCell(cents: Seq[(Long, Seq[Double])])(vec: Column): Column =
+    -array_max(centroidScoreStructs(cents)(vec)).getField("ncid")
+
+  /** `(query_id, cell)` for each query's `nProbe` best cells: sorted desc
+    * by (cos, -cid) = best cosine first, lowest id on ties. */
+  private def probedCells(queries: DataFrame, vec: Column,
+      cents: Seq[(Long, Seq[Double])], nProbe: Int): DataFrame =
+    queries
+      .select(col("query_id"),
+        slice(sort_array(centroidScoreStructs(cents)(vec), asc = false), 1, nProbe)
+          .as("pr"))
+      .select(col("query_id"), explode(col("pr")).as("p"))
+      .select(col("query_id"), (-col("p.ncid")).as("cell"))
 
   /** The IVF index frame: `(neighbor_id, cv, __cn, cell)` — one narrow map
     * assigning each corpus vector to its argmax-cosine cell. This is what
@@ -280,7 +309,6 @@ object Similarity {
   private def assignIvfCells(
       corpus: DataFrame, cIdCol: String, cVecCol: String,
       cents: Seq[(Long, Seq[Double])]): DataFrame = {
-    val scoreStructs = centroidScoreStructs(cents) _
     // the nCells-way argmax per vector is the CPU-dense corpus map; spread
     // the narrow (id, vec) frame when the scan is under-parallel (guide
     // §2.5 — measured r19: the whole assignment ran as ONE task over the
@@ -290,7 +318,7 @@ object Similarity {
     c.select(
       col("neighbor_id"), col("cv"),
       l2Norm(col("cv")).as("__cn"),
-      (-array_max(scoreStructs(col("cv"))).getField("ncid")).as("cell"))
+      nearestCell(cents)(col("cv")).as("cell"))
   }
 
   /** Probe half of [[ivfTopK]]: route each query to its `nProbe` best
@@ -299,29 +327,16 @@ object Similarity {
       queries: DataFrame, qIdCol: String, qVecCol: String,
       index: DataFrame, cents: Seq[(Long, Seq[Double])],
       k: Int, nProbe: Int): DataFrame = {
-    val scoreStructs = centroidScoreStructs(cents) _
     val qv = queries.select(col(qIdCol).as("query_id"), col(qVecCol).as("qv"),
       l2Norm(col(qVecCol)).as("__qn"))
-    val qProbes = qv
-      .select(col("query_id"),
-        // sort desc by (cos, -cid) = best cosine first, lowest id on ties
-        slice(sort_array(scoreStructs(col("qv")), asc = false), 1, nProbe).as("pr"))
-      .select(col("query_id"), explode(col("pr")).as("p"))
-      .select(col("query_id"), (-col("p.ncid")).as("cell"))
     // candidate generation: equi-join on the cell id; each corpus vector is
     // in exactly one cell, so no pair dedup is needed
-    val scored = qProbes
+    val scored = probedCells(qv, col("qv"), cents, nProbe)
       .join(index, Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .join(qv, Seq("query_id"))
-      .withColumn("cosine",
-        when(col("__qn") * col("__cn") === 0, 0.0)
-          .otherwise(dot(col("qv"), col("cv")) / (col("__qn") * col("__cn"))))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+      .withColumn("cosine", queryCosine)
+    topKPerQuery(scored, "cosine", col("cosine").desc, k)
   }
 
   /** Persist an IVF index for incremental serving: cell assignments (plus
@@ -373,24 +388,22 @@ object Similarity {
   def pqCodebooks(
       corpus: DataFrame, cIdCol: String, cVecCol: String,
       numSubspaces: Int, codebookSize: Int): Seq[Seq[(Int, Seq[Double])]] = {
-    val rows = corpus.select(col(cIdCol).cast("long"), col(cVecCol))
-      .orderBy(col(cIdCol)).limit(codebookSize).collect()
+    val rows = seedCentroids(corpus, cIdCol, cVecCol, codebookSize)
     // codes are assigned positionally, and the generated oracle labels them
     // by literal `vec_id < codebookSize` — enforce the id convention the
     // two interpretations share so a fixture change fails loudly instead of
     // silently shifting code labels (ADVICE r6)
     require(rows.length == codebookSize,
       s"pqCodebooks: corpus has ${rows.length} vectors, need $codebookSize")
-    val ids = rows.map(_.getLong(0)).toSeq
+    val ids = rows.map(_._1)
     require(ids == (0L until codebookSize.toLong),
       s"pqCodebooks: seed ids must be exactly 0..${codebookSize - 1}, got $ids")
-    val base = rows
-      .map(_.getSeq[Any](1).map(_.asInstanceOf[Number].doubleValue()).toSeq)
+    val base = rows.map(_._2)
     val dim = base.head.size
     require(dim % numSubspaces == 0, s"dim $dim not divisible by $numSubspaces")
     val subDim = dim / numSubspaces
     (0 until numSubspaces).map { j =>
-      base.toSeq.zipWithIndex.map { case (v, code) =>
+      base.zipWithIndex.map { case (v, code) =>
         code -> v.slice(j * subDim, (j + 1) * subDim)
       }
     }
@@ -416,65 +429,81 @@ object Similarity {
       corpus: DataFrame, cIdCol: String, cVecCol: String,
       k: Int, numSubspaces: Int = 8, codebookSize: Int = 16, dim: Int = 64,
       codebooks: Option[Seq[Seq[(Int, Seq[Double])]]] = None): DataFrame = {
-    require(dim % numSubspaces == 0, s"dim $dim not divisible by $numSubspaces")
-    val subDim = dim / numSubspaces
-    val cbs = codebooks.getOrElse(
-      pqCodebooks(corpus, cIdCol, cVecCol, numSubspaces, codebookSize))
-    // ‖centroid‖² as a plan literal; same left-assoc 0.0 + x·x accumulation
-    // as the SQL oracle's chain, so the doubles agree bit-for-bit
-    val cn2: Seq[Seq[Double]] =
-      cbs.map(_.map { case (_, c) => c.foldLeft(0.0)((a, x) => a + x * x) })
-    def subv(vec: Column, j: Int): Column = slice(vec, j * subDim + 1, subDim)
-    def contrib(sub: Column, j: Int, code: Int): Column =
-      lit(cn2(j)(code)) - lit(2.0) * dot(sub, typedLit(cbs(j)(code)._2))
-    // subvectors are materialized once per (row, subspace) in their own
-    // projection — contrib references them `codebookSize` times, which both
-    // avoids re-slicing per codebook entry and blocks CollapseProject from
-    // inlining the slice into each of the 16 argmin branches
-    def withSubs(df: DataFrame, idCol: String, idAs: String, vecCol: String): DataFrame =
-      df.select(col(idCol).as(idAs) +:
-        (0 until numSubspaces).map(j => subv(col(vecCol), j).as(s"__s$j")): _*)
-    // argmin as least() + first-match CASE over flat double columns (ties to
-    // the lowest code, same rule as a struct array_min — but no per-row
-    // struct/array allocation, so encoding stays in whole-stage codegen;
-    // measured 9.2 → 1.5 s on the sf0.1 encode+scan)
+    val pq = Pq(codebooks.getOrElse(
+      pqCodebooks(corpus, cIdCol, cVecCol, numSubspaces, codebookSize)),
+      numSubspaces, codebookSize, dim)
     // measured r19: spreading the corpus here LOSES (1.3 -> 1.8 s) — the
     // contrib grid over flat doubles is cheap enough per row that the
     // round-robin exchange of full vectors costs more than the extra
     // parallelism recovers; the IVF paths (16-way cosine argmax per row)
     // are the ones that win from a spread (see assignIvfCells/ivfPqTopK)
-    val withD = withSubs(corpus, cIdCol, "neighbor_id", cVecCol).select(
-      col("neighbor_id") +:
-        (for (j <- 0 until numSubspaces; code <- 0 until codebookSize)
-          yield contrib(col(s"__s$j"), j, code).as(s"__d_${j}_$code")): _*)
-    val withMin = withD.select(col("*") +:
-      (0 until numSubspaces).map(j =>
-        least((0 until codebookSize).map(c => col(s"__d_${j}_$c")): _*)
-          .as(s"__min_$j")): _*)
-    def codeFor(j: Int): Column =
-      (0 until codebookSize - 1).foldRight(lit(codebookSize - 1): Column) {
-        (code, rest) =>
-          when(col(s"__d_${j}_$code") === col(s"__min_$j"), code).otherwise(rest)
-      }
-    val codes = withMin.select(
-      col("neighbor_id") +:
-        (0 until numSubspaces).map(j => codeFor(j).as(s"c$j")): _*)
-    val luts = withSubs(queries, qIdCol, "query_id", qVecCol).select(
-      col("query_id") +:
-        (0 until numSubspaces).map(j =>
-          array((0 until codebookSize).map(code =>
-            contrib(col(s"__s$j"), j, code)): _*).as(s"lut$j")): _*)
-    val adist = (0 until numSubspaces)
-      .map(j => element_at(col(s"lut$j"), col(s"c$j") + 1))
-      .reduce(_ + _)
+    val codes = pq.codes(corpus.select(
+      col(cIdCol).as("neighbor_id") +: pq.subvectors(col(cVecCol)): _*),
+      Seq("neighbor_id"))
+    val luts = pq.luts(queries.select(
+      col(qIdCol).as("query_id") +: pq.subvectors(col(qVecCol)): _*))
     val scored = codes.crossJoin(broadcast(luts))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("adist", adist)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adist"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "adist", "rank")
+      .withColumn("adist", pq.adist)
+    topKPerQuery(scored, "adist", col("adist"), k)
+  }
+
+  /** Product-quantization arithmetic over fixed codebooks, shared by
+    * [[pqTopK]] and [[ivfPqTopK]]. Frames carry
+    * each vector's subvector slices as `__s0..__s{numSubspaces-1}`
+    * ([[subvectors]]): they are materialized once per (row, subspace) in
+    * their own projection, because `contrib` references each one
+    * `codebookSize` times — that both avoids re-slicing per codebook entry
+    * and blocks CollapseProject from inlining the slice into each of the
+    * argmin branches. */
+  private final case class Pq(codebooks: Seq[Seq[(Int, Seq[Double])]],
+      numSubspaces: Int, codebookSize: Int, dim: Int) {
+    require(dim % numSubspaces == 0, s"dim $dim not divisible by $numSubspaces")
+    private val subDim = dim / numSubspaces
+    // ‖centroid‖² as a plan literal; same left-assoc 0.0 + x·x accumulation
+    // as the SQL oracle's chain, so the doubles agree bit-for-bit
+    private val cn2: Seq[Seq[Double]] =
+      codebooks.map(_.map { case (_, c) => c.foldLeft(0.0)((a, x) => a + x * x) })
+
+    private def contrib(j: Int, code: Int): Column =
+      lit(cn2(j)(code)) - lit(2.0) * dot(col(s"__s$j"), typedLit(codebooks(j)(code)._2))
+
+    def subvectors(vec: Column): Seq[Column] = (0 until numSubspaces).map(j =>
+      slice(vec, j * subDim + 1, subDim).as(s"__s$j"))
+
+    /** `carry` plus the code `c$j` of every subspace: argmin squared-L2
+      * contribution, ties to the lowest code. The argmin is least() + a
+      * first-match CASE over flat double columns (same rule as a struct
+      * array_min — but no per-row struct/array allocation, so encoding
+      * stays in whole-stage codegen; measured 9.2 → 1.5 s on the sf0.1
+      * encode+scan). */
+    def codes(frame: DataFrame, carry: Seq[String]): DataFrame = {
+      val withD = frame.select(carry.map(col) ++
+        (for (j <- 0 until numSubspaces; code <- 0 until codebookSize)
+          yield contrib(j, code).as(s"__d_${j}_$code")): _*)
+      val withMin = withD.select(col("*") +:
+        (0 until numSubspaces).map(j =>
+          least((0 until codebookSize).map(c => col(s"__d_${j}_$c")): _*)
+            .as(s"__min_$j")): _*)
+      def codeFor(j: Int): Column =
+        (0 until codebookSize - 1).foldRight(lit(codebookSize - 1): Column) {
+          (code, rest) =>
+            when(col(s"__d_${j}_$code") === col(s"__min_$j"), code).otherwise(rest)
+        }
+      withMin.select(carry.map(col) ++
+        (0 until numSubspaces).map(j => codeFor(j).as(s"c$j")): _*)
+    }
+
+    /** `(query_id, lut$j…)`: each query's distance lookup tables. */
+    def luts(frame: DataFrame): DataFrame = frame.select(col("query_id") +:
+      (0 until numSubspaces).map(j =>
+        array((0 until codebookSize).map(code => contrib(j, code)): _*)
+          .as(s"lut$j")): _*)
+
+    /** The asymmetric distance of a (codes, luts) pair. */
+    def adist: Column = (0 until numSubspaces)
+      .map(j => element_at(col(s"lut$j"), col(s"c$j") + 1))
+      .reduce(_ + _)
   }
 
   /** IVF+PQ approximate top-k — the production ANN shape (the FAISS
@@ -501,77 +530,30 @@ object Similarity {
       numSubspaces: Int = 8, codebookSize: Int = 16, dim: Int = 64,
       centroids: Option[Seq[(Long, Seq[Double])]] = None,
       codebooks: Option[Seq[Seq[(Int, Seq[Double])]]] = None): DataFrame = {
-    require(dim % numSubspaces == 0, s"dim $dim not divisible by $numSubspaces")
-    val subDim = dim / numSubspaces
-    val cents: Seq[(Long, Seq[Double])] = centroids.getOrElse {
-      corpus.select(col(cIdCol).cast("long"), col(cVecCol))
-        .orderBy(col(cIdCol)).limit(nCells).collect()
-        .map(r => r.getLong(0) ->
-          r.getSeq[Any](1).map(x => x.asInstanceOf[Number].doubleValue()).toSeq)
-        .toSeq
-    }
-    val cbs = codebooks.getOrElse(
-      pqCodebooks(corpus, cIdCol, cVecCol, numSubspaces, codebookSize))
-    val cn2: Seq[Seq[Double]] =
-      cbs.map(_.map { case (_, c) => c.foldLeft(0.0)((a, x) => a + x * x) })
-    def scoreStructs(vec: Column): Column = array(cents.map { case (cid, cv) =>
-      struct(cosineSim(vec, typedLit(cv)).as("cos"), lit(-cid).as("ncid"))
-    }: _*)
-    def subv(vec: Column, j: Int): Column = slice(vec, j * subDim + 1, subDim)
-    def contrib(sub: Column, j: Int, code: Int): Column =
-      lit(cn2(j)(code)) - lit(2.0) * dot(sub, typedLit(cbs(j)(code)._2))
-    // ONE pass over the corpus computes cell + subvector slices (the pqTopK
-    // materialize-once motif keeps contrib's 16 references off a re-slice);
-    // spread the narrow (id, vec) frame first — the cell argmax + contrib
-    // grid is the CPU-dense corpus map (guide §2.5; see assignIvfCells)
+    val pq = Pq(codebooks.getOrElse(
+      pqCodebooks(corpus, cIdCol, cVecCol, numSubspaces, codebookSize)),
+      numSubspaces, codebookSize, dim)
+    val cents = centroids.getOrElse(
+      seedCentroids(corpus, cIdCol, cVecCol, nCells))
+    // ONE pass over the corpus computes cell + subvector slices; spread the
+    // narrow (id, vec) frame first — the cell argmax + contrib grid is the
+    // CPU-dense corpus map (guide §2.5; see assignIvfCells)
     val corpusN = graft.sources.Spread.spread(
       corpus.select(col(cIdCol).as("neighbor_id"), col(cVecCol).as("__cv")))
-    val corpusSub = corpusN.select(
-      col("neighbor_id") +:
-        (-array_max(scoreStructs(col("__cv"))).getField("ncid")).as("cell") +:
-        (0 until numSubspaces).map(j => subv(col("__cv"), j).as(s"__s$j")): _*)
-    val withD = corpusSub.select(col("neighbor_id") +: col("cell") +:
-      (for (j <- 0 until numSubspaces; code <- 0 until codebookSize)
-        yield contrib(col(s"__s$j"), j, code).as(s"__d_${j}_$code")): _*)
-    val withMin = withD.select(col("*") +:
-      (0 until numSubspaces).map(j =>
-        least((0 until codebookSize).map(c => col(s"__d_${j}_$c")): _*)
-          .as(s"__min_$j")): _*)
-    def codeFor(j: Int): Column =
-      (0 until codebookSize - 1).foldRight(lit(codebookSize - 1): Column) {
-        (code, rest) =>
-          when(col(s"__d_${j}_$code") === col(s"__min_$j"), code).otherwise(rest)
-      }
-    val codes = withMin.select(
-      col("neighbor_id") +: col("cell") +:
-        (0 until numSubspaces).map(j => codeFor(j).as(s"c$j")): _*)
+    val codes = pq.codes(corpusN.select(
+      col("neighbor_id") +: nearestCell(cents)(col("__cv")).as("cell") +:
+        pq.subvectors(col("__cv")): _*),
+      Seq("neighbor_id", "cell"))
     // query side: probe list + distance LUTs, both tiny — broadcast
     val qSub = queries.select(
       col(qIdCol).as("query_id") +: col(qVecCol).as("__qv") +:
-        (0 until numSubspaces).map(j => subv(col(qVecCol), j).as(s"__s$j")): _*)
-    val qProbes = qSub
-      .select(col("query_id"),
-        slice(sort_array(scoreStructs(col("__qv")), asc = false), 1, nProbe).as("pr"))
-      .select(col("query_id"), explode(col("pr")).as("p"))
-      .select(col("query_id"), (-col("p.ncid")).as("cell"))
-    val luts = qSub.select(
-      col("query_id") +:
-        (0 until numSubspaces).map(j =>
-          array((0 until codebookSize).map(code =>
-            contrib(col(s"__s$j"), j, code)): _*).as(s"lut$j")): _*)
-    val adist = (0 until numSubspaces)
-      .map(j => element_at(col(s"lut$j"), col(s"c$j") + 1))
-      .reduce(_ + _)
-    val scored = broadcast(qProbes)
+        pq.subvectors(col(qVecCol)): _*)
+    val scored = broadcast(probedCells(qSub, col("__qv"), cents, nProbe))
       .join(codes, Seq("cell"))
       .filter(col("neighbor_id") =!= col("query_id"))
-      .join(broadcast(luts), Seq("query_id"))
-      .withColumn("adist", adist)
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("adist"), col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "adist", "rank")
+      .join(broadcast(pq.luts(qSub)), Seq("query_id"))
+      .withColumn("adist", pq.adist)
+    topKPerQuery(scored, "adist", col("adist"), k)
   }
 
   /** Multi-probe sign-LSH top-k: ONE hash table, but each query probes its
@@ -610,19 +592,13 @@ object Similarity {
     // a corpus vector can match both the exact bucket and... no — probes of
     // one query are pairwise distinct codes, so (query, neighbor) pairs are
     // already unique and need no dedup
-    val denom = col("__qn") * col("__cn")
     val scored = qProbes
       .join(cBuckets, Seq("bucket"))
       .filter(col("neighbor_id") =!= col("query_id"))
       .join(qv, Seq("query_id"))
       .join(cv, Seq("neighbor_id"))
-      .withColumn("cosine",
-        when(denom === 0, 0.0).otherwise(dot(col("qv"), col("cv")) / denom))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+      .withColumn("cosine", queryCosine)
+    topKPerQuery(scored, "cosine", col("cosine").desc, k)
   }
 
   /** Approximate top-k: bucket corpus and queries with `numTables`
@@ -656,17 +632,11 @@ object Similarity {
       .select("query_id", "neighbor_id")
       .distinct()
     // per-vector norms join in with the vectors: one dot per scored pair
-    val denom = col("__qn") * col("__cn")
     val scored = cand
       .join(qv, Seq("query_id"))
       .join(cv, Seq("neighbor_id"))
-      .withColumn("cosine",
-        when(denom === 0, 0.0).otherwise(dot(col("qv"), col("cv")) / denom))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "neighbor_id", "cosine", "rank")
+      .withColumn("cosine", queryCosine)
+    topKPerQuery(scored, "cosine", col("cosine").desc, k)
   }
 
   /** Semi-supervised k-NN label propagation: predict a label for each
@@ -706,11 +676,10 @@ object Similarity {
     val s = seeds.filter(col(sLabelCol).isNotNull)
       .select(col(sIdCol).as("__sid"), col(sVecCol).as("sv"),
         col(sLabelCol).as("pred_label"), l2Norm(col(sVecCol)).as("__sn"))
-    val denom = col("__un") * col("__sn")
     val scored = u.crossJoin(broadcast(s))
       .filter(col("vec_id") =!= col("__sid")) // a seed never votes for itself
       .withColumn("__cos",
-        when(denom === 0, 0.0).otherwise(dot(col("uv"), col("sv")) / denom))
+        cosineOfNorms(col("uv"), col("sv"), col("__un"), col("__sn")))
     val wTop = Window.partitionBy("vec_id")
       .orderBy(col("__cos").desc, col("__sid"))
     val votes = scored
@@ -768,8 +737,7 @@ object Similarity {
     val useExact = mode match {
       case KnnMode.Exact => true
       case KnnMode.Lsh => false
-      case KnnMode.Auto(limit) =>
-        limit > 0 && (limit == Long.MaxValue || vecs.select(idCol).count() <= limit)
+      case KnnMode.Auto(limit) => exactWithin(vecs, idCol, limit)
     }
     val directed =
       (if (useExact) bruteForceTopK(vecs, idCol, vecCol, vecs, idCol, vecCol, k)

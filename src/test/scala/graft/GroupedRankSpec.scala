@@ -28,6 +28,20 @@ class GroupedRankSpec extends AnyFunSuite {
     got.ensureDatasetEquals(want)
   }
 
+  test("ensureDatasetEquals failures carry an enclosing withClue") {
+    import spark.implicits._
+    val rows = Seq(1, 2, 2).toDF("x")
+    val cases = Seq(
+      Seq(1, 2).toDF("x") -> "Row multisets differ: 1 rows only in left, 0 rows only in right",
+      Seq(1L, 2L, 2L).toDF("x") -> "Schemas differ:")
+    cases.foreach { case (other, msg) =>
+      val e = intercept[org.scalatest.exceptions.TestFailedException] {
+        withClue("cfg=x: ") { rows.ensureDatasetEquals(other) }
+      }
+      assert(e.getMessage.startsWith("cfg=x: " + msg), e.getMessage)
+    }
+  }
+
   test("withGroupNtile is bit-identical to the ntile window for several k") {
     Seq(1, 3, 4, 7, 6000).foreach { k =>
       val got = GroupedRank.withGroupNtile(

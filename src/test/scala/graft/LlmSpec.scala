@@ -383,6 +383,17 @@ class LlmSpec extends AnyFunSuite {
       .collect().map(r2 => (r2.getInt(0), r2.getInt(1), r2.getLong(2))).toList
     def q24(x: Double) = math.floor(x * 16777216.0).toLong
     assert(gm == List((1, 1, q24(1.0)), (1, 2, q24(2.0)), (2, 2, q24(4.0))))
+    // a buffer-sizing parameter must be an INT literal: a column fails
+    // naming the function and the parameter
+    Seq("kmv_kmins(h, h)" -> "kmv_kmins: k", "gram_matrix(v, h)" -> "gram_matrix: dim",
+        "top_k(h, h)" -> "top_k: k").foreach { case (call, arg) =>
+      val e = intercept[Exception] {
+        spark.sql(s"SELECT $call FROM (SELECT 2 AS h, array(1.0D) AS v)").collect()
+      }
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toList
+      assert(msgs.exists(_.contains(s"$arg must be an INT literal")), msgs.mkString(" | "))
+    }
     // the set-overlap kernel takes two string or two bigint sets, nothing else
     Seq("array('a')" -> "array(1L)", "array(1)" -> "array(2)").foreach { case (a, b) =>
       val e = intercept[org.apache.spark.sql.AnalysisException] {

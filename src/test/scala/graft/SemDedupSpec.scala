@@ -36,6 +36,27 @@ class SemDedupSpec extends AnyFunSuite {
     assert(!flags(1L)._2 && flags(4L)._2)
   }
 
+  test("semDedupFlags and ivfPqTopK reject an empty corpus through seedCentroids") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Seq[Float])].toDF("id", "v")
+    // one 2-D codebook entry per subspace of a 4-D vector: no codebook
+    // collect runs, so the centroid seed is the first step that sees the
+    // empty corpus
+    val cbs = Seq(Seq(0 -> Seq(1.0, 0.0)), Seq(0 -> Seq(0.0, 1.0)))
+    val calls: Seq[(String, () => Unit)] = Seq(
+      "semDedupFlags" -> (() => SemDedup.semDedupFlags(
+        empty, "id", "v", nClusters = 2, threshold = 0.9).collect()),
+      "ivfPqTopK" -> (() => Similarity.ivfPqTopK(
+        empty, "id", "v", empty, "id", "v", k = 1, nCells = 2, nProbe = 1,
+        numSubspaces = 2, codebookSize = 1, dim = 4, codebooks = Some(cbs))
+        .collect()))
+    calls.foreach { case (name, call) =>
+      val e = withClue(s"$name: ") { intercept[IllegalArgumentException](call()) }
+      assert(e.getMessage.contains("seedCentroids: corpus is empty"),
+        s"$name: ${e.getMessage}")
+    }
+  }
+
   test("semDedup on fixture embeddings: survivors + dropped partition the corpus") {
     val flags = SemDedup.semDedupFlags(emb, "vec_id", "embedding",
       nClusters = 8, threshold = 0.45)
